@@ -43,8 +43,9 @@ bucket_candidates / verify) for the suite's biggest line, so a moved
 number names its phase.
 
 Round-19 change (verdict ask #2, training honesty): the in-process
-quantizer/codebook memo (similarity_queries._TRAIN_CACHE) is cleared
-before EVERY timed rep — in the suite loop and in --ab — so min-of-N
+quantizer/codebook memo (the training entries of
+similarity_queries._TRAIN_CACHE; its embedding-count entry stays) is
+cleared before EVERY timed rep — in the suite loop and in --ab — so min-of-N
 measures compute-from-source for the IVF-PQ queries instead of letting
 reps 2+ serve a trained quantizer from the memo (~35% of that query's
 true cost, the builder's own r18 cache A/B). Expect the ivfpq lines to
@@ -186,6 +187,18 @@ def _sign_test_p(wins: int, n: int) -> float:
     return min(1.0, round(p, 6))
 
 
+def _clear_training_memo() -> None:
+    """Drop the IVF-PQ training entries (``spill_cent``/``pq_book``)
+    of similarity_queries._TRAIN_CACHE so a timed rep pays full
+    training. The ``("n", ...)`` embedding-count memo is not training
+    and stays: clearing it would add a count job to other queries."""
+    from bfs_mapreduce_spark.operators import similarity_queries as _simq
+
+    cache = _simq._TRAIN_CACHE
+    for key in [k for k in cache if k[0] in ("spill_cent", "pq_book")]:
+        del cache[key]
+
+
 def ab_main(old_name: str, new_name: str) -> None:
     """Interleaved in-process A/B (round 14, verdict ask #4 — the
     standard instrument for perf claims under the ~16% canary error
@@ -215,9 +228,7 @@ def ab_main(old_name: str, new_name: str) -> None:
     def run(name: str) -> float:
         # same training-honesty rule as the suite loop: every timed
         # sample computes from source (see run_once in main)
-        from bfs_mapreduce_spark.operators import similarity_queries as _simq
-
-        _simq._TRAIN_CACHE.clear()
+        _clear_training_memo()
         t0 = time.perf_counter()
         catalog[name].build(spark, sf_dir).count()
         return round(time.perf_counter() - t0, 4)
@@ -353,9 +364,7 @@ def main() -> None:
         # min would exclude ~35% of the query's true compute-from-
         # source cost. Clear it before EVERY timed rep so each sample
         # pays full training; the cache stays on for real pipeline use.
-        from bfs_mapreduce_spark.operators import similarity_queries as _simq
-
-        _simq._TRAIN_CACHE.clear()
+        _clear_training_memo()
         t0 = time.perf_counter()
         try:
             n = q.build(spark, sf_dir).count()

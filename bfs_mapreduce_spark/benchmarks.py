@@ -1463,7 +1463,7 @@ def run_meta_scale(
 
     k_back = min(50, n_commits - 1)
     t0 = _time.monotonic()
-    ts._check_rebase_safe(root, v - k_back, v, "append_bench")
+    ts._check_rebase_safe(root, v - k_back, v, "append_bench", set())
     t_class = _time.monotonic() - t0
     t0 = _time.monotonic()
     touched = set()

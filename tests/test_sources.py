@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.sources.readers import (
@@ -3131,6 +3132,185 @@ def test_conflict_append_refuses_evolve_and_revalidates_checks(
     ts.append_checked(spark, root, ok)
     ks = sorted(r["k"] for r in ts.read(spark, root).collect())
     assert ks == [0, 1, 2, 3, 4, 4, 5]
+
+
+_RACE_ROW = "k bigint, a bigint, b bigint"
+
+
+def _race_table(spark, root):
+    """k = 0..11 in three identity(a) partition files — a table every
+    CAS-rebasing write verb (partition rewrite included) accepts."""
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    os.makedirs(root)
+    d = spark.range(12).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).alias("a"),
+        (F.col("id") * 7).alias("b"),
+    )
+    spec = [("identity", "a")]
+    files, parts = ts.stage_files_partitioned(d, root, spec)
+    ts.commit(
+        root,
+        files,
+        base_version=0,
+        schema=d.schema.json(),
+        partition_spec=spec,
+        partitions=parts,
+    )
+
+
+def _concurrent_append(spark, root, ks):
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    rows = spark.createDataFrame([(k, 1, 7 * k) for k in ks], _RACE_ROW)
+    ts.commit(
+        root, ts.stage_files(rows, root), base_version=ts.current_version(root)
+    )
+
+
+def _write_verb(spark, root, verb, max_retries=5):
+    """Run one of the nine CAS-rebasing write verbs on a _race_table."""
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    def src():
+        return spark.createDataFrame([(3, 1, 99), (50, 2, 99)], _RACE_ROW)
+
+    n = max_retries
+    return {
+        "append_checked": lambda: ts.append_checked(
+            spark, root, src(), max_retries=n
+        ),
+        "rewrite_partitioned": lambda: ts.rewrite_partitioned(
+            spark, root, max_retries=n
+        ),
+        "compact": lambda: ts.compact(spark, root, n_files=1, max_retries=n),
+        "optimize_zorder": lambda: ts.optimize_zorder(
+            spark, root, "a", "b", n_files=2, max_retries=n
+        ),
+        "delete_where": lambda: ts.delete_where(
+            spark, root, "k = 3", max_retries=n
+        ),
+        "delete_eq": lambda: ts.delete_eq(
+            spark, root, spark.createDataFrame([(3,)], "k bigint"),
+            max_retries=n,
+        ),
+        "upsert_eq": lambda: ts.upsert_eq(
+            spark, root, src(), ["k"], max_retries=n
+        ),
+        "merge_into": lambda: ts.merge_into(
+            spark, root, src(), ["k"], max_retries=n
+        ),
+        # the change feed routes merge_into through its clause path
+        "merge_with_clauses": lambda: ts.merge_into(
+            spark, root, src(), ["k"], change_feed=True, max_retries=n
+        ),
+    }[verb]()
+
+
+_WRITE_VERBS = [
+    "append_checked",
+    "rewrite_partitioned",
+    "compact",
+    "optimize_zorder",
+    "delete_where",
+    "delete_eq",
+    "upsert_eq",
+    "merge_into",
+    "merge_with_clauses",
+]
+
+
+@pytest.mark.parametrize(
+    "verb, op",
+    [
+        ("delete_eq", "delete"),
+        ("optimize_zorder", "optimize"),
+        ("rewrite_partitioned", "repartition"),
+    ],
+)
+def test_conflict_rebases_over_append_eq_zorder_repartition(
+    spark, tmp_path, monkeypatch, verb, op
+):
+    """delete_eq / optimize_zorder / rewrite_partitioned ∥ append: the
+    verb loses the CAS to the append and rebases. Both effects land —
+    the appended k=3 row survives the delete (serialized
+    delete-before-append) and the rewrites carry the appended file by
+    reference — and history stays linear: append, then the verb."""
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    root = str(tmp_path / "tbl")
+    _race_table(spark, root)
+    _interpose_once(monkeypatch, lambda: _concurrent_append(spark, root, [3, 100]))
+    out = _write_verb(spark, root, verb)
+    v = out[0] if isinstance(out, tuple) else out
+    assert v == ts.current_version(root) == 3
+    assert ts._op_of(root, v - 1) == "append"
+    assert ts._op_of(root, v) == op
+    base_ks = [k for k in range(12) if verb != "delete_eq" or k != 3]
+    ks = sorted(r["k"] for r in ts.read(spark, root).collect())
+    assert ks == sorted(base_ks + [3, 100])
+    appended = set(ts.read_manifest(root, v - 1)["files"]) - set(
+        ts.read_manifest(root, v - 2)["files"]
+    )
+    assert appended and appended <= set(ts.read_manifest(root, v)["files"])
+
+
+@pytest.mark.parametrize("verb", _WRITE_VERBS)
+def test_conflict_max_retries_zero_raises_on_first_loss(
+    spark, tmp_path, monkeypatch, verb
+):
+    """max_retries=0 is the Serializable recipe: the first CAS loss
+    re-raises SnapshotConflict itself (no rebase, no
+    ConcurrentWriteConflict), and the winner's version stays
+    current."""
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    root = str(tmp_path / "tbl")
+    _race_table(spark, root)
+    _interpose_once(monkeypatch, lambda: _concurrent_append(spark, root, [100]))
+    with pytest.raises(ts.SnapshotConflict) as ei:
+        _write_verb(spark, root, verb, max_retries=0)
+    assert type(ei.value) is ts.SnapshotConflict
+    assert ts.current_version(root) == 2
+    assert ts._op_of(root, 2) == "append"
+    ks = sorted(r["k"] for r in ts.read(spark, root).collect())
+    assert ks == list(range(12)) + [100]
+
+
+@pytest.mark.parametrize("verb", _WRITE_VERBS)
+def test_conflict_retries_exhausted_reraises(spark, tmp_path, monkeypatch, verb):
+    """A writer that loses every CAS race re-raises SnapshotConflict
+    after max_retries rebases: max_retries + 1 attempts, each lost to a
+    concurrent append, and none of the loser's commits lands."""
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    root = str(tmp_path / "tbl")
+    _race_table(spark, root)
+    real = ts._publish_manifest
+    state = {"inside": False, "appends": 0}
+
+    def pub(root_, version, payload):
+        # every publish by the writer first lets an append win its
+        # version; the append's own publish goes straight through
+        if not state["inside"]:
+            state["inside"] = True
+            try:
+                _concurrent_append(spark, root, [100 + state["appends"]])
+            finally:
+                state["inside"] = False
+            state["appends"] += 1
+        return real(root_, version, payload)
+
+    monkeypatch.setattr(ts, "_publish_manifest", pub)
+    max_retries = 2
+    with pytest.raises(ts.SnapshotConflict) as ei:
+        _write_verb(spark, root, verb, max_retries=max_retries)
+    assert type(ei.value) is ts.SnapshotConflict
+    assert state["appends"] == max_retries + 1
+    final = ts.current_version(root)
+    assert final == 1 + max_retries + 1
+    assert all(ts._op_of(root, v) == "append" for v in range(2, final + 1))
 
 
 def test_partition_spec_evolution_prunes_per_era(spark, tmp_path):

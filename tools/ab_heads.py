@@ -23,6 +23,9 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import _sign_test_p  # noqa: E402  (bench.py sits at the repo root)
+
 _CHILD = r"""
 import sys, time, json
 sys.path.insert(0, sys.argv[1])
@@ -40,15 +43,6 @@ for _ in range(3):
 print("AB_SAMPLE", json.dumps(sorted(ts)[1]))
 spark.stop()
 """
-
-
-def _sign_test_p(wins: int, n: int) -> float:
-    from math import comb
-
-    if n == 0:
-        return 1.0
-    k = max(wins, n - wins)
-    return min(1.0, round(sum(comb(n, i) for i in range(k, n + 1)) / 2**n * 2, 6))
 
 
 def sample(checkout: str, query: str, sf_dir: str) -> float:
