@@ -30,11 +30,17 @@ Scale posture (what changes at 100 TB / 1000 executors):
   degree), never O(V): settled vertices live in ``visited`` and are
   excluded with a join, not re-emitted (the reference re-serializes
   every vertex every round, ``BFS_map_reduce.py:40-41``).
-- The adjacency DataFrame is persisted once; small frontiers are
-  broadcast (the edge side never moves at all), and the first time a
-  frontier outgrows the broadcast threshold the cached edges are
-  hash-partitioned on ``src`` just in time, so every later shuffle-join
-  round moves only the (small) frontier side.
+- The graph is one adjacency table ``(src, nbrs ARRAY<BIGINT>)`` per
+  call, built in one scan of the edges and one exchange
+  (``edge_partitions`` wide, hash-partitioned on ``src``) and persisted;
+  its ``src`` column is the whole vertex universe. Small frontiers are
+  broadcast (the table never moves); a frontier over the broadcast
+  threshold is shuffled onto the table's own partitioning, so a
+  shuffle-join round moves only the frontier side.
+- Hub trade-off: a hub's whole neighbour list is one row, so one task
+  explodes it and one cached row holds O(degree) ids. A flat edge table
+  hash-partitioned on ``src`` puts all of a hub's edges in one partition
+  too, so the skew is the same; only the row width is new.
 - ``localCheckpoint`` every round truncates lineage — without it the
   plan doubles per iteration and the DAG scheduler dies long before
   data size matters.
@@ -125,29 +131,57 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
 
 def adjacency(edges: DataFrame) -> DataFrame:
     """Adjacency list ``(src, neighbours array)`` — the reference's
-    ``dict[int, list[int]]`` (``Graph.py:9-16``) as a DataFrame.
-
-    BFS below joins the flat symmetric edge table directly (cheaper:
-    no array build/explode round-trip); this exists as the standalone
-    operator equivalent of ``Graph.get_graph()``.
+    ``dict[int, list[int]]`` (``Graph.py:9-16``) as a DataFrame:
+    undirected, deduped, sorted, self-loops dropped. The standalone
+    operator equivalent of ``Graph.get_graph()``, built by the same
+    code as the table :func:`bfs` traverses.
     """
-    return undirected_edges(edges).groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("neighbours")
+    adj = _adjacency_table(edges, directed=False, dedup=True)
+    return adj.filter(F.size("nbrs") > 0).select(
+        "src", F.sort_array("nbrs").alias("neighbours")
     )
 
 
-def _auto_edge_partitions(edges: DataFrame, directed: bool) -> int:
-    """Size the static edge layout by INPUT VOLUME, capped at the
-    session's shuffle-partition default.
+def _adjacency_table(edges: DataFrame, directed: bool, dedup: bool) -> DataFrame:
+    """``(src BIGINT, nbrs ARRAY<BIGINT>)`` in one scan of ``edges`` and
+    one exchange on ``src``, as wide as the shuffle-partition setting
+    when the plan is made.
 
-    Every BFS round scans all cached edge partitions, so on a small
+    One ``inline`` orients every edge — undirected ``[(src, dst),
+    (dst, src)]``, directed ``[(src, dst), (dst, NULL)]`` — and one
+    aggregate groups the oriented rows, combining map-side so each task
+    ships one list per vertex. Self-loop ends collect as NULL, which
+    ``collect_*`` skips, so a vertex whose only edges are loops, and a
+    directed sink, keep a row with an empty list: ``src`` is the whole
+    vertex universe, already distinct. ``dedup`` collects a set instead
+    of a list, inside the same aggregate."""
+    s, d = F.col("src").cast("bigint"), F.col("dst").cast("bigint")
+    back = F.lit(None).cast("bigint") if directed else s
+    oriented = edges.select(
+        F.inline(
+            F.array(
+                F.struct(s.alias("src"), d.alias("nbr")),
+                F.struct(d.alias("src"), back.alias("nbr")),
+            )
+        )
+    )
+    collect = F.collect_set if dedup else F.collect_list
+    nbr = F.when(F.col("src") != F.col("nbr"), F.col("nbr"))
+    return oriented.groupBy("src").agg(collect(nbr).alias("nbrs"))
+
+
+def _auto_edge_partitions(edges: DataFrame, directed: bool) -> int:
+    """Size the adjacency table's exchange by INPUT VOLUME, capped at
+    the session's shuffle-partition default.
+
+    Every BFS round scans all cached adjacency partitions, so on a small
     graph a cluster-sized partition count just multiplies per-task
     scheduling into the per-round floor (measured round-8: the sf0.1
     bipartite graph's 6 small rounds cost 2.4 s at 32 partitions and
     1.7 s at 8 — same plans, same answers). The heuristic targets
     ~16 MB of source bytes per partition (x2 for the symmetric
-    doubling), floors at 8 so the one-time repartition+dedup+persist
-    keeps real build parallelism and local runs still exercise
+    doubling), floors at 8 so the one-time adjacency build keeps
+    real build parallelism and local runs still exercise
     parallel shuffles, and CAPS AT THE SESSION DEFAULT so a 100 TB edge scan on
     a real cluster keeps its cluster-wide layout — the cap, not the
     floor, is what scales. Falls back to the session default whenever
@@ -231,19 +265,29 @@ def bfs(
     executor-side; the driver only runs the (cheap) empty-frontier test,
     exactly the Pregel/GraphX iteration shape.
 
-    ``reached_only=True`` skips the vertex-universe build and final
-    left join entirely and returns just the reached rows — callers that
-    drop NULL-dist rows anyway (histograms, reachability sets) save the
-    universe distinct + checkpoint + join.
+    ``reached_only=True`` skips the vertex-universe checkpoint and final
+    join entirely and returns just the reached rows — callers that
+    drop NULL-dist rows anyway (histograms, reachability sets) save that
+    job and the join.
 
-    Join-strategy note: the frontier comes out of ``localCheckpoint`` as
-    an RDD scan with NO stats, so the planner can't see it is tiny and
-    instead broadcasts the (stats-bearing, persisted) edge table every
-    round. The driver loop knows the exact frontier count from the
-    emptiness check, so it hints ``broadcast(frontier)`` while the
-    frontier is under ``broadcast_frontier_rows`` — the edge side then
-    never moves at all — and falls back to a shuffle join for huge
-    frontiers (dense-graph middle rounds at scale).
+    Join-strategy note: every round joins the frontier with one
+    persisted adjacency table ``(src, nbrs)``, built per call in one
+    scan of ``edges`` and one exchange that hash-partitions it on
+    ``src`` into ``edge_partitions`` partitions (sized from the input
+    bytes when omitted), then explodes the matched neighbour lists. The
+    frontier comes out of ``localCheckpoint`` as an RDD scan with NO
+    stats, so the planner can't see it is tiny and would broadcast the
+    (stats-bearing, persisted) table every round. The driver loop knows
+    the exact frontier count from the emptiness check, so it hints
+    ``broadcast(frontier)`` while the frontier is under
+    ``broadcast_frontier_rows`` — the table then never moves at all —
+    and falls back to a shuffle join for huge frontiers (dense-graph
+    middle rounds at scale), which shuffles only the frontier onto the
+    table's partitioning. A hub's whole neighbour list is one row of the
+    table, so one task explodes it; an edge table partitioned on
+    ``src`` would put all of a hub's edges in one partition as well.
+    ``dedup_edges=True`` collects each list as a set inside the same
+    aggregate, so dedup adds no exchange.
     """
     if checkpoint_dir is not None:
         # Delegate with the ambient reliable context active: all
@@ -270,76 +314,6 @@ def bfs(
     spark = edges.sparkSession
     if edge_partitions is None:
         edge_partitions = _auto_edge_partitions(edges, directed)
-    raw = edges.select(
-        F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
-    )
-    # Pin the (big, static) edge side in memory; every round's frontier
-    # join streams over the same cached layout. Round-19 setup-cost
-    # rework (the r18 verdict's #3: round 1 carried 0.6 s of the 2.4 s
-    # query at sf0.1, all of it edge materialization):
-    #
-    # - The hash(src) repartition is DEFERRED: while every frontier fits
-    #   under ``broadcast_frontier_rows`` the rounds are broadcast joins
-    #   and the edge side never moves — a co-locating exchange up front
-    #   is a full 2|E|-row shuffle bought for nothing. The loop below
-    #   watches the exact frontier counts it already tracks and swaps in
-    #   a repartitioned+persisted copy the FIRST time a frontier exceeds
-    #   the broadcast threshold — the 100 TB shuffle-join posture is
-    #   unchanged (the exchange happens once, just in time, reading the
-    #   already-cached rows), and traversals that never need it never
-    #   pay it.
-    # - For the undirected default the cache holds the |E|-row FILTERED
-    #   RAW edges, not the 2|E|-row symmetric union: ``sym`` is rebuilt
-    #   per consumer as cache ∪ rev(cache), so setup scans the source
-    #   once and materializes half the rows (the src!=dst filter is
-    #   orientation-symmetric, so filtering before the union is exact).
-    #   Round-1-equivalent cost measured at sf0.1: 0.90 s caching the
-    #   union → 0.69 s caching raw.
-    #
-    # Edge dedup is OPT-IN (round 9): duplicate (src, dst) rows are
-    # semantically harmless to every bfs path — the dist-only expansion
-    # ends in distinct, the path expansion in a min-aggregate — so the
-    # default skips the full-edge-set hash aggregate at setup (~30% of
-    # the materialization cost on a near-duplicate-free graph, measured
-    # sf0.1). Pass dedup_edges=True for genuinely multi-edge inputs,
-    # where shrinking the cached table once pays back every round; the
-    # dedup's own exchange output is what gets cached, so it is paid
-    # once, and its cache keeps the 2|E| symmetric form (a per-round
-    # re-dedup of the union would re-shuffle every round).
-    base = raw.filter(F.col("src") != F.col("dst"))
-    if dedup_edges and not directed:
-        rev = base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        sym = (
-            base.unionByName(rev)
-            .dropDuplicates(["src", "dst"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        edge_cache = sym
-    elif not directed:
-        # Columnar persist, NOT RDD-block truncation: a localCheckpoint
-        # variant wrote the cache ~0.2 s faster at sf0.1 but every
-        # later round read the UnsafeRow blocks without columnar
-        # vectorization — the paired rounds A/B showed rounds 2..6
-        # giving the round-1 saving straight back. The InMemoryRelation
-        # costs the one-time encode and keeps per-round scans on the
-        # vectorized cache path.
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        rev = base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        sym = base.unionByName(rev)
-        edge_cache = base
-    else:
-        if dedup_edges:
-            base = base.dropDuplicates(["src", "dst"])
-        sym = base.persist(StorageLevel.MEMORY_AND_DISK)
-        edge_cache = sym
-    sym_partitioned = False
-
-    # Vertex universe: self-loop-only vertices still exist in the graph
-    # even though the loop edge never helps BFS, so they come from RAW.
-    # Undirected sym contains every non-loop vertex as a src; its
-    # distinct shuffles one bare bigint column (and runs exchange-free
-    # whenever the loop's deferred repartition did happen), versus the
-    # raw-side union shuffling all 2|E| endpoint rows.
     if source_df is not None:
         if sources is not None:
             raise ValueError("pass either source_df or sources, not both")
@@ -363,7 +337,7 @@ def bfs(
     # Lazy checkpoint: round 1's count() materializes the seed plan
     # inside round 1's job — for a source_df seed the min()-aggregate
     # scan runs as part of that job instead of as its own, and later
-    # consumers (prev_ids, loops_and_source) read the cached rows.
+    # consumers (prev_ids, visited) read the cached rows.
     frontier = seeds_df.select(*init_cols).transform(_ckpt_lazy)
     if n_seeds is None:
         # undeclared seed count: materialize the seed checkpoint now
@@ -372,16 +346,6 @@ def bfs(
         n_seeds = frontier.count()
         if n_seeds == 0:
             raise ValueError("source_df produced no seed rows")
-
-    loops_and_source = (
-        raw.filter(F.col("src") == F.col("dst"))
-        .select(F.col("src").alias("id"))
-        .union(frontier.select("id"))  # reads the cached seed, not its plan
-    )
-    # NB: all_vertices is constructed AFTER the loop (round 19) so it
-    # reads whichever sym cache the traversal ended on — the deferred
-    # repartition swaps the cached frame mid-loop, and a plan captured
-    # here would recompute the unpersisted original from source.
 
     visited = frontier
     prev_ids = None  # frontier of the round before last (undirected pruning)
@@ -402,24 +366,26 @@ def bfs(
     if stats is not None:
         stats["rounds"] = []
     with _loop_conf(spark) as default_parts:
+        # persist() plans the table now, edge_partitions wide, with AQE
+        # off so the cached plan keeps its hash(src) partitioning and a
+        # shuffle-join round exchanges only the frontier. (A concurrent
+        # loop on this session can race the width, as it can every
+        # per-round width; only speed depends on it.) Columnar persist:
+        # rounds scan it on the vectorized cache path; round 1's job
+        # materializes it. Dedup is opt-in: duplicate edges are harmless
+        # to both expansions (distinct / min-aggregate), so the default
+        # collects lists; dedup_edges=True collects sets in the same
+        # aggregate, for genuinely multi-edge inputs.
+        conf.set("spark.sql.shuffle.partitions", str(edge_partitions))
+        adj = _adjacency_table(edges, directed, dedup_edges).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         for round_no in range(1, max_rounds + 1):
             _t_round = time.perf_counter()
             conf.set(
                 "spark.sql.shuffle.partitions",
                 str(min(default_parts, max(2, n_front // 8_000))),
             )
-            if n_front > broadcast_frontier_rows and not sym_partitioned:
-                # First shuffle-join round: NOW the co-locating layout
-                # pays every remaining round. One exchange over the
-                # already-cached rows, then the old cache is released.
-                old_cache = edge_cache
-                sym = sym.repartition(edge_partitions, "src").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                sym.count()
-                old_cache.unpersist()
-                edge_cache = sym
-                sym_partitioned = True
             fr = F.broadcast(frontier) if n_front <= broadcast_frontier_rows else frontier
             if not directed:
                 # Undirected level-synchronous invariant: a neighbour of
@@ -442,26 +408,28 @@ def bfs(
                 vis_ids = F.broadcast(vis_ids)
 
             if with_paths:
-                # Expand: frontier ⋈ edges emits (dst, dist+1, path+[dst]);
-                # per vertex keep the lexicographically smallest path (all
-                # of a round's candidates share one dist, so min(path) IS
-                # the deterministic argmin — sound replacement for the
-                # reference's index-aligned argmin, wart W3). Partial
-                # aggregation before the exchange is Catalyst's map-side
-                # combine (= the reference's apply_map grouping,
-                # BFS_map_reduce.py:8-23). Aggregate BEFORE the visited
-                # anti-join: the candidate multiset is O(frontier x
-                # degree), the aggregate is O(distinct dst).
-                cand_cols = [
-                    sym["dst"].alias("id"),
-                    (frontier["dist"] + 1).alias("dist"),
-                    F.concat(frontier["path"], F.array(sym["dst"])).alias("path"),
-                ]
+                # Expand: frontier ⋈ adj + explode emits (nbr, dist+1,
+                # path+[nbr]); per vertex keep the lexicographically
+                # smallest path (all of a round's candidates share one
+                # dist, so min(path) IS the deterministic argmin — sound
+                # replacement for the reference's index-aligned argmin,
+                # wart W3). Partial aggregation before the exchange is
+                # Catalyst's map-side combine (= the reference's
+                # apply_map grouping, BFS_map_reduce.py:8-23). Aggregate
+                # BEFORE the visited anti-join: the candidate multiset is
+                # O(frontier x degree), the aggregate is O(distinct dst).
                 new = (
-                    fr.join(sym, frontier["id"] == sym["src"])
-                    .select(*cand_cols)
+                    fr.join(adj, frontier["id"] == adj["src"])
+                    .select(
+                        F.explode(adj["nbrs"]).alias("id"),
+                        (frontier["dist"] + 1).alias("dist"),
+                        frontier["path"],
+                    )
                     .groupBy("id")
-                    .agg(F.min("dist").alias("dist"), F.min("path").alias("path"))
+                    .agg(
+                        F.min("dist").alias("dist"),
+                        F.min(F.concat("path", F.array("id"))).alias("path"),
+                    )
                     .join(vis_ids, "id", "left_anti")
                     # Lazy checkpoint: the count() below materializes it —
                     # one job per round where eager checkpoint + count
@@ -471,11 +439,11 @@ def bfs(
             else:
                 # dist-only BFS needs no aggregate at all: every vertex
                 # first discovered in round k has dist == k by level
-                # synchrony, so expansion is a semi-join (edge rows never
-                # widen) + distinct, and dist is attached as a literal.
+                # synchrony, so expansion is a semi-join + explode +
+                # distinct, and dist is attached as a literal.
                 new = (
-                    sym.join(fr, frontier["id"] == sym["src"], "left_semi")
-                    .select(F.col("dst").alias("id"))
+                    adj.join(fr, adj["src"] == frontier["id"], "left_semi")
+                    .select(F.explode("nbrs").alias("id"))
                     .distinct()
                     .join(vis_ids, "id", "left_anti")
                     .select(
@@ -515,35 +483,17 @@ def bfs(
             max_rounds,
         )
 
+    out_cols = ["id", "dist", *(["path"] if with_paths else [])]
     if reached_only:
-        edge_cache.unpersist()
-        return visited.select("id", "dist", *(["path"] if with_paths else []))
-    # Build + pin the vertex universe before releasing the edge cache —
-    # it reads whichever sym cache the loop ended on (see the deferred-
-    # repartition note above), and an unpersisted sym would silently
-    # recompute from source when the caller materializes the result.
-    # The distinct shuffles one bare bigint column (exchange-free when
-    # the deferred repartition happened).
-    if not directed:
-        all_vertices = (
-            sym.select(F.col("src").alias("id"))
-            .distinct()
-            .unionByName(loops_and_source)
-            .dropDuplicates()
-        )
-    else:
-        all_vertices = (
-            raw.select(F.col("src").alias("id"))
-            .union(raw.select(F.col("dst").alias("id")))
-            .union(loops_and_source)
-            .distinct()
-        )
-    all_vertices = all_vertices.transform(_ckpt)
-    edge_cache.unpersist()
-    result = all_vertices.join(visited, "id", "left").select(
-        "id", "dist", *(["path"] if with_paths else [])
-    )
-    return result
+        adj.unpersist()
+        return visited.select(*out_cols)
+    # adj.src is the vertex universe, already distinct; pin it before
+    # the table is released (an unpersisted table would silently
+    # recompute from source when the caller materializes the result).
+    # The full join adds the seeds that have no edge at all.
+    all_vertices = adj.select(F.col("src").alias("id")).transform(_ckpt)
+    adj.unpersist()
+    return all_vertices.join(visited, "id", "full").select(*out_cols)
 
 
 def connected_component_of(edges: DataFrame, source: int = 0) -> DataFrame:

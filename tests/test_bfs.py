@@ -6,6 +6,9 @@ run on the reference's shipped datasets plus synthesized fixtures the
 reference cannot handle (disconnected graphs hang it, SURVEY §2.9 W2).
 """
 
+import itertools
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -410,12 +413,12 @@ def test_scc_jumps_matches_shipped(spark):
 
 @pytest.mark.parametrize("with_paths", [False, True], ids=["dist", "paths"])
 def test_bfs_deferred_repartition_swap(spark, with_paths):
-    """Round-19 deferred edge repartition: the co-locating hash(src)
-    exchange only happens the first time a frontier exceeds
-    broadcast_frontier_rows. Force the swap with a tiny threshold on
-    smallG (frontiers reach 30+) and on a synthetic fixture covering
-    the non-reached_only output path, and demand results identical to
-    the broadcast-only default."""
+    """Shuffle-join rounds: a frontier over broadcast_frontier_rows is
+    not broadcast but shuffled onto the adjacency table's hash(src)
+    partitioning (the table itself never moves). Force that path with a
+    tiny threshold on smallG (frontiers reach 30+) and on a synthetic
+    fixture covering the non-reached_only output path, and demand
+    results identical to the broadcast-only default."""
     edges_df = read_edge_list(spark, SMALL)
     want = {r["id"]: (r["dist"], r["path"]) for r in bfs(edges_df).collect()}
     got = {
@@ -440,3 +443,69 @@ def test_bfs_deferred_repartition_swap(spark, with_paths):
         ).collect()
     }
     assert swapped == base
+
+
+def _random_multigraph(seed):
+    """A seeded random graph on 0..29 plus what bfs must survive:
+    repeated edges in both orientations, self-loops, a vertex (40) whose
+    only edge is a loop, and a component (50..53) unreachable from 0."""
+    rng = random.Random(seed)
+    edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(45)]
+    edges += rng.sample(edges, 8) + [(b, a) for a, b in rng.sample(edges, 8)]
+    edges += [(0, rng.randrange(1, 30)), (7, 7), (40, 40), (50, 51), (51, 52), (53, 52)]
+    rng.shuffle(edges)
+    return edges
+
+
+def _nearest_seed_oracle(edges, seeds, directed):
+    """bfs_oracle from the nearest of several seeds: a virtual source -1
+    with an edge to every seed (paths [-1, seed, ...] order exactly as
+    [seed, ...] do), then the virtual hop stripped."""
+    out = bfs_oracle(edges + [(-1, s) for s in seeds], source=-1, directed=directed)
+    del out[-1]
+    return {
+        v: (None, None) if d is None else (d - 1, p[1:]) for v, (d, p) in out.items()
+    }
+
+
+_ORACLE_CASES = [
+    (
+        f"{'directed' if d else 'undirected'}-{'paths' if p else 'dist'}"
+        f"-{'dedup' if u else 'dup'}-{'shuffle' if b else 'bcast'}",
+        dict(directed=d, with_paths=p, dedup_edges=u)
+        | ({"broadcast_frontier_rows": 1} if b else {}),
+    )
+    for d, p, u, b in itertools.product([False, True], repeat=4)
+] + [
+    ("reached_only", dict(reached_only=True, broadcast_frontier_rows=1)),
+    ("sources", dict(sources=[0, 51, 99], broadcast_frontier_rows=1)),
+]
+
+
+@pytest.mark.parametrize(
+    "seed,kwargs",
+    [(i, kw) for i, (_, kw) in enumerate(_ORACLE_CASES)],
+    ids=[name for name, _ in _ORACLE_CASES],
+)
+def test_bfs_matches_oracle_on_random_multigraphs(spark, seed, kwargs):
+    """Differential check of bfs against the serial oracle on seeded
+    random multigraphs that need no fixture files, across directed x
+    with_paths x dedup_edges x broadcast-vs-shuffle-join rounds, plus
+    reached_only and a multi-source call whose seeds include one in the
+    unreachable component and one (99) absent from the edge list."""
+    edges = _random_multigraph(seed)
+    directed = kwargs.get("directed", False)
+    with_paths = kwargs.get("with_paths", True)
+    want = _nearest_seed_oracle(edges, kwargs.get("sources", [0]), directed)
+    if not with_paths:
+        want = {v: (d, None) for v, (d, _) in want.items()}
+    if kwargs.get("reached_only"):
+        want = {v: dp for v, dp in want.items() if dp[0] is not None}
+
+    edges_df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    res = bfs(edges_df, **kwargs)
+    assert res.columns == ["id", "dist", *(["path"] if with_paths else [])]
+    got = {
+        r["id"]: (r["dist"], r["path"] if with_paths else None) for r in res.collect()
+    }
+    assert got == want
