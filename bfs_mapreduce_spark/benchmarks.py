@@ -188,11 +188,11 @@ def run_graph_scale(
             ],
         }
         if with_scc:
-            # x100 ask (round 17, verdict ask #5): SCC with the
-            # pointer-jumping auto mode on the SAME edge list (treated
-            # as directed: backbone path + random arcs — a G(n, m)
-            # digraph at m/n ~ 4.6 has a giant SCC, so trim, color,
-            # and backward all do real work), per-phase instrumented
+            # x100 ask (round 17, verdict ask #5): SCC on the SAME
+            # edge list (treated as directed: backbone path + random
+            # arcs — a G(n, m) digraph at m/n ~ 4.6 has a giant SCC,
+            # so trim, color, and backward all do real work),
+            # per-phase instrumented
             from pyspark.sql import functions as F
 
             from bfs_mapreduce_spark.operators.graph import (
@@ -201,9 +201,7 @@ def run_graph_scale(
 
             sstats = {}
             t1 = time.perf_counter()
-            comp = strongly_connected_components(
-                edges, stats=sstats, jumps="auto"
-            )
+            comp = strongly_connected_components(edges, stats=sstats)
             agg = comp.groupBy().agg(
                 F.countDistinct("scc_id").alias("n_scc"),
                 F.count(F.lit(1)).alias("n_v"),
@@ -299,7 +297,6 @@ def run_directed_scale(
     graphs=None,
     hb_rounds: int = 6,
     out_dir: str = "/tmp/bfs_mapreduce_spark_scale",
-    jumps: bool = False,
 ) -> Iterator[dict]:
     """SCC (FW-BW-Trim, per-phase stats) + HyperBall (sketch-only,
     per-round seconds) on layered directed graphs — the round-7 ask:
@@ -318,9 +315,7 @@ def run_directed_scale(
         edges = spark.read.parquet(path)
         stats: dict = {}
         t0 = time.perf_counter()
-        res = strongly_connected_components(
-            edges, max_rounds=100_000, stats=stats, jumps=jumps
-        )
+        res = strongly_connected_components(edges, max_rounds=100_000, stats=stats)
         sizes = res.groupBy("scc_id").count()
         n_sccs, largest = sizes.agg(
             F.count(F.lit(1)), F.max("count")
@@ -356,7 +351,6 @@ def run_directed_scale(
         )
         yield {
             "graph": name,
-            "jumps": jumps,
             "width": width,
             "scc_size": scc_size,
             "layers": layers,

@@ -136,9 +136,7 @@ def _bench_graph(args: argparse.Namespace) -> int:
     try:
         if args.directed:
             graphs = DIRECTED_GRAPHS[:2] if args.quick else DIRECTED_GRAPHS
-            runs = run_directed_scale(
-                spark, graphs, out_dir=args.out_dir, jumps=args.jumps
-            )
+            runs = run_directed_scale(spark, graphs, out_dir=args.out_dir)
         else:
             if args.graph:
                 graphs = [_parse_graph_spec(s) for s in args.graph]
@@ -691,13 +689,6 @@ def main(argv: list[str] | None = None) -> int:
         help="bench SCC (FW-BW-Trim per-phase) + HyperBall on layered directed graphs",
     )
     bg.add_argument(
-        "--jumps",
-        action="store_true",
-        help="with --directed: pointer-jumping color formulation "
-        "(spill-truncated state self-join) instead of the shipped "
-        "O(diameter) fixpoint",
-    )
-    bg.add_argument(
         "--graph",
         action="append",
         metavar="NAME:N:M",
@@ -712,7 +703,7 @@ def main(argv: list[str] | None = None) -> int:
     bg.add_argument(
         "--with-scc",
         action="store_true",
-        help="also run SCC (jumps='auto', per-phase instrumented) on "
+        help="also run SCC (per-phase instrumented) on "
         "each undirected-bench graph treated as a digraph — the x100 "
         "stress pairing (round 17)",
     )

@@ -36,6 +36,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bfs_mapreduce_spark.operators.graph import _ckpt, _min_label_fixpoint
 from bfs_mapreduce_spark.registry import register
 from bfs_mapreduce_spark.sources.readers import load_table
 
@@ -1341,47 +1342,32 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components by min-label propagation: every vertex
     repeatedly adopts the smallest label among itself and its
-    neighbours; converges in O(component diameter) rounds (near-dup
-    clusters are shallow — a handful of rounds).
+    neighbours — graph.py's :func:`_min_label_fixpoint` over the
+    symmetrized edges, so after its one-hop prefix pointer jumping
+    cuts a deep component's O(diameter) rounds to O(log diameter)
+    (near-dup clusters are shallow and converge inside the prefix).
 
     Input: ``(s, d)`` undirected edge rows. Output: ``(v, cluster_id)``
-    with cluster_id = min vertex id in the component. Same driver-loop
-    + localCheckpoint discipline as BFS (operators/graph.py).
+    with cluster_id = min vertex id in the component. Every round is
+    truncated by the helper, so ``reliable_checkpoints(...)`` reaches
+    this loop like every other graph loop.
     """
+    s, d = F.col("s").cast("bigint"), F.col("d").cast("bigint")
     sym = (
-        edges.select(F.col("s").cast("bigint").alias("s"), F.col("d").cast("bigint").alias("d"))
-        .unionByName(
-            edges.select(F.col("d").cast("bigint").alias("s"), F.col("s").cast("bigint").alias("d"))
-        )
+        edges.select(s.alias("src"), d.alias("dst"))
+        .unionByName(edges.select(d.alias("src"), s.alias("dst")))
         .distinct()
         .persist()
     )
-    labels = (
-        sym.select(F.col("s").alias("v"))
+    labels0 = (
+        sym.select(F.col("src").alias("v"))
         .distinct()
-        .withColumn("cluster_id", F.col("v"))
-        .localCheckpoint()
+        .select("v", F.col("v").alias("k"), F.col("v").alias("p"))
+        .transform(_ckpt)
     )
-    converged = False
-    for _ in range(max_iters):
-        prop = sym.join(labels, sym["s"] == labels["v"]).select(
-            sym["d"].alias("v"), F.col("cluster_id")
-        )
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("v")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint()
-        )
-        converged = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if converged:
-            break
+    labels, _used, converged = _min_label_fixpoint(
+        sym, labels0, F.col("k") < F.col("k_old"), max_iters, "cc"
+    )
     if not converged:
         # Same loud-truncation contract as graph.bfs: an unconverged
         # labeling silently merges/splits clusters — callers must hear it.
@@ -1391,7 +1377,7 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
             max_iters,
         )
     sym.unpersist()
-    return labels
+    return labels.select("v", F.col("k").alias("cluster_id"))
 
 
 # Shared by BOTH clustering entries: the transitive closure of the
@@ -1432,7 +1418,8 @@ _CLUSTERS_ORACLE = """
     "q_dedup_clusters",
     oracle=_CLUSTERS_ORACLE,
     doc="Near-dup clusters: jaccard>=0.3 pairs -> connected components "
-    "(min-label propagation, O(diameter) rounds) -> cluster_id = min "
+    "(min-label propagation with pointer jumping after 8 one-hop "
+    "rounds, O(log diameter) rounds) -> cluster_id = min "
     "doc in component (the canonical keeper). Oracle = transitive "
     "closure as a UNION-deduped recursive CTE. The pair graph is tiny "
     "relative to the corpus, so clustering cost is negligible next to "
@@ -1452,9 +1439,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_CLUSTERS_ORACLE,
     doc="Same clusters, computed by the O(log d)-round "
     "large-star/small-star algorithm (operators/graph.py: "
-    "connected_components_star) instead of per-hop min-label "
-    "propagation — the variant to reach for when component diameter is "
-    "large. Shares q_dedup_clusters' oracle: both algorithms must land "
+    "connected_components_star) instead of min-label propagation — "
+    "also O(log d) rounds on large diameters, with localCheckpoint "
+    "truncation where min-label's jump rounds spill to parquet. Shares q_dedup_clusters' oracle: both algorithms must land "
     "on identical (doc_id, cluster_id = component min) labels.",
 )
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -56,7 +56,7 @@ import os
 import threading
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -933,11 +933,11 @@ def connected_components_star(
     """Connected components by alternating large-star/small-star
     rounds — the O(log d)-round algorithm from the MapReduce CC
     literature (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"), for graphs whose diameter makes per-hop min-label
-    propagation (``dedup_queries.connected_components``, O(d) rounds)
-    too slow. Near-dup clusters are shallow, so min-label is fine
-    there; long chains (session graphs, citation paths, road-ish
-    topologies) want this variant.
+    Beyond"). Min-label propagation
+    (``dedup_queries.connected_components``, :func:`_min_label_fixpoint`)
+    reaches O(log d) rounds too once its pointer jumping starts, but
+    every jump round pays two parquet spills; this variant keeps
+    ``localCheckpoint`` truncation on every round.
 
     Per round, every vertex re-points its neighbors at the minimum of
     its closed neighborhood:
@@ -1022,14 +1022,73 @@ def connected_components_star(
     return (labels, rounds) if return_rounds else labels
 
 
-_AUTO_JUMP_AFTER = 8  # "auto": one-hop base rounds 1..8, jump rounds after
+_AUTO_JUMP_AFTER = 8  # one-hop rounds 1..8, jump rounds after
+
+
+def _min_label_fixpoint(
+    edges: DataFrame, state: DataFrame, changed: Column, rounds: int, tag: str
+) -> tuple[DataFrame, int, bool]:
+    """Min-label propagation to a fixpoint — the one loop behind SCC
+    color, SCC backward and ``dedup_queries.connected_components``.
+
+    ``state`` is ``(v, k, p)``: a label key ``k`` and a pointer ``p``
+    to a vertex whose own key is at most ``k``. Each round every
+    vertex takes the smallest ``k`` over itself and its in-neighbours
+    along ``edges`` ``(src, dst)``, with the ``p`` that came with it.
+    ``min`` + ``min_by`` keep that a HashAggregate; ``min(struct(k,
+    p))`` plans a SortAggregate every round.
+
+    Rounds 1..``_AUTO_JUMP_AFTER`` stop there, so a shallow fixpoint
+    never pays a spill. From round ``_AUTO_JUMP_AFTER + 1`` a round
+    also jumps through the pointer — ``(k, p)`` takes ``p``'s pair
+    when its key is smaller — which collapses O(diameter) rounds to
+    O(log diameter). The jump self-joins the state, and a self-join
+    SQUARES localCheckpoint-carried statistics every round
+    (plans/reliable.spill_truncate), so a jump round truncates with
+    ``spill_truncate`` instead: two parquet spills.
+
+    ``changed`` is a boolean Column over ``k`` and ``k_old``. It is
+    computed inside the round's lazy checkpoint, so counting its true
+    rows is the round's single job, and a round with none ends the
+    loop. ``rounds`` is the round budget. Returns ``(state,
+    rounds_used, converged)``.
+    """
+    for r in range(1, rounds + 1):
+        msgs = edges.join(state.withColumnRenamed("v", "src"), "src").select(
+            F.col("dst").alias("v"), "k", "p"
+        )
+        new = (
+            state.unionByName(msgs)
+            .groupBy("v")
+            .agg(F.min("k").alias("k"), F.min_by("p", "k").alias("p"))
+        )
+        jump = r > _AUTO_JUMP_AFTER
+        if jump:
+            new = _reliable.spill_truncate(new, f"{tag}-base")
+            jt = new.select(
+                F.col("v").alias("jv"), F.col("k").alias("jk"), F.col("p").alias("jp")
+            )
+            take = F.col("jk") < F.col("k")  # NULL (no jump) when p has no row
+            new = new.join(jt, F.col("p") == F.col("jv"), "left").select(
+                "v",
+                F.when(take, F.col("jk")).otherwise(F.col("k")).alias("k"),
+                F.when(take, F.col("jp")).otherwise(F.col("p")).alias("p"),
+            )
+        nxt = new.join(state.select("v", F.col("k").alias("k_old")), "v").select(
+            "v", "k", "p", changed.alias("chg")
+        )
+        nxt = _reliable.spill_truncate(nxt, tag) if jump else nxt.transform(_ckpt_lazy)
+        n_changed = nxt.filter("chg").count()  # materializes every partition
+        state = nxt.select("v", "k", "p")
+        if n_changed == 0:
+            return state, r, True
+    return state, rounds, False
 
 
 def strongly_connected_components(
     edges: DataFrame,
     max_rounds: int = 200,
     stats: dict | None = None,
-    jumps: bool | str = "auto",
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph by the
     forward-backward coloring algorithm with trimming (Orzan 2004 /
@@ -1073,69 +1132,21 @@ def strongly_connected_components(
     diameter of the largest surviving SCC), which is why each color
     round fuses the fixpoint test into the checkpoint job.
 
-    ``jumps=True`` adds a pointer-jumping shortcut to BOTH
-    propagation phases. Color rounds gain ``c(v) ← min(c(v),
-    c(c(v)))``, sound by transitivity (if w reaches u and u reaches v
-    then w reaches v). The backward phase swaps the one-hop-per-round
-    frontier walk for the same machinery in reverse over SALTED keys:
-    roots seed the sentinel key -1, every other vertex a hash of its
-    id, and each vertex minimizes the key over its class-internal
-    forward-reachable set — membership is "the sentinel reached me"
-    (``dk(v) == -1`` ⟺ v reaches its root). Salting matters: raw-id
-    min-labels collapse to a one-hop wavefront when ids increase
-    along edges (measured 64/64 rounds on the ring fixture); hashed
-    keys decorrelate order from direction so the jump compounds (see
-    the in-loop comment for completeness and convergence arguments).
-    Both fixpoints collapse from O(diameter) to O(log diameter)
-    rounds. The state SELF-JOIN each
-    requires is exactly the plan shape whose carried localCheckpoint
-    statistics SQUARE per round (the round-11 BigInteger forensics,
-    plans/reliable.spill_truncate docstring), so each jump round
-    truncates via :func:`spill_truncate` instead: two parquet spills
-    per round. The trade is measured, not assumed (bench-graph
-    --directed --jumps, BASELINE.md): the spill floor loses at
-    sf0.1-sized graphs, and the formulation
-    wins where per-round data cost dominates the floor.
-
-    ``jumps="auto"`` (the DEFAULT since round 13 — the round-12
-    verdict's adaptive ask) takes both sides of that measured
-    crossover without the caller choosing. Two pieces:
-
-    - **Deferred escalation**: rounds 1..``_AUTO_JUMP_AFTER`` of each
-      propagation fixpoint run the cheap one-hop base step only
-      (``localCheckpoint`` truncation, no spills) — a shallow
-      fixpoint converges before ever paying the spill floor; from
-      round ``_AUTO_JUMP_AFTER + 1`` every round also applies the
-      jump shortcut with the spill_truncate discipline it needs, so
-      a deep fixpoint escalates to exactly the forced-jumps
-      machinery after a bounded prefix of cheap rounds.
-    - **Sentinel-closure convergence** (backward phase, all jump
-      modes): stop when no vertex NEWLY reaches ``dk == -1`` rather
-      than when every salted key stabilizes — the frontier walk's own
-      stopping rule, sound because a zero-new-sentinel round proves
-      the marked set is one-hop closed. This cuts the shallow-graph
-      round count to the root eccentricity (the hash keys' longer
-      mixing time stops mattering), which is what makes the salted
-      machinery competitive with the plain frontier walk at the
-      sf0.1 profile.
-
-    Measured (BASELINE.md round-13 table): auto is within noise of
-    the old shipped default at sf0.1 (fewer color rounds, slightly
-    pricier backward rounds — a wash) and within ~1.2x of forced
-    ``jumps=True`` on the diameter-200 dscc-deep fixture, where the
-    old default was 13.5x slower. Identical labels in every mode.
+    Both propagation phases run :func:`_min_label_fixpoint`. Color
+    propagates vertex ids forward (``k = p = v``); its jump
+    ``c(v) ← c(c(v))`` is sound by transitivity. Backward runs the
+    same loop over the class-internal edges REVERSED with SALTED
+    keys: roots seed the sentinel key -1, every other vertex a 63-bit
+    hash of its id, and v joins its root's SCC iff the sentinel
+    reaches it. Hashing decorrelates key order from edge direction,
+    so the jump compounds where raw ids increasing along the edges
+    leave a one-hop wavefront (64/64 rounds on a 64-cycle); and
+    backward stops once no vertex NEWLY reaches the sentinel, so the
+    other keys' mixing time never costs rounds. Shallow fixpoints
+    converge inside the helper's one-hop prefix with no spill; deep
+    ones escalate to O(log diameter) jump rounds (BASELINE.md
+    round-13 table).
     """
-    # jump_from: first propagation round that applies the jump
-    # shortcut. None = never (jumps=False), 1 = every round
-    # (jumps=True), _AUTO_JUMP_AFTER+1 = auto (cheap one-hop rounds
-    # first — shallow fixpoints converge before ever paying a spill,
-    # deep ones escalate to per-round jumping).
-    if jumps == "auto":
-        jump_from: int | None = _AUTO_JUMP_AFTER + 1
-    elif jumps:
-        jump_from = 1
-    else:
-        jump_from = None
     e_raw = edges.select(
         F.col("src").cast("bigint").alias("src"),
         F.col("dst").cast("bigint").alias("dst"),
@@ -1203,62 +1214,15 @@ def strongly_connected_components(
         if remaining.count() == 0 or rounds_left <= 0:
             break
         # --- forward min-label propagation to fixpoint
-        _t0, _r0 = time.perf_counter(), rounds_left
-        c = remaining.select("v", F.col("v").alias("c")).transform(_ckpt)
-        colors_converged = False
-        color_round = 0
-        while rounds_left > 0:
-            rounds_left -= 1
-            color_round += 1
-            do_jump = jump_from is not None and color_round >= jump_from
-            msgs = e.join(c.withColumnRenamed("v", "src"), "src").select(
-                F.col("dst").alias("v"), "c"
-            )
-            # ONE job per round: the new labels carry a changed flag
-            # (vs the old label) inside the lazily-checkpointed frame,
-            # and the full count of changed rows both materializes the
-            # checkpoint and answers the fixpoint test — the previous
-            # separate checkpoint job + change-probe job were the
-            # dominant per-round cost (2 jobs x ~90 color rounds at
-            # the sf0.1 profile).
-            new_min = (
-                c.unionByName(msgs).groupBy("v").agg(F.min("c").alias("c"))
-            )
-            if do_jump:
-                # pointer jumping: shortcut through the current label's
-                # own label. The self-join squares localCheckpoint-
-                # carried stats (round-11 forensics), so this round
-                # truncates with spill_truncate — real file stats, two
-                # spills per (much rarer) round.
-                new_min = _reliable.spill_truncate(new_min, "scc-color-base")
-                jt = new_min.select(
-                    F.col("v").alias("jv"), F.col("c").alias("jc")
-                )
-                new_min = (
-                    new_min.join(jt, new_min["c"] == jt["jv"], "left")
-                    .select(
-                        new_min["v"].alias("v"),
-                        F.least(new_min["c"], F.col("jc")).alias("c"),
-                    )
-                )
-            c2 = (
-                new_min
-                .join(
-                    c.withColumnRenamed("c", "c_old"), "v"
-                )
-                .select("v", "c", (F.col("c") < F.col("c_old")).alias("chg"))
-            )
-            c2 = (
-                _reliable.spill_truncate(c2, "scc-color")
-                if do_jump
-                else c2.transform(_ckpt_lazy)
-            )
-            changed = c2.filter("chg").count()  # full count: materializes every partition
-            c = c2.select("v", "c")
-            if changed == 0:
-                colors_converged = True
-                break
-        _note(pass_no, "color", _r0 - rounds_left, _t0)
+        _t0 = time.perf_counter()
+        c0 = remaining.select(
+            "v", F.col("v").alias("k"), F.col("v").alias("p")
+        ).transform(_ckpt)
+        cs, used, colors_converged = _min_label_fixpoint(
+            e, c0, F.col("k") < F.col("k_old"), rounds_left, "scc-color"
+        )
+        rounds_left -= used
+        _note(pass_no, "color", used, _t0)
         if not colors_converged:
             # A cut-short coloring would surface FALSE roots (vertices
             # the true min label has not yet reached) and emit wrong
@@ -1268,186 +1232,45 @@ def strongly_connected_components(
             # already proven mutually reachable with their root.)
             rounds_left = 0
             break
-        # --- backward mark within colors, from every root at once
-        _t0, _r0 = time.perf_counter(), rounds_left
-        if jump_from is not None:
-            # Pointer-jumping backward phase (round 12): the frontier
-            # walk below is one hop per round — O(diameter) rounds, and
-            # after the color phase collapsed it was 95% of the
-            # dscc-deep runtime (BASELINE.md round-12 table). Run the
-            # color machinery in REVERSE instead, over CLASS-INTERNAL
-            # edges. Restricting edges to c(src) == c(dst) is complete,
-            # not just sound: if c(v) = r then r reaches v along a path
-            # whose every intermediate u has c(u) = r (anything
-            # reaching u reaches v, so c(u) >= c(v) = r; and r reaches
-            # u, so c(u) <= r — the Orzan lemma).
-            #
-            # The label each vertex minimizes is a SALTED key, not the
-            # raw id: roots carry the sentinel key -1 (unique within
-            # their class — edges never cross classes, so another
-            # class's sentinel cannot leak), every other vertex a
-            # 63-bit hash of its id. Membership is then simply "the
-            # sentinel reached me": dk(v) == -1 ⟺ v reaches its root
-            # class-internally ⟺ v ∈ SCC(root). Raw-id min-labels
-            # degenerate under adversarial orderings — with ids
-            # increasing along edges (the dscc-deep chain exactly),
-            # min(out-neighbor ids) == self everywhere except the
-            # wrap-around, so d(v) stays a self-pointer and the jump
-            # d(d(v)) has nothing to chase: a one-hop wavefront,
-            # O(diameter) rounds, measured 64/64 on the ring fixture.
-            # Hashing decorrelates key order from edge direction, so
-            # min-chains have random geometry and the jump compounds:
-            # O(log diameter) rounds w.h.p. (the same trick behind
-            # Stergiou-style label-propagation shortcutting).
-            #
-            # Base step: d(src) ← min over out-neighbors' (key, ptr);
-            # jump: d(v) ← min(d(v), d(ptr(v))), sound because
-            # class-internal reachability is transitive. Scalar O(V)
-            # state — NOT the Σ|SCC|² pair materialization a
-            # transitive-closure doubling would cost — and the same
-            # spill_truncate discipline as the color jump (the
-            # d(ptr(v)) self-join squares carried stats). A
-            # rounds-exhausted partial d only ever yields marks whose
-            # membership is already proven (dk = -1 certifies a
-            # witness path to the root), matching the frontier walk's
-            # truncation contract.
-            cc_src = c.select(F.col("v").alias("src"), F.col("c").alias("c_src"))
-            cc_dst = c.select(F.col("v").alias("dst"), F.col("c").alias("c_dst"))
-            e_cls = (
-                e.join(cc_src, "src")
-                .join(cc_dst, "dst")
-                .filter(F.col("c_src") == F.col("c_dst"))
-                .select("src", "dst")
-                .transform(_ckpt)
-            )
-            d = c.select(
-                "v",
-                F.when(F.col("v") == F.col("c"), F.lit(-1).cast("bigint"))
-                .otherwise(F.shiftrightunsigned(F.xxhash64(F.col("v")), 1))
-                .alias("dk"),
-                F.col("v").alias("dv"),
-            )
-            back_round = 0
-            while rounds_left > 0:
-                rounds_left -= 1
-                back_round += 1
-                do_jump = back_round >= jump_from
-                msgs = e_cls.join(
-                    d.withColumnRenamed("v", "dst"), "dst"
-                ).select(F.col("src").alias("v"), "dk", "dv")
-                new_min = (
-                    d.unionByName(msgs)
-                    .groupBy("v")
-                    .agg(F.min(F.struct("dk", "dv")).alias("m"))
-                    .select(
-                        "v",
-                        F.col("m.dk").alias("dk"),
-                        F.col("m.dv").alias("dv"),
-                    )
-                )
-                if do_jump:
-                    new_min = _reliable.spill_truncate(new_min, "scc-back-base")
-                    jt = new_min.select(
-                        F.col("v").alias("jv"),
-                        F.col("dk").alias("jk"),
-                        F.col("dv").alias("jd"),
-                    )
-                    new_min = (
-                        new_min.join(jt, new_min["dv"] == jt["jv"], "left")
-                        .select(
-                            new_min["v"].alias("v"),
-                            F.least(
-                                F.struct(
-                                    new_min["dk"].alias("dk"),
-                                    new_min["dv"].alias("dv"),
-                                ),
-                                F.struct(
-                                    F.coalesce(F.col("jk"), new_min["dk"]).alias("dk"),
-                                    F.coalesce(F.col("jd"), new_min["dv"]).alias("dv"),
-                                ),
-                            ).alias("m"),
-                        )
-                        .select(
-                            "v",
-                            F.col("m.dk").alias("dk"),
-                            F.col("m.dv").alias("dv"),
-                        )
-                    )
-                d2 = (
-                    new_min.join(
-                        d.select(
-                            "v",
-                            F.col("dk").alias("dk_old"),
-                            F.col("dv").alias("dv_old"),
-                        ),
-                        "v",
-                    )
-                    .select(
-                        "v",
-                        "dk",
-                        "dv",
-                        # Sentinel-closure convergence (round 13): stop
-                        # when no vertex NEWLY reached dk == -1 — the
-                        # frontier walk's own stopping rule. Sound and
-                        # complete: the base step gives every vertex
-                        # the min over its out-neighbors, so a round
-                        # with zero new sentinels proves the marked set
-                        # is one-hop closed, i.e. already the full
-                        # backward-reachable set of the roots. The
-                        # non-sentinel hash keys may still be churning
-                        # — irrelevant, membership only reads dk == -1
-                        # — which is what cuts the shallow-graph round
-                        # count from O(key-mixing) to O(root
-                        # eccentricity), the fix that makes the salted
-                        # machinery competitive with the frontier walk
-                        # at the sf0.1 profile.
-                        ((F.col("dk") == -1) & (F.col("dk_old") != -1)).alias(
-                            "chg"
-                        ),
-                    )
-                )
-                d2 = (
-                    _reliable.spill_truncate(d2, "scc-back")
-                    if do_jump
-                    else d2.transform(_ckpt_lazy)
-                )
-                changed = d2.filter("chg").count()
-                d = d2.select("v", "dk", "dv")
-                if changed == 0:
-                    break
-            mark = (
-                d.filter(F.col("dk") == -1)
-                .join(c, "v")
-                .select("v", "c")
-                .transform(_ckpt)
-            )
-        else:
-            mark = c.filter(F.col("v") == F.col("c")).transform(_ckpt)
-            while rounds_left > 0:
-                rounds_left -= 1
-                # candidate u joins SCC(c(u)) only if it has an edge into
-                # an ALREADY-marked vertex of its own color (reversed-edge
-                # walk restricted to the color partition); lazy checkpoint
-                # — the emptiness count materializes it in the same job
-                new = (
-                    e.join(
-                        mark.select(
-                            F.col("v").alias("dst"), F.col("c").alias("mc")
-                        ),
-                        "dst",
-                    )
-                    .select(F.col("src").alias("v"), "mc")
-                    .join(c, "v")
-                    .filter(F.col("c") == F.col("mc"))
-                    .select("v", "c")
-                    .distinct()
-                    .join(mark.select("v"), "v", "left_anti")
-                    .transform(_ckpt_lazy)
-                )
-                if new.count() == 0:
-                    break
-                mark = mark.unionByName(new).transform(_ckpt_lazy)
-        _note(pass_no, "backward", _r0 - rounds_left, _t0)
+        c = cs.select("v", F.col("k").alias("c"))
+        # --- backward mark within colors, from every root at once.
+        # Restricting edges to c(src) == c(dst) is complete, not just
+        # sound: if c(v) = r then r reaches v along a path whose every
+        # intermediate u has c(u) = r (anything reaching u reaches v,
+        # so c(u) >= c(v) = r; and r reaches u, so c(u) <= r — the
+        # Orzan lemma). Edges never cross classes, so one class's
+        # sentinel cannot leak into another.
+        _t0 = time.perf_counter()
+        cc_src = c.select(F.col("v").alias("src"), F.col("c").alias("c_src"))
+        cc_dst = c.select(F.col("v").alias("dst"), F.col("c").alias("c_dst"))
+        e_back = (
+            e.join(cc_src, "src")
+            .join(cc_dst, "dst")
+            .filter(F.col("c_src") == F.col("c_dst"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .transform(_ckpt)
+        )
+        d0 = c.select(
+            "v",
+            F.when(F.col("v") == F.col("c"), F.lit(-1).cast("bigint"))
+            .otherwise(F.shiftrightunsigned(F.xxhash64(F.col("v")), 1))
+            .alias("k"),
+            F.col("v").alias("p"),
+        )
+        # Sentinel-closure convergence: a round in which no vertex
+        # NEWLY reaches -1 proves the marked set is one-hop closed.
+        # A budget-truncated run only marks vertices with a proven
+        # witness path to their root.
+        d, used, _ = _min_label_fixpoint(
+            e_back,
+            d0,
+            (F.col("k") == -1) & (F.col("k_old") != -1),
+            rounds_left,
+            "scc-back",
+        )
+        rounds_left -= used
+        mark = d.filter(F.col("k") == -1).join(c, "v").select("v", "c").transform(_ckpt)
+        _note(pass_no, "backward", used, _t0)
         done = add(done, mark.select("v", F.col("c").alias("scc_id")))
         remaining = remaining.join(mark.select("v"), "v", "left_anti").transform(_ckpt)
         if not trimmed_any and mark.count() == 0:  # defensive: no progress

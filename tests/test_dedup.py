@@ -96,6 +96,28 @@ def test_connected_components_known_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
 
 
+def test_connected_components_deep_path_converges_by_jumping(spark, caplog):
+    """A 64-vertex path needs 64 one-hop rounds; pointer jumping after
+    the one-hop prefix converges it well inside max_iters=30, with no
+    truncation warning."""
+    import logging
+
+    from bfs_mapreduce_spark.operators.dedup_queries import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "s bigint, d bigint"
+    )
+    with caplog.at_level(
+        logging.WARNING, logger="bfs_mapreduce_spark.operators.dedup_queries"
+    ):
+        got = {
+            r["v"]: r["cluster_id"]
+            for r in connected_components(edges, max_iters=30).collect()
+        }
+    assert not any("connected_components" in r.message for r in caplog.records)
+    assert got == {v: 0 for v in range(64)}
+
+
 def test_embedding_ann_vs_brute_force(spark, sf_oracle_dir):
     """The LSH-bucketed embedding near-dup must (a) emit only true
     >=0.4-cosine pairs with exact scores (verify step is exact, so it

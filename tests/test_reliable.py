@@ -127,6 +127,25 @@ def test_ambient_context_covers_peer_loops(spark, tmp_path):
     assert got == want == [(0, 2), (1, 2), (2, 2)]
 
 
+def test_connected_components_honours_reliable_context(spark, tmp_path):
+    """The near-dup min-label loop truncates through the shared
+    helper, so reliable mode reaches it: same labels as the default
+    path, and its rounds land in the durable directory."""
+    import os
+
+    from bfs_mapreduce_spark.operators.dedup_queries import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)], "s bigint, d bigint"
+    )
+    want = sorted(tuple(r) for r in connected_components(edges).collect())
+    durable = tmp_path / "cc"
+    with reliable.reliable_checkpoints(str(durable)):
+        got = sorted(tuple(r) for r in connected_components(edges).collect())
+    assert got == want
+    assert os.listdir(durable)
+
+
 def test_spill_truncate_resets_optimizer_stats(spark, tmp_path):
     """The round-11 forensic claim as a regression test: a per-round
     state self-join SQUARES the localCheckpoint-carried sizeInBytes
