@@ -16,8 +16,8 @@ Host-noise normalization (round 9): the shared host's throughput
 swings 1.2-1.4x round-to-round, which twice buried real code-level
 wins under slow-host rounds. The CANARY is q1_pricing_summary —
 untouched since round 2, so any change in its time is the HOST, not
-the code. Reps are interleaved canary/query (the A/B methodology from
-benchmarks.py's BFS comparison: alternate the two workloads
+the code. Reps are interleaved canary/query (the paired A/B
+methodology of ``bench.py --ab``: alternate the two workloads
 back-to-back so both sample the same load), giving every query group a
 canary measured under ITS load window. The JSON additionally carries:
 
@@ -187,6 +187,29 @@ def _sign_test_p(wins: int, n: int) -> float:
     return min(1.0, round(p, 6))
 
 
+def _median(xs: list[float]) -> float:
+    xs = sorted(xs)
+    n = len(xs)
+    return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
+
+
+def _paired_summary(pairs: list[dict], old: str = "old", new: str = "new") -> dict:
+    """Paired A/B summary over ``pairs`` (each with ``old``/``new``
+    samples and their ``delta`` = new - old): median delta, median
+    new/old ratio, wins (NEW faster), non-tied pairs and the sign-test
+    p over the non-tied pairs."""
+    deltas = [p["delta"] for p in pairs]
+    wins = sum(1 for d in deltas if d < 0)
+    n_eff = sum(1 for d in deltas if d != 0)
+    return {
+        "median_delta": _median(deltas),
+        "median_ratio": _median([p[new] / p[old] for p in pairs]),
+        "wins": wins,
+        "n_eff": n_eff,
+        "sign_test_p": _sign_test_p(wins, n_eff),
+    }
+
+
 def _clear_training_memo() -> None:
     """Drop the IVF-PQ training entries (``spill_cent``/``pq_book``)
     of similarity_queries._TRAIN_CACHE so a timed rep pays full
@@ -255,16 +278,7 @@ def ab_main(old_name: str, new_name: str) -> None:
             f"new={sample[new_name]:.3f}s",
             file=sys.stderr,
         )
-    deltas = sorted(p["delta"] for p in pairs)
-    n_eff = sum(1 for d in deltas if d != 0)
-    wins = sum(1 for d in deltas if d < 0)  # NEW faster
-    med = deltas[len(deltas) // 2] if len(deltas) % 2 else (
-        deltas[len(deltas) // 2 - 1] + deltas[len(deltas) // 2]
-    ) / 2
-    ratios = sorted(p["new"] / p["old"] for p in pairs)
-    med_ratio = ratios[len(ratios) // 2] if len(ratios) % 2 else (
-        ratios[len(ratios) // 2 - 1] + ratios[len(ratios) // 2]
-    ) / 2
+    s = _paired_summary(pairs)
     print(
         json.dumps(
             {
@@ -272,11 +286,11 @@ def ab_main(old_name: str, new_name: str) -> None:
                 "old": old_name,
                 "new": new_name,
                 "pairs": pairs,
-                "median_delta_sec": round(med, 4),
-                "median_ratio_new_over_old": round(med_ratio, 4),
-                "new_wins": wins,
+                "median_delta_sec": round(s["median_delta"], 4),
+                "median_ratio_new_over_old": round(s["median_ratio"], 4),
+                "new_wins": s["wins"],
                 "n_pairs": len(pairs),
-                "sign_test_p": _sign_test_p(wins, n_eff),
+                "sign_test_p": s["sign_test_p"],
                 "sf_dir": sf_dir,
             }
         )
@@ -456,11 +470,6 @@ def main() -> None:
     # norms. The JSON also reports the spread (max/min over every
     # canary sample of the run) and the derived error bar, so a
     # round-over-round delta inside the bar is host, not code.
-    def _median(xs: list[float]) -> float:
-        xs = sorted(xs)
-        n = len(xs)
-        return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
-
     canary_group = {n: _median(cs) for n, cs in canary_samples.items()}
     total = round(sum(timings.values()), 4)
     all_samples = [c for cs in canary_samples.values() for c in cs]

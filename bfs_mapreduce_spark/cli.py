@@ -109,219 +109,6 @@ def _explain(args: argparse.Namespace) -> int:
     return 0
 
 
-def _parse_graph_spec(spec: str) -> tuple[str, int, int]:
-    try:
-        name, n, m = spec.split(":")
-        return name, int(n), int(m)
-    except ValueError:
-        raise SystemExit(
-            f"--graph expects NAME:N_VERTICES:M_EDGES, got {spec!r}"
-        ) from None
-
-
-def _bench_graph(args: argparse.Namespace) -> int:
-    """Per-round BFS cost vs graph size, or (with --directed) SCC +
-    HyperBall per-phase cost vs layered-SCC graph shape
-    (BASELINE.md scale tables)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import (
-        DIRECTED_GRAPHS,
-        GRAPHS,
-        run_directed_scale,
-        run_graph_scale,
-    )
-
-    spark, owned = _owned_session(app_name="bench_graph_scale")
-    try:
-        if args.directed:
-            graphs = DIRECTED_GRAPHS[:2] if args.quick else DIRECTED_GRAPHS
-            runs = run_directed_scale(spark, graphs, out_dir=args.out_dir)
-        else:
-            if args.graph:
-                graphs = [_parse_graph_spec(s) for s in args.graph]
-            else:
-                graphs = GRAPHS[:2] if args.quick else GRAPHS
-            runs = run_graph_scale(
-                spark,
-                graphs,
-                out_dir=args.out_dir,
-                reliable=args.reliable,
-                with_scc=args.with_scc,
-            )
-        for rec in runs:
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
-def _bench_dedup(args: argparse.Namespace) -> int:
-    """MinHash-LSH / SemDeDup phase timings vs corpus factor
-    (BASELINE.md linearity table)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_dedup_scale
-
-    spark, owned = _owned_session(app_name="bench_dedup_scale")
-    try:
-        for rec in run_dedup_scale(
-            spark, sf_dir=args.sf_dir, factors=args.factor or (1, 10), out_dir=args.out_dir
-        ):
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
-def _bench_llm(args: argparse.Namespace) -> int:
-    """LLM-tier headliner (ivfpq_spill / pack_token_ids /
-    unigram_prune) build/execute cost vs corpus factor
-    (BASELINE.md round-13 scaling table)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_llm_scale
-
-    spark, owned = _owned_session(app_name="bench_llm_scale")
-    try:
-        for rec in run_llm_scale(
-            spark,
-            sf_dir=args.sf_dir,
-            factors=args.factor or (1, 10),
-            out_dir=args.out_dir,
-        ):
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
-def _bench_cdc(args: argparse.Namespace) -> int:
-    """Rate-limited CDC admission + stateful consumption vs corpus
-    factor (BASELINE.md round-14 table)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_cdc_scale
-
-    spark, owned = _owned_session(app_name="bench_cdc_scale")
-    try:
-        for rec in run_cdc_scale(
-            spark,
-            sf_dir=args.sf_dir,
-            factors=args.factor or (1, 10),
-            out_dir=args.out_dir,
-            cap_mb=args.cap_mb,
-        ):
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
-def _bench_meta(args: argparse.Namespace) -> int:
-    """Lakehouse metadata stress: commit latency vs accumulated
-    segments, manifest planning, CAS rebase walk, rewrite_manifests,
-    vacuum (BASELINE.md round-15 table). Pure driver-side metadata —
-    no Spark session."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_meta_scale
-
-    for rec in run_meta_scale(
-        n_commits=args.commits,
-        files_per_commit=args.files_per_commit,
-        cadence=args.cadence,
-    ):
-        print(json.dumps(rec))
-        sys.stdout.flush()
-    return 0
-
-
-def _bench_rowcdc(args: argparse.Namespace) -> int:
-    """Row-level change feed derivation cost vs corpus factor
-    (BASELINE.md round-15 table)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_rowcdc_scale
-
-    spark, owned = _owned_session(app_name="bench_rowcdc_scale")
-    try:
-        for rec in run_rowcdc_scale(
-            spark, sf_dir=args.sf_dir, factors=args.factor or (1, 10)
-        ):
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
-def _bench_stream(args: argparse.Namespace) -> int:
-    """Streaming state-store pressure: rows/s + state rows/bytes per
-    micro-batch under a key-cardinality ramp (BASELINE.md table)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import STREAM_RAMP, run_stream_scale
-
-    spark, owned = _owned_session(app_name="bench_stream_scale")
-    try:
-        ramp = (
-            [(e, u) for e, u in (map(int, s.split("x")) for s in args.ramp)]
-            if args.ramp
-            else STREAM_RAMP
-        )
-        for rec in run_stream_scale(
-            spark, ramp=ramp, out_dir=args.out_dir, state_store=args.state_store
-        ):
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
-def _bench_media(args: argparse.Namespace) -> int:
-    """Per-codec encode/decode throughput (MB pixels /s/core) in the
-    exact configurations the multimodal catalog queries run, plus the
-    phase-split of the video query's per-document pipeline
-    (BASELINE.md codec-tier table). With --factor, the corpus-scale
-    mode instead (round 18): multimodal catalog queries against a
-    factor-staged corpus — per-query seconds, plan exchange counts,
-    and the Arrow-batch envelope per factor."""
-    import json
-
-    if getattr(args, "factor", None):
-        from bfs_mapreduce_spark.benchmarks import run_media_corpus_scale
-
-        spark, owned = _owned_session(app_name="bench_media_scale")
-        try:
-            for rec in run_media_corpus_scale(
-                spark, sf_dir=args.sf_dir, factors=tuple(args.factor)
-            ):
-                print(json.dumps(rec))
-                sys.stdout.flush()
-        finally:
-            if owned:
-                spark.stop()
-        return 0
-    from bfs_mapreduce_spark.benchmarks import run_media_scale
-
-    for rec in run_media_scale(args.sf_dir):
-        print(json.dumps(rec))
-        sys.stdout.flush()
-    return 0
-
-
 def _sql(args: argparse.Namespace) -> int:
     """One SQL statement against snapshot tables from the shell
     (round 18): DML/DDL/maintenance verbs route through
@@ -483,8 +270,8 @@ def _snapshot_alter(args: argparse.Namespace) -> int:
 
 def _snapshot_optimize(args: argparse.Namespace) -> int:
     """OPTIMIZE ZORDER BY / rewrite_manifests / compact for a snapshot
-    table root — the maintenance verbs behind the bench-snapshot
-    profile, actionable from the shell."""
+    table root — the table-format maintenance verbs, actionable from
+    the shell."""
     import json
 
     from bfs_mapreduce_spark.sources import table_snapshots as ts
@@ -629,26 +416,6 @@ def _snapshot_vacuum(args: argparse.Namespace) -> int:
     return 0
 
 
-def _bench_snapshot(args: argparse.Namespace) -> int:
-    """Merge-on-read DELETE cost profile over the snapshot table
-    format (mask vs rewrite — BASELINE.md round-10 table)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_snapshot_scale
-
-    spark, owned = _owned_session(app_name="bench_snapshot_scale")
-    try:
-        for rec in run_snapshot_scale(
-            spark, sf_dir=args.sf_dir, n_files=args.n_files
-        ):
-            print(json.dumps(rec))
-            sys.stdout.flush()
-    finally:
-        if owned:
-            spark.stop()
-    return 0
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="bfs_mapreduce_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -677,119 +444,6 @@ def main(argv: list[str] | None = None) -> int:
         choices=["simple", "extended", "codegen", "cost", "formatted"],
     )
     e.set_defaults(fn=_explain)
-
-    bg = sub.add_parser(
-        "bench-graph",
-        help="per-round BFS cost vs graph size (JSON line per graph)",
-    )
-    bg.add_argument("--quick", action="store_true", help="skip the 10x graph")
-    bg.add_argument(
-        "--directed",
-        action="store_true",
-        help="bench SCC (FW-BW-Trim per-phase) + HyperBall on layered directed graphs",
-    )
-    bg.add_argument(
-        "--graph",
-        action="append",
-        metavar="NAME:N:M",
-        help="synthesize NAME with N vertices / M edges instead of the defaults (repeatable)",
-    )
-    bg.add_argument(
-        "--reliable",
-        action="store_true",
-        help="run BFS with durable per-round checkpoints (fault-tolerant "
-        "mode) to measure the overhead vs default localCheckpoint",
-    )
-    bg.add_argument(
-        "--with-scc",
-        action="store_true",
-        help="also run SCC (per-phase instrumented) on "
-        "each undirected-bench graph treated as a digraph — the x100 "
-        "stress pairing (round 17)",
-    )
-    bg.add_argument("--out-dir", default="/tmp/bfs_mapreduce_spark_scale")
-    bg.set_defaults(fn=_bench_graph)
-
-    bd = sub.add_parser(
-        "bench-dedup",
-        help="MinHash-LSH / SemDeDup phase cost vs corpus factor (JSON line per factor)",
-    )
-    bd.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    bd.add_argument(
-        "--factor",
-        type=int,
-        action="append",
-        help="corpus multiplier (repeatable; default 1 and 10)",
-    )
-    bd.add_argument("--out-dir", default="/tmp/bfs_mapreduce_spark_scale")
-    bd.set_defaults(fn=_bench_dedup)
-
-    bl = sub.add_parser(
-        "bench-llm",
-        help="LLM-tier headliner build/execute cost vs corpus factor (JSON line per factor)",
-    )
-    bl.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    bl.add_argument(
-        "--factor",
-        type=int,
-        action="append",
-        help="corpus multiplier (repeatable; default 1 and 10)",
-    )
-    bl.add_argument("--out-dir", default="/tmp/bfs_mapreduce_spark_scale")
-    bl.set_defaults(fn=_bench_llm)
-
-    bc = sub.add_parser(
-        "bench-cdc",
-        help="rate-limited CDC over a factor-staged multi-file commit "
-        "history: per-batch admitted bytes vs cap + state rows "
-        "(JSON line per factor)",
-    )
-    bc.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    bc.add_argument(
-        "--factor",
-        type=int,
-        action="append",
-        help="corpus multiplier (repeatable; default 1 and 10)",
-    )
-    bc.add_argument("--out-dir", default="/tmp/bfs_mapreduce_spark_scale")
-    bc.add_argument(
-        "--cap-mb",
-        type=float,
-        default=0.5,
-        help="maxBytesPerTrigger for the stream, in MiB",
-    )
-    bc.set_defaults(fn=_bench_cdc)
-
-    bs = sub.add_parser(
-        "bench-stream",
-        help="streaming state-store pressure under a key-cardinality "
-        "ramp (JSON line per stateful operator)",
-    )
-    bs.add_argument(
-        "--ramp",
-        action="append",
-        help="micro-batch spec EVENTSxKEYS (repeatable; default the "
-        "50k-event 1k->8k->8k-repeat ramp)",
-    )
-    bs.add_argument("--out-dir", default="/tmp/bfs_mapreduce_spark_scale")
-    bs.add_argument(
-        "--state-store",
-        choices=("hdfs", "rocksdb"),
-        default="hdfs",
-        help="state-store backend: hdfs = in-heap default, rocksdb = "
-        "native disk-spilling store (the 100 TB key-cardinality path)",
-    )
-    bs.set_defaults(fn=_bench_stream)
-
-    bn = sub.add_parser(
-        "bench-snapshot",
-        help="merge-on-read DELETE cost profile on the snapshot table "
-        "format (JSON line per step: clean read, delete write, MoR "
-        "read, compact, restored read)",
-    )
-    bn.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    bn.add_argument("--n-files", type=int, default=8)
-    bn.set_defaults(fn=_bench_snapshot)
 
     so = sub.add_parser(
         "snapshot-optimize",
@@ -824,33 +478,6 @@ def main(argv: list[str] | None = None) -> int:
     sr.add_argument("root")
     sr.add_argument("version", type=int)
     sr.set_defaults(fn=_snapshot_restore)
-
-    bm = sub.add_parser(
-        "bench-meta",
-        help="lakehouse metadata stress: hundreds of commits x "
-        "thousands of files — commit latency head vs tail, manifest "
-        "resolution, CDC planning, CAS rebase walk, rewrite_manifests, "
-        "vacuum (round 15)",
-    )
-    bm.add_argument("--commits", type=int, default=400)
-    bm.add_argument("--files-per-commit", type=int, default=16)
-    bm.add_argument(
-        "--cadence",
-        type=int,
-        help="set commit.rewrite-segments-every=K on the bench table "
-        "(round 16: the auto manifest-merge cadence under test)",
-    )
-    bm.set_defaults(fn=_bench_meta)
-
-    brc = sub.add_parser(
-        "bench-rowcdc",
-        help="row-level change feed derivation cost vs corpus factor "
-        "(snapshot_row_changes planning + Arrow victim derivation, "
-        "round 15)",
-    )
-    brc.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    brc.add_argument("--factor", type=int, action="append")
-    brc.set_defaults(fn=_bench_rowcdc)
 
     sv = sub.add_parser(
         "snapshot-vacuum",
@@ -993,23 +620,6 @@ def main(argv: list[str] | None = None) -> int:
     sq.add_argument("--target-files", type=int)
     sq.add_argument("--limit", type=int, default=1000)
     sq.set_defaults(fn=_sql)
-
-    bm = sub.add_parser(
-        "bench-media",
-        help="codec-tier throughput: MB/s/core per from-spec codec + "
-        "the video query's per-document phase split (JSON line per codec)",
-    )
-    bm.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    bm.add_argument(
-        "--factor",
-        type=int,
-        action="append",
-        help="corpus-scale mode (round 18): stage a factor-times "
-        "documents corpus and run the multimodal catalog queries "
-        "against it (one JSON line per factor: per-query seconds, "
-        "plan exchange counts, Arrow-batch envelope); repeatable",
-    )
-    bm.set_defaults(fn=_bench_media)
 
     args = ap.parse_args(argv)
     return args.fn(args)

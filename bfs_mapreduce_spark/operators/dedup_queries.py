@@ -344,8 +344,8 @@ def minhash_band_table(
 ) -> DataFrame:
     """Exploded LSH band table ``(doc_id, band, h)`` from
     ``(doc_id, shingles)`` rows — the signature + banding stage of
-    ``minhash_lsh_pairs``, exposed so the scale benchmark can time and
-    count it as its own phase.
+    ``minhash_lsh_pairs``, exposed so its row volume can be counted as
+    its own phase.
 
     Signatures go via shingle ROWS → ``n_hashes`` codegen'd MIN
     aggregates (one shuffle, map-side partial agg). Identical values
@@ -904,10 +904,9 @@ def substring_fingerprints(docs: DataFrame) -> DataFrame:
     EVERY character offset's ``_SUB_L``-gram, built in one codegen'd
     projection (explode + substr + xxhash64 x2); the 40x payload
     blow-up exists only transiently in the row pipeline and anything
-    shuffled downstream is 16 bytes + doc_id per row. Exposed so the
-    scale benchmark (benchmarks.run_dedup_scale) can time and count
-    this stage — the heaviest shuffle-per-byte feed in the repo — as
-    its own phase.
+    shuffled downstream is 16 bytes + doc_id per row. Exposed so this
+    stage — the heaviest shuffle-per-byte feed in the repo — can be
+    counted as its own phase: exactly one row per character offset.
 
     Spreads the input first: the explode multiplies rows ~|text|x
     BEFORE the first shuffle, so a few-split input (the single-file

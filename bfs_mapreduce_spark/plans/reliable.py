@@ -34,8 +34,9 @@ call sites stay signature-stable::
 same contract as Spark's reliable checkpoints (cleanup is a separate
 concern — the caller owns the directory lifetime and must keep it
 until results are materialized, since the returned plan reads from
-it). Cost: one durable write + re-read per round, measured on
-bench-graph in BASELINE.md — the price of surviving executor loss.
+it). Cost: one durable write + re-read per round, measured by
+tools/bench_graph_scale.py --reliable in BASELINE.md — the price of
+surviving executor loss.
 
 Reference parity note: the reference engine (BFS_map_reduce.py) holds
 ALL state in driver memory between rounds, so a single process loss

@@ -467,3 +467,19 @@ def test_bfs_matches_oracle_on_random_multigraphs(spark, seed, kwargs):
         r["id"]: (r["dist"], r["path"] if with_paths else None) for r in res.collect()
     }
     assert got == want
+
+
+def test_bench_graph_scale_custom_shape(spark, capsys, tmp_path):
+    """tools/bench_graph_scale.py emits one JSON line per graph with
+    per-round frontier instrumentation (the BASELINE.md scale-table
+    repro)."""
+    import json
+
+    from tools.bench_graph_scale import main
+
+    rc = main(["--graph", "t:500:2000", "--out-dir", str(tmp_path)])
+    assert rc == 0
+    recs = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
+    assert len(recs) == 1 and recs[0]["graph"] == "t"
+    assert recs[0]["reached"] == 500  # backbone keeps it connected
+    assert recs[0]["round_detail"][0]["frontier"] >= 1

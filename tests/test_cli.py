@@ -90,98 +90,17 @@ def test_cli_explain_unknown(capsys):
     assert main(["explain", "nope"]) == 2
 
 
-def test_cli_bench_graph_custom_shape(capsys, tmp_path):
-    """bench-graph emits one JSON line per graph with per-round
-    frontier instrumentation (the BASELINE.md scale-table repro)."""
-    import json
-
+def test_cli_help_lists_no_bench_verbs(capsys):
+    """The scale-bench harness is not part of the CLI: the graph-scale
+    runner lives in tools/bench_graph_scale.py, and --help lists no
+    bench-* verb."""
     from bfs_mapreduce_spark.cli import main
 
-    rc = main(["bench-graph", "--graph", "t:500:2000", "--out-dir", str(tmp_path)])
-    assert rc == 0
-    recs = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
-    assert len(recs) == 1 and recs[0]["graph"] == "t"
-    assert recs[0]["reached"] == 500  # backbone keeps it connected
-    assert recs[0]["round_detail"][0]["frontier"] >= 1
-
-
-def test_cli_bench_dedup_linearity(capsys, tmp_path):
-    """bench-dedup emits per-phase rows/sec per corpus factor; the
-    planted hot cluster's star candidates must stay CONSTANT across
-    factors and non-star candidates must scale ~linearly (the
-    no-super-linear-phase claim recorded in BASELINE.md)."""
-    import json
-
-    from bfs_mapreduce_spark.cli import main
-
-    rc = main(
-        [
-            "bench-dedup",
-            "--sf-dir",
-            "/root/testdata/sf0.001",
-            "--factor",
-            "1",
-            "--factor",
-            "2",
-            "--out-dir",
-            str(tmp_path),
-        ]
-    )
-    assert rc == 0
-    recs = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
-    assert [r["factor"] for r in recs] == [1, 2]
-    by = {
-        r["factor"]: {p["phase"]: p["rows"] for p in r["lsh_phases"] + r["semantic_phases"]}
-        for r in recs
-    }
-    stars = {r["factor"]: r["lsh_star_candidates"] for r in recs}
-    assert stars[1] == stars[2]  # hot cluster constant => star links constant
-    nonstar = {f: by[f]["lsh_candidates"] - stars[f] for f in (1, 2)}
-    assert nonstar[2] <= 2 * nonstar[1] + 16  # ~linear candidate growth
-    assert by[2]["lsh_band_table"] < 2 * by[1]["lsh_band_table"]  # 2x docs + const hot
-    sem = {f: by[f]["semantic_candidate_pairs"] for f in (1, 2)}
-    # cost linearity: cell count scales with the corpus, cell sizes
-    # stay ~constant, so in-cell pair volume must scale ~linearly
-    assert sem[2] <= 2.5 * sem[1]
-    # exact-substring path (round 10): gram rows — the candidate
-    # volume of the heaviest shuffle-per-byte operator — must scale
-    # ~linearly in corpus chars, never super-linearly
-    sub = {
-        r["factor"]: {p["phase"]: p["rows"] for p in r["substring_phases"]}
-        for r in recs
-    }
-    g1, g2 = (sub[f]["substring_gram_fingerprints"] for f in (1, 2))
-    assert g1 > 0 and g2 <= 2 * g1 + 16
-    assert sub[2]["substring_doc_hits"] <= 2 * sub[1]["substring_doc_hits"] + 16
-
-
-def test_bench_snapshot_profile(spark, sf_smoke_dir, capsys):
-    """bench-snapshot emits the mask-vs-rewrite DELETE profile plus
-    the round-11 upsert contrast (MoR upsert_eq vs CoW merge_into),
-    with consistent row accounting throughout (upserts change values,
-    never the live row count)."""
-    import json
-
-    from bfs_mapreduce_spark.benchmarks import run_snapshot_scale
-
-    recs = list(run_snapshot_scale(spark, sf_dir=sf_smoke_dir, n_files=2, reps=1))
-    steps = [r["step"] for r in recs]
-    assert steps == [
-        "clean_read", "delete_write", "mor_read", "compact",
-        "post_compact_read", "upsert_eq_write", "post_upsert_read",
-        "merge_cow_write", "post_merge_read",
-    ]
-    by = {r["step"]: r for r in recs}
-    assert by["mor_read"]["rows"] == (
-        by["clean_read"]["rows"] - by["delete_write"]["rows_masked"]
-    )
-    live = by["mor_read"]["rows"]
-    for step in ("post_compact_read", "post_upsert_read", "post_merge_read"):
-        assert by[step]["rows"] == live
-    assert by["upsert_eq_write"]["rows_upserted"] > 0
-    assert by["merge_cow_write"]["rows_upserted"] > 0
-    assert all(r["sec"] >= 0 for r in recs)
-    json.dumps(recs)  # each record is JSON-serializable
+    with pytest.raises(SystemExit) as exc:
+        main(["--help"])
+    assert exc.value.code == 0
+    out = capsys.readouterr().out
+    assert "snapshot-vacuum" in out and "bench-" not in out
 
 
 def test_cli_snapshot_vacuum_retention(spark, tmp_path, capsys):
@@ -277,47 +196,6 @@ def test_retention_keep_last_zero_cannot_destroy_table(spark, tmp_path, capsys):
     )
 
 
-def test_cli_bench_cdc_admission(capsys, tmp_path):
-    """bench-cdc (round 14): rate-limited CDC over a factor-staged
-    multi-file commit history — per-batch admitted bytes never exceed
-    cap + one file's overshoot, every staged row is delivered exactly
-    once, and the stateful count's state rows stay |sources|-bounded
-    (never corpus- or batch-scaled)."""
-    import json
-
-    from bfs_mapreduce_spark.cli import main
-
-    rc = main(
-        [
-            "bench-cdc",
-            "--sf-dir",
-            "/root/testdata/sf0.001",
-            "--factor",
-            "1",
-            "--factor",
-            "2",
-            "--cap-mb",
-            "0.02",
-            "--out-dir",
-            str(tmp_path),
-        ]
-    )
-    assert rc == 0
-    recs = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
-    assert [r["factor"] for r in recs] == [1, 2]
-    for r in recs:
-        assert r["walk"]["over_cap_batches"] == []  # cap held per batch
-        assert r["stream"]["rows_consumed"] == r["total_rows"]  # exactly once
-        assert r["stream"]["sum_final_counts"] == r["total_rows"]
-        assert r["stream"]["state_rows"] == r["stream"]["n_sources"]
-    # batch count grows with corpus bytes at a fixed cap — and never
-    # super-linearly (a super-linear count would mean per-trigger
-    # planning re-reads history)
-    b1, b2 = (r["walk"]["n_batches"] for r in recs)
-    assert b2 >= b1
-    assert b2 <= 2 * b1 + 2
-
-
 def test_cli_snapshot_export_iceberg(spark, tmp_path, capsys):
     """snapshot-export-iceberg writes v2 metadata and prints the
     summary + history; the exported layout reads back."""
@@ -345,62 +223,6 @@ def test_cli_snapshot_export_iceberg(spark, tmp_path, capsys):
     assert sorted(
         r["k"] for r in read_iceberg_table(spark, out).collect()
     ) == list(range(8))
-
-
-def test_cli_bench_meta_commit_stays_o_new_files(capsys):
-    """bench-meta (round 15, verdict ask #3): the append commit path
-    must stay O(new files + n_segments) as the table accumulates
-    files — the pre-fix behavior (full base resolution per append)
-    showed tail/head ~11x at 400 commits; the structural invariants
-    here (plus a generous latency-ratio bound) pin the fix."""
-    import json
-
-    from bfs_mapreduce_spark.cli import main
-
-    rc = main(["bench-meta", "--commits", "60", "--files-per-commit", "4"])
-    assert rc == 0
-    recs = {
-        json.loads(ln)["step"]: json.loads(ln)
-        for ln in capsys.readouterr().out.strip().splitlines()
-    }
-    c = recs["commits"]
-    assert c["total_files"] == 240
-    # generous bound (timing on shared CI): the broken path measured
-    # ~2.6x at even 100 commits; the fixed one ~1.0-1.3x
-    assert c["tail_over_head"] < 2.5
-    assert recs["read_manifest_full"]["n_files"] == 240
-    assert recs["cdc_plan_one_commit"]["n_added"] == 4
-    assert recs["rewrite_manifests"]["n_segments_after"] == 1
-    v = recs["vacuum"]
-    assert v["n_live"] == 120 and v["n_deleted"] >= 120
-
-
-def test_cli_bench_rowcdc_late_commit_is_o_commit(capsys):
-    """bench-rowcdc (round 15, verdict ask #6): row-level change
-    derivation is scoped to each COMMIT's files — the late one-file
-    delete's batch plans exactly one partition and emits exactly its
-    victims, independent of table size."""
-    import json
-
-    from bfs_mapreduce_spark.cli import main
-
-    rc = main(
-        ["bench-rowcdc", "--sf-dir", "/root/testdata/sf0.001", "--factor", "1"]
-    )
-    assert rc == 0
-    recs = [
-        json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()
-    ]
-    drains = [r for r in recs if r.get("step") == "capped_drain"]
-    assert len(drains) == 1 and drains[0]["runs"] >= 2  # cap split the history
-    by_v = {r["version"]: r for r in recs if "version" in r}
-    assert by_v[1]["op"] == "append" and by_v[1]["rows_emitted"] > 0
-    assert by_v[5]["op"] == "append" and by_v[5]["n_partitions"] == 1
-    assert by_v[5]["rows_emitted"] == 200
-    assert by_v[6]["op"] == "delete" and by_v[6]["n_partitions"] == 1
-    assert by_v[6]["rows_emitted"] == 100
-    # bulk deletes touch their masked files only (the staged 8)
-    assert by_v[2]["n_partitions"] <= 8
 
 
 def test_cli_snapshot_vacuum_dry_run(spark, tmp_path, capsys):

@@ -437,3 +437,134 @@ def test_substring_remove_cuts_merged_spans_exactly(spark, tmp_path):
     r = out[3]
     assert r.n_spans == 0 and r.removed_chars == 0
     assert r.cleaned_sha == hashlib.sha256(doc_c.encode()).hexdigest()
+
+
+def _replicated_corpus(spark, sf_dir, factor, hot_copies, out_dir):
+    """``factor`` replicas of the smoke corpus plus a constant planted
+    hot cluster. Replica k suffixes every word with ``_k``, so replicas
+    share no shingles and the true near-dup structure grows exactly
+    linearly. Embedding replica k is rotated by a seeded orthogonal
+    matrix: within-replica cosines are preserved, cross-replica ones
+    fall to noise, and its labels are offset so the cell count grows
+    with the corpus. Returns ``(documents frame, dir holding
+    embeddings.parquet)``."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bfs_mapreduce_spark.sources.readers import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    doc_ids = pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id"])
+    stride = max(doc_ids.column("doc_id").to_pylist()) + 1
+    parts = [docs]
+    for k in range(1, factor):
+        suffix = F.lit(f"_{k}")
+        parts.append(
+            docs.select(
+                (F.col("doc_id") + k * stride).alias("doc_id"),
+                F.array_join(
+                    F.transform(F.split("text", " "), lambda w: F.concat(w, suffix)),
+                    " ",
+                ).alias("text"),
+            )
+        )
+    hot_text = " ".join(
+        ["terms of service privacy policy all rights reserved contact us"] * 5
+    )
+    parts.append(
+        spark.range(hot_copies).select(
+            (F.col("id") + factor * stride).alias("doc_id"),
+            F.lit(hot_text).alias("text"),
+        )
+    )
+    corpus = parts[0]
+    for p in parts[1:]:
+        corpus = corpus.unionByName(p)
+
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    vecs = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
+    labels = np.asarray(emb.column("label").to_pylist(), dtype=np.int32)
+    vec_ids = np.asarray(emb.column("vec_id").to_pylist())
+    vstride = int(vec_ids.max()) + 1
+    ids, embs, labs = [], [], []
+    for k in range(factor):
+        rot = np.eye(vecs.shape[1])
+        if k:
+            rot, _ = np.linalg.qr(
+                np.random.default_rng(1000 + k).standard_normal(rot.shape)
+            )
+        ids.append(vec_ids + k * vstride)
+        embs.append((vecs @ rot.T).astype(np.float32))
+        labs.append(labels + k * 1000)
+    root = os.path.join(out_dir, f"x{factor}")
+    os.makedirs(root)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": np.concatenate(ids),
+                "embedding": list(np.concatenate(embs)),
+                "label": np.concatenate(labs),
+            }
+        ),
+        os.path.join(root, "embeddings.parquet"),
+    )
+    return corpus, root
+
+
+def test_dedup_phase_rows_grow_linearly_with_corpus(spark, sf_smoke_dir, tmp_path):
+    """No dedup phase's row volume grows super-linearly in the corpus:
+    at 1x and 2x replicas of the smoke corpus plus a CONSTANT planted
+    hot cluster, the hot cluster's star candidates stay equal, while
+    non-star LSH candidates, band-table rows, the semantic in-cell
+    pair volume and substring gram rows grow at most linearly. Gram
+    rows are exact: one per character offset, sum(len - L + 1)."""
+    from bfs_mapreduce_spark.operators.dedup_queries import (
+        _SUB_L,
+        lsh_candidates,
+        minhash_band_table,
+        q_dedup_semantic,
+        shingle_arrays,
+        substring_fingerprints,
+    )
+
+    hot = 100  # above lsh_candidates' default 64-row bucket cap
+    rows = {}
+    for factor in (1, 2):
+        docs, emb_dir = _replicated_corpus(
+            spark, sf_smoke_dir, factor, hot, str(tmp_path)
+        )
+        bt = minhash_band_table(shingle_arrays(docs)).cache()
+        n_cand, n_star = (
+            lsh_candidates(bt)
+            .agg(F.count(F.lit(1)), F.sum(F.col("star").cast("int")))
+            .first()
+        )
+        sem = q_dedup_semantic(spark, emb_dir)
+        sdocs = docs.filter(F.length("text") >= _SUB_L)
+        rows[factor] = {
+            "band_table": bt.count(),
+            "candidates": n_cand,
+            "star": n_star,
+            "semantic_pairs": sem.groupBy("cell")
+            .count()
+            .agg(F.sum(F.expr("count * (count - 1) / 2")))
+            .first()[0],
+            "grams": substring_fingerprints(sdocs).count(),
+            "grams_want": sdocs.agg(
+                F.sum(F.length("text") - _SUB_L + 1)
+            ).first()[0],
+        }
+        bt.unpersist()
+    r1, r2 = rows[1], rows[2]
+    # every band bucket of the hot cluster is one star on its canonical
+    assert r1["star"] == r2["star"] == hot - 1, rows
+    nonstar = {f: r["candidates"] - r["star"] for f, r in rows.items()}
+    assert nonstar[1] > 0 and nonstar[2] <= 2 * nonstar[1] + 16, rows
+    assert r2["band_table"] < 2 * r1["band_table"], rows  # 2x docs + const hot
+    assert r1["semantic_pairs"] > 0
+    assert r2["semantic_pairs"] <= 2.5 * r1["semantic_pairs"], rows
+    for r in (r1, r2):
+        assert r["grams"] == r["grams_want"] > 0, rows

@@ -5456,3 +5456,73 @@ def test_vacuum_orphans_raced_with_live_stager(spark, tmp_path):
     v2 = ts.commit(root, staged_live[-1:], base_version=1)
     assert v2 == 2
     assert ts.read(spark, root).count() == 13
+
+
+def test_append_commit_json_reads_stay_o_new_files(tmp_path, monkeypatch):
+    """An append commit reads O(new files + segments) of metadata,
+    never O(table files): a tail append into a 60-commit, 240-file
+    table opens no more manifest/segment JSON than the second append
+    into a fresh one (counted by wrapping the module's ``open``). The
+    accumulated table's own counts hold too: 240 files resolve, CDC
+    planning of the last commit sees its 4 files, rewrite_manifests
+    collapses to one segment, and vacuum after a half-replace expires
+    exactly the first half."""
+    import builtins
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+    from bfs_mapreduce_spark.sources.snapshot_changes_source import (
+        SnapshotChangesStreamReader,
+    )
+
+    root = str(tmp_path / "tbl")
+    n_commits, per_commit = 60, 4
+
+    def stage(ci):
+        d = os.path.join(root, "data", f"c{ci:05d}")
+        os.makedirs(d)
+        out = []
+        for fi in range(per_commit):
+            p = os.path.join(d, f"part-{fi}.parquet")
+            pq.write_table(pa.table({"k": [ci * per_commit + fi]}), p)
+            out.append(p)
+        return out
+
+    json_reads = []
+
+    def counting_open(path, mode="r", *args, **kwargs):
+        if "r" in mode and str(path).endswith(".json"):
+            json_reads.append(path)
+        return builtins.open(path, mode, *args, **kwargs)
+
+    reads_per_commit = []
+    v = 0
+    for ci in range(n_commits):
+        files = stage(ci)
+        json_reads.clear()
+        monkeypatch.setattr(ts, "open", counting_open, raising=False)
+        v = ts.commit(root, files, base_version=v)
+        monkeypatch.delattr(ts, "open")
+        reads_per_commit.append(len(json_reads))
+    head, tail = reads_per_commit[1], reads_per_commit[-1]
+    assert 1 <= tail <= head, reads_per_commit
+
+    assert len(ts.read_manifest(root)["files"]) == n_commits * per_commit
+    reader = SnapshotChangesStreamReader({"path": root, "startingVersion": str(v)})
+    assert len(reader._additions(v)) == per_commit
+    v = ts.rewrite_manifests(root)
+    m = ts.read_manifest(root)
+    assert len(m.get("_segments") or []) == 1
+
+    # one replace keeps the second half: the first half's files expire
+    keep = [
+        f for f in m["files"]
+        if int(os.path.basename(os.path.dirname(f))[1:]) >= n_commits // 2
+    ]
+    v = ts.commit(root, keep, base_version=v, replace=True)
+    deleted = ts.vacuum(root, retain_from=v)
+    assert len(ts.read_manifest(root)["files"]) == 120
+    assert len(deleted) >= 120
+

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.sources.readers import load_table
@@ -97,32 +98,92 @@ def test_foreachbatch_sink_round_trip(spark, sf_smoke_dir, tmp_path):
     assert spark.read.parquet(out).count() == total_src
 
 
-def test_stream_state_linear_in_keys_not_events(spark, tmp_path):
-    """run_stream_scale's claim (BASELINE.md round-9 table): stateful
-    streaming state grows with KEYS, never with events. The custom
-    stateful counter's state rows must equal cumulative distinct keys
-    per batch — including the final repeated-key batch, where events
-    keep flowing but state must not grow — and the session-window
-    leg's state must stay watermark-bounded (~current batch's
-    sessions), not cumulative."""
-    from bfs_mapreduce_spark.benchmarks import run_stream_scale
+@pytest.mark.parametrize("store", ["hdfs", "rocksdb"])
+def test_stream_state_tracks_keys_not_events(spark, tmp_path, store):
+    """Stateful streaming state grows with KEYS, never with events, on
+    both state-store providers. Over staged micro-batches of 50, 100
+    and again 100 keys (1,000 events each), running_user_counts holds
+    exactly the cumulative distinct keys — the repeated-key batch
+    touches 100 rows and adds none — and session_counts' watermark
+    eviction keeps its state below the cumulative session count. The
+    session confs the test sets are restored afterwards."""
+    provider = {
+        "hdfs": "HDFSBackedStateStoreProvider",
+        "rocksdb": "RocksDBStateStoreProvider",
+    }[store]
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    ramp = [(2_000, 100), (2_000, 200), (2_000, 200)]
-    recs = {r["op"]: r for r in run_stream_scale(spark, ramp, str(tmp_path))}
+    ramp = [(1_000, 50), (1_000, 100), (1_000, 100)]
+    src = tmp_path / "events"
+    src.mkdir()
+    for b, (events, users) in enumerate(ramp):
+        # nested key sets; each batch a 10-minute burst 4 hours after
+        # the last, far past the session watermark
+        i = np.arange(events)
+        ts_us = (1_700_000_000 + b * 14_400 + i % 600) * 1_000_000
+        pq.write_table(
+            pa.table(
+                {
+                    "user_id": i % users + 1,
+                    "ts": pa.array(ts_us, pa.timestamp("us", tz="UTC")),
+                }
+            ),
+            str(src / f"batch_{b:03d}.parquet"),
+        )
 
-    counts = recs["running_user_counts"]["batches"]
-    data_batches = [b for b in counts if b["rows_in"]]
-    assert [b["state_rows"] for b in data_batches] == [100, 200, 200]
-    assert data_batches[-1]["state_rows_updated"] == 200  # keys touched,
-    # yet zero NEW state rows: 2000 more events, state unchanged
-    assert sum(b["rows_in"] for b in data_batches) == 6_000
-    assert all(b["state_bytes"] > 0 for b in data_batches)
+    def start(name, build, mode):
+        stream = (
+            spark.readStream.schema("user_id bigint, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "batch_*.parquet"))
+        )
+        return (
+            build(stream)
+            .writeStream.foreachBatch(
+                lambda b, _i: b.write.format("noop").mode("overwrite").save()
+            )
+            .outputMode(mode)
+            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
 
-    sessions = recs["session_counts"]["batches"]
-    # watermark eviction: final state holds only the last batch's
-    # sessions (200), never the cumulative 500 the ramp produced
-    assert sessions[-1]["state_rows"] <= 400
-    assert max(b["state_rows"] for b in sessions) < 500
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            f"org.apache.spark.sql.execution.streaming.state.{provider}"
+        ),
+        "spark.sql.shuffle.partitions": "1",  # one state store per batch
+    }
+    before = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    queries = []
+    try:
+        # the two stateful queries run side by side on the same batches
+        queries.append(start("counts", running_user_counts, "update"))
+        queries.append(start("sessions", session_counts, "append"))
+        for q in queries:
+            q.awaitTermination()
+        counts, sessions = (q.recentProgress for q in queries)
+    finally:
+        for q in queries:
+            q.stop()
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert {k: spark.conf.get(k, None) for k in confs} == before
+
+    data = [p for p in counts if p["numInputRows"]]
+    assert sum(p["numInputRows"] for p in data) == 3_000
+    state = [p["stateOperators"][0] for p in data]
+    assert [s["numRowsTotal"] for s in state] == [50, 100, 100]
+    assert state[-1]["numRowsUpdated"] == 100  # touched, none new
+    session_state = [p["stateOperators"][0]["numRowsTotal"] for p in sessions]
+    assert max(session_state) < sum(u for _e, u in ramp)
 
 
 def test_stream_dedup_ingest_checkpoint_recovery(spark, sf_smoke_dir, tmp_path):
@@ -213,34 +274,6 @@ def test_stream_dedup_ingest_checkpoint_recovery(spark, sf_smoke_dir, tmp_path):
     lb = compact_store(spark, control, max_bucket_rows=mb)
     assert la.join(lb, ["doc_a", "doc_b"], "left_anti").count() == 0
     assert lb.join(la, ["doc_a", "doc_b"], "left_anti").count() == 0
-
-
-def test_stream_state_semantics_identical_on_rocksdb(spark, tmp_path):
-    """The RocksDB state-store backend (the disk-spilling provider a
-    100 TB key cardinality needs) must report the SAME state-rows
-    semantics as the default in-heap store on the same ramp — state
-    tracks cumulative distinct keys exactly, repeated-key batches add
-    zero rows — and the provider conf must be restored afterwards."""
-    from bfs_mapreduce_spark.benchmarks import run_stream_scale
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key, None)
-    ramp = [(1_000, 50), (1_000, 100), (1_000, 100)]
-    recs = {
-        r["op"]: r
-        for r in run_stream_scale(
-            spark, ramp, str(tmp_path), state_store="rocksdb"
-        )
-    }
-    assert all(r["state_store"] == "rocksdb" for r in recs.values())
-    counts = [
-        b
-        for b in recs["running_user_counts"]["batches"]
-        if b["rows_in"]
-    ]
-    assert [b["state_rows"] for b in counts] == [50, 100, 100]
-    assert sum(b["rows_in"] for b in counts) == 3_000
-    assert spark.conf.get(key, None) == before  # conf restored
 
 
 def test_snapshot_txn_guard_idempotent(spark, tmp_path):
@@ -1137,3 +1170,175 @@ def test_row_changes_drain_survives_zero_row_batches(spark, tmp_path):
     # v3's rows undelivered
     assert sorted(got) == list(range(8)) + list(range(100, 108))
     assert runs == 2  # two non-empty runs; the empty v2 batch is free
+
+
+def test_snapshot_changes_byte_cap_admission_counts(spark, sf_smoke_dir, tmp_path):
+    """maxBytesPerTrigger admission control, counted on a multi-commit,
+    multi-file history of the documents table: every batch the reader
+    admits stays within cap + one file (dropping its last file leaves
+    it under the cap), every staged file is admitted exactly once, and
+    the batch count grows at most linearly when the history doubles.
+    A stateful count by source over the same capped stream delivers
+    every row exactly once and holds one state row per source."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+    from bfs_mapreduce_spark.sources.snapshot_changes_source import (
+        SnapshotChangesStreamReader,
+        register_snapshot_changes_source,
+    )
+
+    docs = pq.read_table(
+        os.path.join(sf_smoke_dir, "documents.parquet"),
+        columns=["doc_id", "source", "text"],
+    )
+    stride = pc.max(docs["doc_id"]).as_py() + 1
+
+    def stage(factor):
+        """``factor`` copies of the documents, two 4-file commits each."""
+        root = str(tmp_path / f"x{factor}")
+        os.makedirs(root)
+        v = 0
+        for r in range(factor):
+            for half in range(2):
+                part = docs.filter(
+                    pc.equal(pc.bit_wise_and(docs["doc_id"], 1), half)
+                )
+                part = part.set_column(
+                    0, "doc_id", pc.add(part["doc_id"], r * stride)
+                )
+                files = []
+                for j in range(4):
+                    lo, hi = j * part.num_rows // 4, (j + 1) * part.num_rows // 4
+                    files.append(os.path.join(root, f"c{r}_{half}_{j}.parquet"))
+                    pq.write_table(part.slice(lo, hi - lo), files[-1])
+                v = ts.commit(
+                    root, files, base_version=v, stats=ts.collect_stats(files, [])
+                )
+        return root
+
+    roots = {f: stage(f) for f in (1, 2)}
+    sizes = {
+        f: {p: s["bytes"] for p, s in ts.read_manifest(root)["stats"].items()}
+        for f, root in roots.items()
+    }
+    cap = int(2.5 * sum(sizes[1].values()) / len(sizes[1]))
+
+    n_batches = {}
+    for f, root in roots.items():
+        rdr = SnapshotChangesStreamReader(
+            {"path": root, "startingVersion": "0", "maxBytesPerTrigger": str(cap)}
+        )
+        off, admitted, batches = rdr.initialOffset(), [], 0
+        while (nxt := rdr.latestOffset()) != off:
+            paths = [p.path for p in rdr.partitions(off, nxt)]
+            assert paths
+            assert sum(sizes[f][p] for p in paths[:-1]) < cap
+            admitted += paths
+            batches += 1
+            rdr.commit(nxt)
+            off = nxt
+        assert sorted(admitted) == sorted(sizes[f])
+        n_batches[f] = batches
+    assert 2 <= n_batches[1] <= n_batches[2] <= 2 * n_batches[1] + 2
+
+    register_snapshot_changes_source(spark)
+    final: dict = {}
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, 1)  # one state store per batch: the count is the point
+    try:
+        q = (
+            spark.readStream.format("snapshot_changes")
+            .option("path", roots[1])
+            .option("startingVersion", 0)
+            .option("maxBytesPerTrigger", cap)
+            .load()
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .writeStream.outputMode("update")
+            .foreachBatch(
+                lambda b, _i: final.update(
+                    {r["source"]: r["n"] for r in b.collect()}
+                )
+            )
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            progress = {p["batchId"]: p for p in q.recentProgress}
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, before)
+    assert sum(p["numInputRows"] for p in progress.values()) == docs.num_rows
+    assert sum(final.values()) == docs.num_rows
+    state_rows = max(
+        so["numRowsTotal"] for p in progress.values() for so in p["stateOperators"]
+    )
+    assert state_rows == len(pc.unique(docs["source"]))
+
+
+def test_row_changes_late_commit_plans_one_partition(spark, tmp_path):
+    """Row-level change derivation is scoped to each COMMIT's files,
+    never the table: after an 8-file append, a position delete, an
+    upsert and an equality delete, a late one-file append and a late
+    one-file delete each plan exactly one partition and emit exactly
+    their rows. (A capped drain splitting a history into several runs
+    is test_snapshot_row_changes_rate_limited_drain.)"""
+    import os
+
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+    from bfs_mapreduce_spark.sources.snapshot_row_changes_source import (
+        SnapshotRowChangesStreamReader,
+    )
+
+    root = str(tmp_path / "tbl")
+    os.makedirs(root)
+    docs = spark.range(2_000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("s"), F.col("id") % 5).alias("source"),
+    )
+    ts.commit(
+        root,
+        ts.stage_files(docs.repartition(8), root),
+        base_version=0,
+        schema=docs.schema.json(),
+    )
+    ts.delete_where(spark, root, "doc_id % 7 = 0")
+    ts.upsert_eq(
+        spark,
+        root,
+        docs.filter(F.col("doc_id") % 11 == 0).withColumn("source", F.lit("up")),
+        ["doc_id"],
+    )
+    ts.delete_eq(spark, root, docs.filter(F.col("doc_id") % 13 == 0).select("doc_id"))
+    late = spark.range(10**9, 10**9 + 200).select(
+        F.col("id").alias("doc_id"), F.lit("late").alias("source")
+    )
+    v_append = ts.commit(
+        root,
+        ts.stage_files(late.coalesce(1), root),
+        base_version=ts.current_version(root),
+    )
+    v_delete, n_late, _ = ts.delete_where(
+        spark, root, "doc_id >= 1000000000 AND doc_id % 2 = 0"
+    )
+    assert n_late == 100
+
+    reader = SnapshotRowChangesStreamReader({"path": root, "startingVersion": "0"})
+
+    def plan(v):
+        parts = reader.partitions({"v": v - 1}, {"v": v})
+        rows = sum(b.num_rows for p in parts for b in reader.read(p))
+        return len(parts), rows
+
+    assert plan(1) == (8, 2_000)
+    assert plan(2)[0] <= 8  # the bulk delete touches its masked files only
+    assert plan(v_append) == (1, 200)
+    assert plan(v_delete) == (1, 100)

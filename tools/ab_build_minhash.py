@@ -3,6 +3,8 @@ Execute side is plan-identical (explain dumps byte-equal in shape), so
 this times ONLY what changed: catalog build() incl. eager-checkpoint jobs.
 """
 import json, os, subprocess, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import _paired_summary  # bench.py sits at the repo root
 CHILD = r"""
 import sys, time, json
 sys.path.insert(0, sys.argv[1])
@@ -39,16 +41,10 @@ for i in range(n):
         s[lab] = sample(c, query, sf)
     pairs.append({"old": s["old"], "new": s["new"], "delta": round(s["new"]-s["old"], 4)})
     print(f"# pair {i+1}: old={s['old']:.3f} new={s['new']:.3f}", file=sys.stderr)
-deltas = sorted(p["delta"] for p in pairs)
-wins = sum(1 for d in deltas if d < 0)
-from math import comb
-n_eff = sum(1 for d in deltas if d != 0)
-k = max(wins, n_eff - wins)
-p = min(1.0, sum(comb(n_eff, i) for i in range(k, n_eff+1)) / 2**n_eff * 2)
-ratios = sorted(pp["new"]/pp["old"] for pp in pairs)
+s = _paired_summary(pairs)
 print(json.dumps({"metric": "ab_build_paired", "query": query,
   "what": "build()+analysis only; execute plan-identical (plans/r19 minhash before/after same shape)",
   "old_checkout": old, "new_checkout": new, "pairs": pairs,
-  "median_delta_sec": deltas[len(deltas)//2],
-  "median_ratio_new_over_old": round(ratios[len(ratios)//2], 4),
-  "new_wins": wins, "n_pairs": len(pairs), "sign_test_p": round(p, 6), "sf_dir": sf}))
+  "median_delta_sec": s["median_delta"],
+  "median_ratio_new_over_old": round(s["median_ratio"], 4),
+  "new_wins": s["wins"], "n_pairs": len(pairs), "sign_test_p": s["sign_test_p"], "sf_dir": sf}))

@@ -24,7 +24,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench import _sign_test_p  # noqa: E402  (bench.py sits at the repo root)
+from bench import _paired_summary  # noqa: E402  (bench.py sits at the repo root)
 
 _CHILD = r"""
 import sys, time, json
@@ -81,16 +81,7 @@ def main() -> None:
             f"# pair {i+1}/{pairs_n}: old={s['old']:.3f}s new={s['new']:.3f}s",
             file=sys.stderr,
         )
-    deltas = sorted(p["delta"] for p in pairs)
-    wins = sum(1 for d in deltas if d < 0)
-    n_eff = sum(1 for d in deltas if d != 0)
-    med = deltas[len(deltas) // 2] if len(deltas) % 2 else (
-        deltas[len(deltas) // 2 - 1] + deltas[len(deltas) // 2]
-    ) / 2
-    ratios = sorted(p["new"] / p["old"] for p in pairs)
-    med_ratio = ratios[len(ratios) // 2] if len(ratios) % 2 else (
-        ratios[len(ratios) // 2 - 1] + ratios[len(ratios) // 2]
-    ) / 2
+    s = _paired_summary(pairs)
     print(
         json.dumps(
             {
@@ -99,11 +90,11 @@ def main() -> None:
                 "old_checkout": old,
                 "new_checkout": new,
                 "pairs": pairs,
-                "median_delta_sec": round(med, 4),
-                "median_ratio_new_over_old": round(med_ratio, 4),
-                "new_wins": wins,
+                "median_delta_sec": round(s["median_delta"], 4),
+                "median_ratio_new_over_old": round(s["median_ratio"], 4),
+                "new_wins": s["wins"],
                 "n_pairs": pairs_n,
-                "sign_test_p": _sign_test_p(wins, n_eff),
+                "sign_test_p": s["sign_test_p"],
                 "sf_dir": sf_dir,
             }
         )

@@ -9,7 +9,7 @@ delete-mask path, and pairs a 2-column aggregate over the projected
 scan (``columns`` option) against the same aggregate over the full
 scan. Interleaved pairs, exact sign test — the standard instrument.
 
-    PYTHONPATH=/root/repo python tools/ab_snapshot_projection.py [PAIRS]
+    python tools/ab_snapshot_projection.py [PAIRS]
 """
 
 from __future__ import annotations
@@ -20,11 +20,13 @@ import shutil
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import _paired_summary  # noqa: E402  (bench.py sits at the repo root)
+
 
 def main() -> None:
     pairs_n = int(sys.argv[1]) if len(sys.argv) > 1 else 7
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sys.path.insert(0, "/root/repo")
     from pyspark.sql import functions as F
 
     from bfs_mapreduce_spark.session import get_session
@@ -98,18 +100,7 @@ def main() -> None:
             f"projected={s[True]:.3f}s",
             file=sys.stderr,
         )
-    from math import comb
-
-    deltas = sorted(p["delta"] for p in pairs)
-    wins = sum(1 for d in deltas if d < 0)
-    n_eff = sum(1 for d in deltas if d != 0)
-    k = max(wins, n_eff - wins)
-    pval = (
-        min(1.0, sum(comb(n_eff, i) for i in range(k, n_eff + 1)) / 2**n_eff * 2)
-        if n_eff
-        else 1.0
-    )
-    ratios = sorted(p["projected"] / p["full"] for p in pairs)
+    s = _paired_summary(pairs, old="full", new="projected")
     print(
         json.dumps(
             {
@@ -118,13 +109,11 @@ def main() -> None:
                 "projected (columns option) vs full scan",
                 "n_columns": len(wide.columns),
                 "pairs": pairs,
-                "median_delta_sec": deltas[len(deltas) // 2],
-                "median_ratio_projected_over_full": round(
-                    ratios[len(ratios) // 2], 4
-                ),
-                "projected_wins": wins,
+                "median_delta_sec": s["median_delta"],
+                "median_ratio_projected_over_full": round(s["median_ratio"], 4),
+                "projected_wins": s["wins"],
                 "n_pairs": len(pairs),
-                "sign_test_p": round(pval, 6),
+                "sign_test_p": s["sign_test_p"],
                 "sf_dir": sf_dir,
             }
         )
