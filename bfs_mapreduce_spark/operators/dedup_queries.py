@@ -1379,10 +1379,9 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     return labels.select("v", F.col("k").alias("cluster_id"))
 
 
-# Shared by BOTH clustering entries: the transitive closure of the
-# jaccard>=0.3 pair graph as a UNION-deduped recursive CTE — the two
-# engine-side algorithms (min-label propagation, large-star/small-star)
-# must produce identical labels, so they share one oracle.
+# The transitive closure of the jaccard>=0.3 pair graph as a
+# UNION-deduped recursive CTE: an independent SQL statement of the
+# labels min-label propagation computes.
 _CLUSTERS_ORACLE = """
     WITH RECURSIVE sh AS (
       SELECT doc_id, CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -1418,38 +1417,17 @@ _CLUSTERS_ORACLE = """
     oracle=_CLUSTERS_ORACLE,
     doc="Near-dup clusters: jaccard>=0.3 pairs -> connected components "
     "(min-label propagation with pointer jumping after 8 one-hop "
-    "rounds, O(log diameter) rounds) -> cluster_id = min "
-    "doc in component (the canonical keeper). Oracle = transitive "
-    "closure as a UNION-deduped recursive CTE. The pair graph is tiny "
-    "relative to the corpus, so clustering cost is negligible next to "
-    "candidate generation.",
+    "rounds, O(log diameter) rounds, one driver action per round) -> "
+    "cluster_id = min doc in component (the canonical keeper). Oracle "
+    "= transitive closure as a UNION-deduped recursive CTE. The pair "
+    "graph is tiny relative to the corpus, so clustering cost is "
+    "negligible next to candidate generation.",
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select(
         F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
     )
     return connected_components(pairs).select(
-        F.col("v").alias("doc_id"), "cluster_id"
-    )
-
-
-@register(
-    "q_dedup_clusters_star",
-    oracle=_CLUSTERS_ORACLE,
-    doc="Same clusters, computed by the O(log d)-round "
-    "large-star/small-star algorithm (operators/graph.py: "
-    "connected_components_star) instead of min-label propagation — "
-    "also O(log d) rounds on large diameters, with localCheckpoint "
-    "truncation where min-label's jump rounds spill to parquet. Shares q_dedup_clusters' oracle: both algorithms must land "
-    "on identical (doc_id, cluster_id = component min) labels.",
-)
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bfs_mapreduce_spark.operators.graph import connected_components_star
-
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    return connected_components_star(pairs).select(
         F.col("v").alias("doc_id"), "cluster_id"
     )
 

@@ -52,7 +52,6 @@ from __future__ import annotations
 
 import contextlib
 import logging
-import os
 import threading
 import time
 
@@ -61,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from bfs_mapreduce_spark.plans import reliable as _reliable
+from bfs_mapreduce_spark.plans.introspect import source_bytes
 
 logger = logging.getLogger(__name__)
 
@@ -187,15 +187,8 @@ def _auto_edge_partitions(edges: DataFrame, directed: bool) -> int:
     floor, is what scales. Falls back to the session default whenever
     input bytes are unknowable (in-memory frames, non-file sources)."""
     default_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        files = edges.inputFiles()
-        if not files:
-            return default_parts
-        total = 0
-        for uri in files:
-            path = uri[5:] if uri.startswith("file:") else uri
-            total += os.path.getsize(path)
-    except Exception:  # remote FS / permissions / exotic source
+    total = source_bytes(edges)
+    if total is None:
         return default_parts
     if not directed:
         total *= 2
@@ -231,8 +224,8 @@ def bfs(
     directory (HDFS/object store on a real cluster): sugar for running
     the call inside ``plans.reliable.reliable_checkpoints(dir)``. The
     spill files back the RETURNED plan too — keep the directory until
-    results are materialized. Overhead is measured in BASELINE.md
-    (bench-graph reliable rows).
+    results are materialized. ``tools/bench_graph_scale.py
+    --reliable`` measures the overhead.
     Pass ``sources=[...]`` for the multi-source form — dist becomes
     distance to the NEAREST seed and path starts at that seed (the
     distance-to-seed primitive behind label propagation / partition
@@ -256,8 +249,8 @@ def bfs(
 
     Pass a dict as ``stats`` to receive per-round instrumentation:
     ``stats["rounds"]`` = list of ``(round_no, frontier_size,
-    seconds)`` — the raw data behind the scale benchmarks in
-    BASELINE.md (per-round cost vs graph size).
+    seconds)`` — per-round cost vs graph size, as
+    ``tools/bench_graph_scale.py`` reports it.
 
     Returns ``(id BIGINT, dist BIGINT, path ARRAY<BIGINT>)`` for every
     vertex that appears in ``edges`` (plus the source), ``dist``/``path``
@@ -665,6 +658,13 @@ def sssp(
     (O(reached vertices)); the edge side stays partitioned/persisted.
     Cost accumulation is per-path left-to-right, so results are exact
     and reproducible (min over identical walk-cost sets).
+
+    Each round is one driver action (:func:`_fixpoint`): the relaxed
+    costs are compared with the old ones inside the round's lazy
+    checkpoint, and counting the improved rows both materializes the
+    round and decides the fixed point. A truncated run with
+    ``warn_on_truncation`` pays one more relax round, whose result is
+    dropped, to decide whether to warn.
     """
     spark = edges.sparkSession
     e = edges.select(
@@ -673,61 +673,36 @@ def sssp(
         F.col("w").cast("double").alias("w"),
     ).repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
 
-    dist = spark.createDataFrame([(source, 0.0)], "id bigint, cost double").transform(_ckpt)
-    converged = False
-    for _hop in range(max_hops):
-        cand = dist.join(e, dist["id"] == e["src"]).select(
-            e["dst"].alias("id"), (dist["cost"] + e["w"]).alias("cost")
+    def relax(dist: DataFrame, _r: int) -> DataFrame:
+        old = dist.select("id", F.col("cost").alias("old"), F.lit(True).alias("seen"))
+        cand = e.join(old.withColumnRenamed("id", "src"), "src").select(
+            F.col("dst").alias("id"), (F.col("old") + F.col("w")).alias("cost")
         )
-        new_dist = (
-            dist.unionByName(cand)
-            .groupBy("id")
-            .agg(F.min("cost").alias("cost"))
-            .transform(_ckpt)
+        new = dist.select("id", "cost").unionByName(cand)
+        new = new.groupBy("id").agg(F.min("cost").alias("cost"))
+        chg = F.col("seen").isNull() | (F.col("cost") < F.col("old"))  # new or improved
+        return (
+            new.join(old, "id", "left")
+            .select("id", "cost", chg.alias("chg"))
+            .transform(_ckpt_lazy)
         )
-        # fixpoint early-exit: no vertex improved and none added
-        if new_dist.count() == dist.count():
-            improved = (
-                new_dist.alias("n")
-                .join(dist.alias("o"), "id")
-                .filter(F.col("n.cost") < F.col("o.cost"))
-            )
-            if improved.isEmpty():
-                dist = new_dist
-                converged = True
-                break
-        dist = new_dist
 
-    if not converged and warn_on_truncation:
-        # Same loud-truncation contract as bfs above: max_hops exhausted
-        # without a proven relaxation fixed point, so reported costs are
-        # only "min over walks of <= max_hops hops" — a deeper graph
-        # would silently under-reach. One extra relax-compare round
-        # decides (only paid on the truncation path); callers doing
-        # bounded exploration on purpose pass warn_on_truncation=False.
-        cand = dist.join(e, dist["id"] == e["src"]).select(
-            e["dst"].alias("id"), (dist["cost"] + e["w"]).alias("cost")
+    dist0 = spark.createDataFrame([(source, 0.0)], "id bigint, cost double")
+    dist, _used, converged = _fixpoint(dist0, relax, max_hops)
+    # Same loud-truncation contract as bfs above: max_hops exhausted
+    # without a proven relaxation fixed point means the costs are only
+    # "min over walks of <= max_hops hops"; callers doing bounded
+    # exploration on purpose pass warn_on_truncation=False.
+    if not converged and warn_on_truncation and relax(dist, max_hops + 1).filter("chg").count():
+        logger.warning(
+            "sssp: max_hops=%d exhausted before the relaxation fixed "
+            "point; costs are only valid as min over <=%d-hop walks — "
+            "deeper shortest paths are unreported",
+            max_hops,
+            max_hops,
         )
-        probe = (
-            dist.unionByName(cand).groupBy("id").agg(F.min("cost").alias("cost"))
-        )
-        still_improving = probe.count() != dist.count() or not (
-            probe.alias("n")
-            .join(dist.alias("o"), "id")
-            .filter(F.col("n.cost") < F.col("o.cost"))
-            .isEmpty()
-        )
-        if still_improving:
-            logger.warning(
-                "sssp: max_hops=%d exhausted before the relaxation fixed "
-                "point; costs are only valid as min over <=%d-hop walks — "
-                "deeper shortest paths are unreported",
-                max_hops,
-                max_hops,
-            )
-
     e.unpersist()
-    return dist
+    return dist.select("id", "cost")
 
 
 def pagerank(
@@ -827,45 +802,39 @@ def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     remain (Matula-Beck). Returns ``(id, degree)`` — each surviving
     vertex with its degree inside the core.
 
-    Per round: one degree aggregate + two semi-joins restricting the
-    edge set to surviving endpoints, with the same localCheckpoint
-    discipline as bfs. The edge set only shrinks, so per-round cost is
-    bounded by the current core size; rounds = peeling depth (the
-    longest cascade), typically far below |V|.
+    Per round: one degree aggregate joined back onto both endpoints of
+    the symmetric edge set, flagging ``chg`` on every edge with an
+    endpoint below degree k; the next round drops the flagged edges
+    first. The edge set only shrinks, so per-round cost is bounded by
+    the current core size; rounds = peeling depth (the longest
+    cascade) plus the round that peels nothing, typically far below
+    |V|. Each round is one driver action (:func:`_fixpoint`): counting
+    the flagged edges materializes the round's lazy checkpoint. A run
+    cut short by ``max_iters`` still applies its last round's peel.
     """
     cur = (
-        edges.select(
-            F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
+        undirected_edges(
+            edges.select(
+                F.col("src").cast("bigint").alias("src"),
+                F.col("dst").cast("bigint").alias("dst"),
+            )
         )
-        .filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-    cur = (
-        cur.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(cur.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .transform(_ckpt)
+        .withColumn("chg", F.lit(False))
+        .transform(_ckpt_lazy)
     )
 
-    converged = False
-    n_vertices = cur.select("src").distinct().count()
-    for _ in range(max_iters):
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select(F.col("src").alias("id"))
-        n_keep = keep.count()
-        if n_keep == 0:
-            cur = cur.limit(0)
-            converged = True
-            break
-        if n_keep == n_vertices:
-            converged = True
-            break
-        cur = (
-            cur.join(keep, cur["src"] == keep["id"], "left_semi")
-            .join(keep, F.col("dst") == keep["id"], "left_semi")
-            .transform(_ckpt)
+    def peel(cur: DataFrame, _r: int) -> DataFrame:
+        live = cur.filter(~F.col("chg")).select("src", "dst")
+        deg = live.groupBy("src").agg(F.count(F.lit(1)).alias("d_src"))
+        low = (F.col("d_src") < k) | (F.col("d_dst") < k)
+        return (
+            live.join(deg, "src")
+            .join(deg.select(F.col("src").alias("dst"), F.col("d_src").alias("d_dst")), "dst")
+            .select("src", "dst", low.alias("chg"))
+            .transform(_ckpt_lazy)
         )
-        n_vertices = n_keep
+
+    cur, _used, converged = _fixpoint(cur, peel, max_iters)
     if not converged:
         logger.warning(
             "kcore: max_iters=%d exhausted before the peeling fixed point; "
@@ -873,7 +842,8 @@ def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
             max_iters,
             k,
         )
-    return cur.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
+    core = cur.filter(~F.col("chg")).select("src", "dst")
+    return core.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -927,99 +897,22 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    edges: DataFrame, max_iters: int = 30, return_rounds: bool = False
-) -> DataFrame | tuple[DataFrame, int]:
-    """Connected components by alternating large-star/small-star
-    rounds — the O(log d)-round algorithm from the MapReduce CC
-    literature (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"). Min-label propagation
-    (``dedup_queries.connected_components``, :func:`_min_label_fixpoint`)
-    reaches O(log d) rounds too once its pointer jumping starts, but
-    every jump round pays two parquet spills; this variant keeps
-    ``localCheckpoint`` truncation on every round.
+def _fixpoint(state: DataFrame, step, rounds: int) -> tuple[DataFrame, int, bool]:
+    """The round loop of min-label propagation, sssp, kcore and the SCC
+    trim: at most ``rounds`` rounds of ``state = step(state, r)``.
 
-    Per round, every vertex re-points its neighbors at the minimum of
-    its closed neighborhood:
-
-    - large-star: for each u, every LARGER neighbor v>u re-attaches to
-      m = min(N(u) ∪ {u}) — safe in parallel because v only ever moves
-      to a strictly smaller label;
-    - small-star: each u and its smaller neighbors all attach to m —
-      collapses the chains large-star leaves behind.
-
-    Both are one groupBy + one join per round over the current edge
-    set, which shrinks toward one star per component; convergence is
-    detected by an except-count (edge set reaches a fixed point).
-
-    Input: ``(src, dst)`` edge rows (undirected; symmetrized here).
-    Output: ``(v, cluster_id)`` with cluster_id = min vertex id in the
-    component — identical contract to min-label propagation, which the
-    property tests exploit (tests/test_properties.py).
-    """
-    e = (
-        edges.select(F.col("src").cast("bigint").alias("a"), F.col("dst").cast("bigint").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-        .distinct()
-        .transform(_ckpt)
-    )
-
-    def large_star(cur: DataFrame) -> DataFrame:
-        sym = cur.unionByName(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mins = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
-        return (
-            sym.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def small_star(cur: DataFrame) -> DataFrame:
-        # edges already directed (a > b); min over smaller neighbors
-        mins = cur.groupBy("a").agg(F.min("b").alias("m"))
-        with_m = cur.join(mins, "a")
-        moved = with_m.filter(F.col("b") != F.col("m")).select(
-            F.col("b").alias("a"), F.col("m").alias("b")
-        )
-        self_edges = mins.select(F.col("a"), F.col("m").alias("b"))
-        return (
-            moved.unionByName(self_edges)
-            .filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-            .distinct()
-        )
-
-    rounds = 0
-    converged = False
-    for _ in range(max_iters):
-        rounds += 1
-        nxt = small_star(large_star(e)).transform(_ckpt)
-        # fixed point: the (canonical, deduped) edge sets are equal
-        if nxt.count() == e.count() and nxt.exceptAll(e).isEmpty():
-            e = nxt
-            converged = True
-            break
-        e = nxt
-    if not converged:
-        # Same loud-truncation contract as bfs above: an unconverged
-        # star forest can still chain labels, splitting true components.
-        logger.warning(
-            "connected_components_star: max_iters=%d exhausted before "
-            "the edge-set fixed point; labels may split one true component",
-            max_iters,
-        )
-
-    # converged edge set is a star forest: (v, component-min) pairs
-    labels = (
-        e.select(F.col("a").alias("v"), F.col("b").alias("cluster_id"))
-        .unionByName(
-            e.select(F.col("b").alias("v"), F.col("b").alias("cluster_id"))
-        )
-        .distinct()
-    )
-    return (labels, rounds) if return_rounds else labels
+    ``step`` returns the next state with a boolean ``chg`` column,
+    already truncated (``_ckpt_lazy``, or ``spill_truncate`` where the
+    round self-joins its state). Counting the ``chg`` rows is the
+    round's only driver action: it materializes the truncation and
+    decides the fixed point, and a round with none ends the loop.
+    Returns ``(state, rounds_used, converged)``; the state keeps its
+    ``chg`` column, except after zero rounds."""
+    for r in range(1, rounds + 1):
+        state = step(state, r)
+        if state.filter("chg").count() == 0:
+            return state, r, True
+    return state, rounds, False
 
 
 _AUTO_JUMP_AFTER = 8  # one-hop rounds 1..8, jump rounds after
@@ -1047,13 +940,13 @@ def _min_label_fixpoint(
     (plans/reliable.spill_truncate), so a jump round truncates with
     ``spill_truncate`` instead: two parquet spills.
 
-    ``changed`` is a boolean Column over ``k`` and ``k_old``. It is
-    computed inside the round's lazy checkpoint, so counting its true
-    rows is the round's single job, and a round with none ends the
-    loop. ``rounds`` is the round budget. Returns ``(state,
-    rounds_used, converged)``.
+    ``changed`` is a boolean Column over ``k`` and ``k_old``, the
+    round's ``chg`` for :func:`_fixpoint`. ``rounds`` is the round
+    budget. Returns ``(state, rounds_used, converged)``.
     """
-    for r in range(1, rounds + 1):
+
+    def step(state: DataFrame, r: int) -> DataFrame:
+        state = state.select("v", "k", "p")
         msgs = edges.join(state.withColumnRenamed("v", "src"), "src").select(
             F.col("dst").alias("v"), "k", "p"
         )
@@ -1077,12 +970,10 @@ def _min_label_fixpoint(
         nxt = new.join(state.select("v", F.col("k").alias("k_old")), "v").select(
             "v", "k", "p", changed.alias("chg")
         )
-        nxt = _reliable.spill_truncate(nxt, tag) if jump else nxt.transform(_ckpt_lazy)
-        n_changed = nxt.filter("chg").count()  # materializes every partition
-        state = nxt.select("v", "k", "p")
-        if n_changed == 0:
-            return state, r, True
-    return state, rounds, False
+        return _reliable.spill_truncate(nxt, tag) if jump else nxt.transform(_ckpt_lazy)
+
+    state, used, converged = _fixpoint(state, step, rounds)
+    return state.select("v", "k", "p"), used, converged
 
 
 def strongly_connected_components(
@@ -1180,39 +1071,48 @@ def strongly_connected_components(
     def add(res: DataFrame, part: DataFrame) -> DataFrame:
         return part if res is None else res.unionByName(part).transform(_ckpt)
 
+    def within(edges: DataFrame, vs: DataFrame) -> DataFrame:
+        return edges.join(vs.withColumnRenamed("v", "src"), "src", "left_semi").join(
+            vs.withColumnRenamed("v", "dst"), "dst", "left_semi"
+        )
+
+    def trim(rem: DataFrame, _r: int) -> DataFrame:
+        # flag every survivor with no in-edge or no out-edge among the
+        # survivors; the next round drops the flagged rows first
+        live = rem.filter(~F.col("chg")).select("v")
+        e_live = within(e0, live)
+        keep = (
+            e_live.select(F.col("src").alias("v"))
+            .join(e_live.select(F.col("dst").alias("v")), "v", "left_semi")
+            .distinct()
+            .select("v", F.lit(False).alias("chg"))
+        )
+        return (
+            live.join(keep, "v", "left")
+            .select("v", F.coalesce("chg", F.lit(True)).alias("chg"))
+            .transform(_ckpt_lazy)
+        )
+
     while rounds_left > 0:
         pass_no += 1
-        n_rem = remaining.count()
-        if n_rem == 0:
+        if remaining.count() == 0:
             break
-        e = (
-            e0.join(remaining.withColumnRenamed("v", "src"), "src", "left_semi")
-            .join(remaining.withColumnRenamed("v", "dst"), "dst", "left_semi")
-            .transform(_ckpt)
-        )
         # --- trim the DAG fringe
-        trimmed_any = False
-        _t0, _r0 = time.perf_counter(), rounds_left
-        while rounds_left > 0:
-            rounds_left -= 1
-            srcs = e.select(F.col("src").alias("v")).distinct()
-            dsts = e.select(F.col("dst").alias("v")).distinct()
-            keep = srcs.join(dsts, "v", "left_semi")  # has both in and out edges
-            fringe = remaining.join(keep, "v", "left_anti").transform(_ckpt_lazy)
-            n_fringe = fringe.count()  # materializes the lazy checkpoint
-            if n_fringe == 0:
-                break
-            trimmed_any = True
+        _t0 = time.perf_counter()
+        rem, used, trim_converged = _fixpoint(
+            remaining.withColumn("chg", F.lit(False)), trim, rounds_left
+        )
+        rounds_left -= used
+        trimmed_any = used > int(trim_converged)  # some round flagged a vertex
+        if trimmed_any:
+            survivors = rem.filter(~F.col("chg")).select("v")
+            fringe = remaining.join(survivors, "v", "left_anti")
             done = add(done, fringe.select("v", F.col("v").alias("scc_id")))
-            remaining = remaining.join(fringe, "v", "left_anti").transform(_ckpt)
-            e = (
-                e.join(fringe.withColumnRenamed("v", "src"), "src", "left_anti")
-                .join(fringe.withColumnRenamed("v", "dst"), "dst", "left_anti")
-                .transform(_ckpt)
-            )
-        _note(pass_no, "trim", _r0 - rounds_left, _t0)
+            remaining = survivors
+        _note(pass_no, "trim", used, _t0)
         if remaining.count() == 0 or rounds_left <= 0:
             break
+        e = within(e0, remaining).transform(_ckpt)
         # --- forward min-label propagation to fixpoint
         _t0 = time.perf_counter()
         c0 = remaining.select(

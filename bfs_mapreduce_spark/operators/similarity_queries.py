@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bfs_mapreduce_spark.plans.introspect import source_bytes
 from bfs_mapreduce_spark.plans.reliable import (
     cache_point as _cache_point,  # deferred sharing point (persist)
     ckpt as _ckpt,  # lineage truncation: localCheckpoint, or a durable
@@ -78,15 +79,8 @@ def _scan_coalesce(df: DataFrame) -> DataFrame:
     the existing one, and ``coalesce`` (which never raises a partition
     count) degenerates to a no-op. Frames whose source bytes are
     unknowable (in-memory, non-file sources) pass through unchanged."""
-    try:
-        files = df.inputFiles()
-        if not files:
-            return df
-        total = 0
-        for uri in files:
-            path = uri[5:] if uri.startswith("file:") else uri
-            total += os.path.getsize(path)
-    except Exception:  # remote FS / permissions / exotic source
+    total = source_bytes(df)
+    if total is None:
         return df
     return df.coalesce(max(1, int(total // _SCAN_PART_BYTES) + 1))
 

@@ -10,7 +10,26 @@ scraping strings ad hoc.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
+
+
+def source_bytes(df: DataFrame) -> int | None:
+    """Total on-disk bytes of the files ``df`` scans, or None when they
+    are unknowable: in-memory frames, non-file sources, remote file
+    systems, unreadable paths. The one input-volume probe the
+    partition-sizing heuristics share; each keeps its own budget."""
+    try:
+        files = df.inputFiles()
+        if not files:
+            return None
+        total = 0
+        for uri in files:
+            total += os.path.getsize(uri[5:] if uri.startswith("file:") else uri)
+    except Exception:  # remote FS / permissions / exotic source
+        return None
+    return total
 
 
 def executed_plan(df: DataFrame) -> str:

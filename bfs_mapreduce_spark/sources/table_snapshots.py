@@ -2662,6 +2662,24 @@ def delete_where(
     return version, n_deleted, affected
 
 
+def _refuse_null_keys(
+    keys: DataFrame, cols: list[str], verb: str, consequence: str
+) -> None:
+    """Raise when any ``keys`` row has a NULL in ``cols``: NULL never
+    equality-matches, so an equality delete would skip that row;
+    ``consequence`` says what the caller's verb would get wrong."""
+    n_null = keys.filter(
+        F.greatest(*[F.col(c).isNull() for c in cols])
+        if len(cols) > 1
+        else F.col(cols[0]).isNull()
+    ).count()
+    if n_null:
+        raise ValueError(
+            f"{verb} keys contain {n_null} row(s) with NULL key values — "
+            f"NULL never equality-matches, so {consequence}"
+        )
+
+
 def delete_eq(
     spark: SparkSession,
     root: str,
@@ -2699,17 +2717,9 @@ def delete_eq(
     cols = list(keys.columns)
     if not cols:
         raise ValueError("keys DataFrame has no columns")
-    n_null = keys.filter(
-        F.greatest(*[F.col(c).isNull() for c in cols])
-        if len(cols) > 1
-        else F.col(cols[0]).isNull()
-    ).count()
-    if n_null:
-        raise ValueError(
-            f"equality-delete keys contain {n_null} row(s) with NULL key "
-            "values — NULL never equality-matches, so the delete would "
-            "silently not fire for them"
-        )
+    _refuse_null_keys(
+        keys, cols, "equality-delete", "the delete would silently not fire for them"
+    )
     staged = stage_files(keys.dropDuplicates().coalesce(1), root)
     if not staged:
         return base, []
@@ -2766,17 +2776,9 @@ def upsert_eq(
     # append_checked/merge_into do — the masked old rows only leave
     _validate_checks(source, m.get("checks", {}))
     keys = source.select(*key_cols).dropDuplicates()
-    n_null = keys.filter(
-        F.greatest(*[F.col(c).isNull() for c in key_cols])
-        if len(key_cols) > 1
-        else F.col(key_cols[0]).isNull()
-    ).count()
-    if n_null:
-        raise ValueError(
-            f"upsert keys contain {n_null} row(s) with NULL key values — "
-            "NULL never equality-matches, so the old row would survive "
-            "next to the new one"
-        )
+    _refuse_null_keys(
+        keys, key_cols, "upsert", "the old row would survive next to the new one"
+    )
     staged_keys: list[str] = []
     if m["files"]:  # first commit into an empty table: pure append
         staged_keys = stage_files(keys.coalesce(1), root)

@@ -369,6 +369,106 @@ def test_scc_deep_cycle_rounds_are_logarithmic(spark):
         assert used < n // 2, (phase, used)
 
 
+@pytest.fixture
+def driver_actions(spark, monkeypatch):
+    """A callable that runs ``fn`` and returns ``(result, actions)``:
+    the driver actions counted are ``DataFrame.count``,
+    ``DataFrame.isEmpty`` and every EAGER lineage truncation (a lazy
+    one is materialized inside the next action)."""
+    from bfs_mapreduce_spark.plans import reliable
+
+    n = [0]
+
+    def counting(f, is_action=lambda *a, **k: True):
+        def wrapped(*a, **k):
+            n[0] += bool(is_action(*a, **k))
+            return f(*a, **k)
+
+        return wrapped
+
+    cls = type(spark.range(1))  # the concrete DataFrame class
+    monkeypatch.setattr(cls, "count", counting(cls.count))
+    monkeypatch.setattr(cls, "isEmpty", counting(cls.isEmpty))
+    monkeypatch.setattr(
+        reliable,
+        "truncate",
+        counting(reliable.truncate, lambda df, eager=True, **k: eager),
+    )
+
+    def run(fn):
+        n[0] = 0
+        out = fn()
+        return out, n[0]
+
+    return run
+
+
+def test_convergent_loops_make_one_driver_action_per_round(spark, driver_actions, caplog):
+    """sssp, kcore and the SCC trim each run :func:`_fixpoint`, so a
+    round costs exactly one driver action: the count of its changed
+    rows, which also materializes the round's lazy checkpoint."""
+    import logging
+
+    from bfs_mapreduce_spark.operators.graph import (
+        kcore,
+        sssp,
+        strongly_connected_components,
+    )
+
+    # sssp on a weighted 12-vertex path: 11 rounds reach vertex 11,
+    # round 12 changes nothing
+    path = [(i, i + 1, 1.0 + i % 3) for i in range(11)]
+    pdf = spark.createDataFrame(path, "src bigint, dst bigint, w double")
+    cost = list(itertools.accumulate([0.0] + [w for _s, _d, w in path]))
+    got, actions = driver_actions(lambda: sssp(pdf, source=0, max_hops=20))
+    assert {r["id"]: r["cost"] for r in got.collect()} == dict(enumerate(cost))
+    assert actions == 12
+
+    # truncated with the warning on: 5 rounds plus one probe round
+    with caplog.at_level(logging.WARNING, logger="bfs_mapreduce_spark.operators.graph"):
+        got, actions = driver_actions(lambda: sssp(pdf, source=0, max_hops=5))
+    assert {r["id"]: r["cost"] for r in got.collect()} == dict(enumerate(cost[:6]))
+    assert any("sssp: max_hops=5" in r.message for r in caplog.records)
+    assert actions == 6
+
+    # kcore on a 20-edge path at k=2: ten rounds peel both ends, the
+    # eleventh finds nothing left
+    kdf = spark.createDataFrame([(i, i + 1) for i in range(20)], "src bigint, dst bigint")
+    got, actions = driver_actions(lambda: kcore(kdf, 2))
+    assert got.collect() == []
+    assert actions == 11
+
+    # SCC on two directed paths (all DAG fringe): the trim rounds
+    # differ, everything outside them is the same fixed per-pass cost
+    def scc_path(n):
+        stats = {}
+        dag = spark.createDataFrame([(i, i + 1) for i in range(n)], "src bigint, dst bigint")
+        got, actions = driver_actions(lambda: strongly_connected_components(dag, stats=stats))
+        assert {r.v: r.scc_id for r in got.collect()} == {v: v for v in range(n + 1)}
+        assert [(p, ph) for p, ph, _r, _s in stats["phases"]] == [(1, "trim")]
+        return stats["phases"][0][2], actions
+
+    (short_rounds, short_actions), (long_rounds, long_actions) = scc_path(9), scc_path(15)
+    assert (short_rounds, long_rounds) == (6, 9)  # ceil((n + 1) / 2) peels + 1
+    assert long_actions - short_actions == long_rounds - short_rounds
+
+
+def test_source_bytes(spark, tmp_path):
+    """``source_bytes`` sums the files behind a parquet frame and is
+    None for an in-memory frame."""
+    import os
+
+    from bfs_mapreduce_spark.plans.introspect import source_bytes
+
+    assert source_bytes(spark.createDataFrame([(0, 1)], "src bigint, dst bigint")) is None
+    p = tmp_path / "edges.parquet"
+    spark.range(1000).selectExpr("id AS src", "id + 1 AS dst").write.parquet(str(p))
+    files = [f for f in os.listdir(p) if f.endswith(".parquet")]
+    want = sum(os.path.getsize(p / f) for f in files)
+    assert want > 0
+    assert source_bytes(spark.read.parquet(str(p))) == want
+
+
 @pytest.mark.parametrize("with_paths", [False, True], ids=["dist", "paths"])
 def test_bfs_deferred_repartition_swap(spark, with_paths):
     """Shuffle-join rounds: a frontier over broadcast_frontier_rows is

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.operators.graph import bfs
 from tests.graph_oracle import bfs_oracle
@@ -151,6 +150,48 @@ def test_kcore_matches_python_peeling(spark, edges, k):
     assert got == expected
 
 
+def _peel_rounds(edges: list[tuple[int, int]], k: int, rounds: int) -> dict[int, int]:
+    """Synchronous Python peeling for exactly ``rounds`` rounds: each
+    round removes every vertex below degree k at once."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    for _ in range(rounds):
+        low = [v for v, ns in adj.items() if len(ns) < k]
+        for v in low:
+            for n in adj.pop(v):
+                if n in adj:
+                    adj[n].discard(v)
+    return {v: len(ns) for v, ns in adj.items() if ns}
+
+
+def test_kcore_truncated_budget_applies_last_peel(spark, caplog):
+    """A run cut short by max_iters returns exactly max_iters
+    synchronous peels, the last one included, and warns: a 20-edge
+    path at k=2 keeps vertices 2..18 after two rounds, 3..17 after
+    three; a budget past the peeling depth returns the true (empty)
+    core without a warning."""
+    import logging
+
+    from bfs_mapreduce_spark.operators.graph import kcore
+
+    path = [(i, i + 1) for i in range(20)]
+    df = spark.createDataFrame(path, "src bigint, dst bigint")
+    for rounds, kept in ((2, range(2, 19)), (3, range(3, 18))):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="bfs_mapreduce_spark.operators.graph"):
+            got = {r["id"]: r["degree"] for r in kcore(df, 2, max_iters=rounds).collect()}
+        assert got == _peel_rounds(path, 2, rounds)
+        assert set(got) == set(kept)
+        assert any("kcore: max_iters=" in r.message for r in caplog.records)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="bfs_mapreduce_spark.operators.graph"):
+        assert kcore(df, 2, max_iters=20).collect() == []
+    assert not any("kcore" in r.message for r in caplog.records)
+
+
 def test_pack_sequences_is_contiguous_per_shard(spark, sf_oracle_dir):
     """Packing invariants per shard: offsets start at 0, every doc
     begins exactly where its predecessor ended (no gaps, no overlaps),
@@ -232,65 +273,42 @@ def test_sssp_matches_hop_bounded_reference(spark, edges):
 
 @given(edges=edge_lists)
 @_prop_settings
-def test_star_cc_matches_min_label_propagation(spark, edges):
-    """Large-star/small-star CC must agree with per-hop min-label
-    propagation on every random graph (identical (v, cluster_id)
-    contract, cluster_id = component min)."""
+def test_cc_matches_union_find(spark, edges):
+    """Min-label connected components must equal a pure-Python
+    union-find on every random graph: one (v, cluster_id) row per
+    vertex, cluster_id = component min."""
     from bfs_mapreduce_spark.operators.dedup_queries import connected_components
-    from bfs_mapreduce_spark.operators.graph import connected_components_star
 
     e = [(a, b) for a, b in edges if a != b]
     if not e:
         return
-    star_df = spark.createDataFrame(e, "src bigint, dst bigint")
-    label_df = spark.createDataFrame(e, "s bigint, d bigint")
-    got_star = {
-        (r["v"], r["cluster_id"]) for r in connected_components_star(star_df).collect()
-    }
-    got_label = {
-        (r["v"], r["cluster_id"]) for r in connected_components(label_df).collect()
-    }
-    assert got_star == got_label
+    parent: dict[int, int] = {}
+
+    def find(v: int) -> int:
+        while parent.setdefault(v, v) != v:
+            v = parent[v]
+        return v
+
+    for a, b in e:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root is the component min
+    df = spark.createDataFrame(e, "s bigint, d bigint")
+    got = {(r["v"], r["cluster_id"]) for r in connected_components(df).collect()}
+    assert got == {(v, find(v)) for v in parent}
 
 
 def test_cc_loops_warn_on_truncation(spark, caplog):
-    """Both CC loops must be LOUD when max_iters exhausts before the
+    """Min-label CC must be LOUD when max_iters exhausts before the
     fixed point (the bfs truncation contract): a silently unconverged
     labeling splits true components."""
     import logging
 
     from bfs_mapreduce_spark.operators.dedup_queries import connected_components
-    from bfs_mapreduce_spark.operators.graph import connected_components_star
 
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(15)], "src bigint, dst bigint"
-    )
+    path = spark.createDataFrame([(i, i + 1) for i in range(15)], "s bigint, d bigint")
     with caplog.at_level(logging.WARNING):
-        connected_components_star(path, max_iters=1).collect()
-    assert any("connected_components_star" in r.message for r in caplog.records)
-
-    caplog.clear()
-    with caplog.at_level(logging.WARNING):
-        connected_components(
-            path.select(F.col("src").alias("s"), F.col("dst").alias("d")), max_iters=1
-        ).collect()
+        connected_components(path, max_iters=1).collect()
     assert any("connected_components:" in r.message for r in caplog.records)
-
-
-def test_star_cc_converges_logarithmically_on_path(spark):
-    """On a 64-vertex path (diameter 63) the star variant must converge
-    in O(log d) rounds — min-label propagation would need 63. Bound 10
-    ≈ 2·log2(64) + slack; a linear-round bug blows straight past it."""
-    from bfs_mapreduce_spark.operators.graph import connected_components_star
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "src bigint, dst bigint"
-    )
-    labels, rounds = connected_components_star(path, return_rounds=True)
-    assert {(r["v"], r["cluster_id"]) for r in labels.collect()} == {
-        (v, 0) for v in range(64)
-    }
-    assert rounds <= 10, f"expected O(log d) convergence, took {rounds} rounds"
 
 
 def _lpa_python(edges: list[tuple[int, int]], rounds: int) -> dict[int, int]:

@@ -134,8 +134,7 @@ def test_no_cartesian_products_anywhere(spark, sf_oracle_dir):
     driver_loop = {"q_graph_bfs_smallg", "q_graph_bfs_histogram",
                    "q_graph_bfs_rdd_histogram", "q_graph_sssp_cost",
                    "q_graph_pagerank2", "q_dedup_clusters",
-                   "q_dedup_clusters_star", "q_graph_kcore",
-                   "q_similarity_kmeans_assign"}
+                   "q_graph_kcore", "q_similarity_kmeans_assign"}
     for name, q in CATALOG.items():
         if name.startswith("q_stream_") or name in driver_loop:
             continue
