@@ -38,6 +38,7 @@ from bfs_mapreduce_spark.operators.dedup_queries import (
     minhash_band_table,
     shingle_arrays,
 )
+from bfs_mapreduce_spark.plans.reliable import ckpt as _ckpt  # lineage truncation
 
 
 def _signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -55,7 +56,7 @@ def _signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     # catalog queries: ONE) — spread the shingle + signature compute
     # before the heavy per-row work
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    sh = shingle_arrays(docs).localCheckpoint()
+    sh = shingle_arrays(docs).transform(_ckpt)
     bands = minhash_band_table(
         sh, n_hashes=len(_MINHASH_AB), rows_per_band=_LSH_ROWS_PER_BAND
     )
@@ -112,8 +113,8 @@ def ingest_batch(
 
     known = old_sh.select("doc_id")
     new_bands, new_sh = _signatures(new_docs.join(known, "doc_id", "left_anti"))
-    new_bands = new_bands.localCheckpoint()
-    new_sh = new_sh.localCheckpoint()
+    new_bands = new_bands.transform(_ckpt)
+    new_sh = new_sh.transform(_ckpt)
     new_ids = new_sh.select("doc_id")
 
     # full membership of every bucket the batch touches (a semi-join
@@ -148,7 +149,7 @@ def ingest_batch(
         # star links bypass the threshold, exactly as in the batch form
         .filter((jac >= threshold) | F.col("star"))
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"), "star")
-        .localCheckpoint()  # materialize BEFORE mutating the store
+        .transform(_ckpt)  # materialize BEFORE mutating the store
     )
 
     if append:
@@ -197,7 +198,7 @@ def compact_store(
             F.col("canonical").alias("doc_a"), F.col("doc_id").alias("doc_b")
         )
         .distinct()
-        .localCheckpoint()  # materialize before overwriting the store dir
+        .transform(_ckpt)  # materialize before overwriting the store dir
     )
     links.write.mode("overwrite").parquet(f"{store_path}/starlinks")
     return links
@@ -286,7 +287,7 @@ def ingest_semantic_batch(
         _cell_scores_np(base, cent, argmax=True)
         .select("vec_id", "cell")
         .join(base, "vec_id")
-    ).localCheckpoint()
+    ).transform(_ckpt)
 
     def _sides(df: DataFrame, tag: str) -> DataFrame:
         return df.select(
@@ -319,7 +320,7 @@ def ingest_semantic_batch(
         .filter(F.col("cosine") >= _SEM_TAU)
         .select("vec_a", "vec_b", "cosine")
     )
-    pairs = cross.unionByName(self_pairs).distinct().localCheckpoint()
+    pairs = cross.unionByName(self_pairs).distinct().transform(_ckpt)
 
     if append:
         new_rows.repartition("cell").write.mode("append").partitionBy(
@@ -347,7 +348,7 @@ def compact_semantic_store(spark: SparkSession, store_path: str) -> DataFrame:
     Scale shape: one in-cell self-join (cost = sum(cell_size^2), the
     same bound q_dedup_semantic documents) + one partition-local
     rewrite; O(store) once per compaction, never per batch."""
-    vec = spark.read.parquet(f"{store_path}/vectors").localCheckpoint()
+    vec = spark.read.parquet(f"{store_path}/vectors").transform(_ckpt)
     a = vec.select(
         "cell", F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
         F.col("n").alias("na"),
@@ -374,7 +375,7 @@ def compact_semantic_store(spark: SparkSession, store_path: str) -> DataFrame:
             "cell",
             F.when(F.col("_d").isNull(), 1).otherwise(0).alias("keep"),
         )
-        .localCheckpoint()  # materialize before overwriting the store
+        .transform(_ckpt)  # materialize before overwriting the store
     )
     keep.write.mode("overwrite").parquet(f"{store_path}/keep")
     # small-file compaction: one file per cell partition, rows intact

@@ -36,7 +36,11 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bfs_mapreduce_spark.operators.graph import _ckpt, _min_label_fixpoint
+from bfs_mapreduce_spark.operators.graph import _min_label_fixpoint
+from bfs_mapreduce_spark.plans.reliable import (
+    ckpt as _ckpt,  # lineage truncation: localCheckpoint, or a durable
+    ckpt_lazy as _ckpt_lazy,  # parquet spill inside reliable_checkpoints()
+)
 from bfs_mapreduce_spark.registry import register
 from bfs_mapreduce_spark.sources.readers import load_table
 
@@ -110,9 +114,7 @@ def shingle_arrays(docs: DataFrame) -> DataFrame:
     the split to the first job that reads the shingles, one job instead
     of two, same barrier semantics (downstream still plans against a
     concrete RDD scan, so the HOFs never re-split per element)."""
-    w = docs.select("doc_id", F.split("text", " ").alias("words")).localCheckpoint(
-        eager=False
-    )
+    w = docs.select("doc_id", F.split("text", " ").alias("words")).transform(_ckpt_lazy)
     return w.select("doc_id", _shingles3("words").alias("shingles")).filter(
         F.size("shingles") > 0
     )
@@ -210,7 +212,7 @@ def q_dedup_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_arrays(docs).localCheckpoint()  # arrays materialized once
+    sh = shingle_arrays(docs).transform(_ckpt)  # arrays materialized once
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     sizes = sh.select("doc_id", F.size("shingles").alias("n"))
     # df-cap: shingles shared by >100 docs are candidate-join poison at
@@ -439,7 +441,7 @@ def minhash_lsh_pairs(
     # collect_set rebuild (at scale this is the layer you'd write to
     # parquet between pipeline stages); parameters validated FIRST so
     # a bad call never launches the (eager) shingle job
-    sh = shingle_arrays(docs).localCheckpoint()
+    sh = shingle_arrays(docs).transform(_ckpt)
     # The band table has exactly ONE consumer (lsh_candidates' bucket
     # aggregation), so it stays lazy: signature agg → band explode →
     # bucket agg → in-row pair expansion → verify all fuse into a
@@ -588,7 +590,7 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_arrays(docs).localCheckpoint()
+    sh = shingle_arrays(docs).transform(_ckpt)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     df_ok = ex.groupBy("s").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") <= 100).select("s")
     a = ex.alias("a")
@@ -882,7 +884,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         docs.select("doc_id", F.explode(wins).alias("w"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds per-doc totals + the repeat index
+        .transform(_ckpt_lazy)  # feeds per-doc totals + the repeat index
     )
     n = d.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_windows"))
     rep = d.groupBy("w").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)
@@ -1109,7 +1111,7 @@ def q_dedup_substring_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "gid")
         .agg(F.min("p").alias("s"), (F.max("p") + L).alias("e"))
         .select("doc_id", "s", "e")
-        .localCheckpoint(eager=False)  # consumed by segments AND span counts
+        .transform(_ckpt_lazy)  # consumed by segments AND span counts
     )
     sent = docs.select(
         "doc_id", F.length("text").alias("s"), F.length("text").alias("e")

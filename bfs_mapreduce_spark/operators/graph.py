@@ -60,6 +60,10 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from bfs_mapreduce_spark.plans import reliable as _reliable
+from bfs_mapreduce_spark.plans.reliable import (
+    ckpt as _ckpt,  # lineage truncation: localCheckpoint, or a durable
+    ckpt_lazy as _ckpt_lazy,  # parquet spill inside reliable_checkpoints()
+)
 from bfs_mapreduce_spark.plans.introspect import source_bytes
 
 logger = logging.getLogger(__name__)
@@ -103,22 +107,6 @@ def _loop_conf(spark):
                 del _LOOP_CONF_STATE[key]
             else:
                 _LOOP_CONF_STATE[key] = (depth - 1, saved)
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Chain-position lineage truncation (``df.transform(_ckpt)``):
-    ``localCheckpoint()`` by default, a durable parquet spill+re-read
-    inside ``reliable_checkpoints(...)`` — see plans/reliable.py for
-    the executor-loss failure mode this closes at cluster scale."""
-    return _reliable.truncate(df)
-
-
-def _ckpt_lazy(df: DataFrame) -> DataFrame:
-    """Lazy twin of :func:`_ckpt` (materialized by the caller's next
-    action, fusing checkpoint + count into one job in default mode;
-    reliable mode is inherently eager — the durable write is the
-    materialization)."""
-    return _reliable.truncate(df, eager=False)
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
@@ -213,19 +201,13 @@ def bfs(
     stats: dict | None = None,
     edge_partitions: int | None = None,
     dedup_edges: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Single-source shortest paths via level-synchronous BFS.
 
-    ``checkpoint_dir`` switches every per-round lineage truncation
-    from ``localCheckpoint`` (executor-memory blocks — fast, but an
-    executor lost after round k discards truncated state and fails the
-    job) to a durable parquet spill + re-read under the given
-    directory (HDFS/object store on a real cluster): sugar for running
-    the call inside ``plans.reliable.reliable_checkpoints(dir)``. The
-    spill files back the RETURNED plan too — keep the directory until
-    results are materialized. ``tools/bench_graph_scale.py
-    --reliable`` measures the overhead.
+    Inside ``plans.reliable.reliable_checkpoints(dir)`` every round's
+    truncation is a durable parquet spill; the spill files back the
+    RETURNED plan too, so keep the directory until results are
+    materialized.
     Pass ``sources=[...]`` for the multi-source form — dist becomes
     distance to the NEAREST seed and path starts at that seed (the
     distance-to-seed primitive behind label propagation / partition
@@ -282,28 +264,6 @@ def bfs(
     ``dedup_edges=True`` collects each list as a set inside the same
     aggregate, so dedup adds no exchange.
     """
-    if checkpoint_dir is not None:
-        # Delegate with the ambient reliable context active: all
-        # truncations (and the loop's actions) happen inside; the
-        # returned plan reads the already-written spill files, so the
-        # context can close before the caller materializes.
-        with _reliable.reliable_checkpoints(checkpoint_dir):
-            return bfs(
-                edges,
-                source=source,
-                max_rounds=max_rounds,
-                with_paths=with_paths,
-                directed=directed,
-                warn_on_truncation=warn_on_truncation,
-                broadcast_frontier_rows=broadcast_frontier_rows,
-                reached_only=reached_only,
-                sources=sources,
-                source_df=source_df,
-                source_df_rows=source_df_rows,
-                stats=stats,
-                edge_partitions=edge_partitions,
-                dedup_edges=dedup_edges,
-            )
     spark = edges.sparkSession
     if edge_partitions is None:
         edge_partitions = _auto_edge_partitions(edges, directed)
@@ -1110,14 +1070,13 @@ def strongly_connected_components(
             done = add(done, fringe.select("v", F.col("v").alias("scc_id")))
             remaining = survivors
         _note(pass_no, "trim", used, _t0)
-        if remaining.count() == 0 or rounds_left <= 0:
+        # an untrimmed pass keeps the frame counted at the loop head
+        if rounds_left <= 0 or (trimmed_any and remaining.count() == 0):
             break
         e = within(e0, remaining).transform(_ckpt)
         # --- forward min-label propagation to fixpoint
         _t0 = time.perf_counter()
-        c0 = remaining.select(
-            "v", F.col("v").alias("k"), F.col("v").alias("p")
-        ).transform(_ckpt)
+        c0 = remaining.select("v", F.col("v").alias("k"), F.col("v").alias("p"))
         cs, used, colors_converged = _min_label_fixpoint(
             e, c0, F.col("k") < F.col("k_old"), rounds_left, "scc-color"
         )
@@ -1169,7 +1128,8 @@ def strongly_connected_components(
             "scc-back",
         )
         rounds_left -= used
-        mark = d.filter(F.col("k") == -1).join(c, "v").select("v", "c").transform(_ckpt)
+        # lazy: the eager done/remaining cut below materializes it
+        mark = d.filter(F.col("k") == -1).join(c, "v").select("v", "c").transform(_ckpt_lazy)
         _note(pass_no, "backward", used, _t0)
         done = add(done, mark.select("v", F.col("c").alias("scc_id")))
         remaining = remaining.join(mark.select("v"), "v", "left_anti").transform(_ckpt)

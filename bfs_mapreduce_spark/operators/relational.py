@@ -22,7 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.functions.numeric import dfrac, dmoney
-from bfs_mapreduce_spark.plans.reliable import cache_point as _cache_point
+from bfs_mapreduce_spark.plans.reliable import (
+    cache_point as _cache_point,  # deferred sharing point (persist)
+    ckpt_lazy as _ckpt_lazy,  # lineage truncation, deferred to the next action
+)
 from bfs_mapreduce_spark.registry import register
 from bfs_mapreduce_spark.sources.readers import load_table
 
@@ -439,7 +442,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_extendedprice").cast("decimal(10,2)") * _one_minus_disc()
             ).alias("total")
         )
-        .localCheckpoint(eager=False)  # one aggregate feeds max + filter
+        .transform(_ckpt_lazy)  # one aggregate feeds max + filter
     )
     mx = revenue.agg(F.max("total").alias("mx"))
     return (
@@ -897,7 +900,7 @@ def q_sketch_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_exact"),
         F.hll_sketch_agg("l_partkey").alias("hs"),
-    ).localCheckpoint(eager=False)  # one row per group; feeds per-group + union
+    ).transform(_ckpt_lazy)  # one row per group; feeds per-group + union
     per_rows = per.select(
         F.col("l_returnflag").alias("scope"),
         "n_exact",

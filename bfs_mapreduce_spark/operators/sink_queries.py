@@ -25,6 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bfs_mapreduce_spark.plans.reliable import ckpt as _ckpt
 from bfs_mapreduce_spark.registry import register
 from bfs_mapreduce_spark.sources.readers import load_table
 from bfs_mapreduce_spark.tmputil import PROC as _PROC
@@ -193,7 +194,7 @@ def q_join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             conf.set(k, v)
         # eager: the optimization (and filter injection) happens NOW,
         # while the confs are active
-        return runtime_bloom_join(spark, sf_dir).localCheckpoint()
+        return runtime_bloom_join(spark, sf_dir).transform(_ckpt)
     finally:
         for k, v in saved.items():
             conf.set(k, v)

@@ -29,8 +29,13 @@ call sites stay signature-stable::
         result = bfs(edges, source=0)          # every round spills
         histogram = result.groupBy("dist").count().collect()
 
-``bfs()`` additionally takes an explicit ``checkpoint_dir=`` kwarg
-(sugar for the context manager). Spill files are left on disk, the
+Every lineage cut in the package goes through this module: through
+:func:`truncate` (directly or as ``df.transform(ckpt)`` /
+``df.transform(ckpt_lazy)``), or through :func:`spill_truncate` and
+:func:`cache_point`, whose semantics differ. tests/test_reliable.py
+fails on any ``localCheckpoint`` call outside this module, and call
+sites look ``truncate`` up here at call time, so wrapping
+``reliable.truncate`` wraps every cut. Spill files are left on disk, the
 same contract as Spark's reliable checkpoints (cleanup is a separate
 concern — the caller owns the directory lifetime and must keep it
 until results are materialized, since the returned plan reads from

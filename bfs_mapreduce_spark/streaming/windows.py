@@ -44,6 +44,7 @@ import name 'descriptor' from 'google.protobuf'``.
 
 from __future__ import annotations
 
+import contextvars
 import glob
 import os
 import shutil
@@ -54,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bfs_mapreduce_spark.plans.reliable import ckpt_lazy as _ckpt_lazy
 from bfs_mapreduce_spark.sources.readers import load_table
 
 # Per-process staging root (tmputil): two concurrent sessions staging
@@ -656,8 +658,13 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     init_store(spark, splits[0], store)
 
+    # foreachBatch runs _fold on a py4j callback thread, which does not
+    # see this thread's contextvars: run it under a copy taken here so
+    # an ambient reliable_checkpoints(...) reaches ingest_batch's cuts
+    ctx = contextvars.copy_context()
+
     def _fold(batch: DataFrame, _bid: int) -> None:
-        ingest_batch(spark, batch, store, max_bucket_rows=mb)
+        ctx.run(ingest_batch, spark, batch, store, max_bucket_rows=mb)
 
     stream = (
         spark.readStream.schema(docs.schema)
@@ -678,7 +685,7 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs(docs, max_bucket_rows=mb)
         .filter(F.col("star"))
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
+        .transform(_ckpt_lazy)
     )
     extra = links.join(batch_star, ["doc_a", "doc_b"], "left_anti")
     missing = batch_star.join(links, ["doc_a", "doc_b"], "left_anti")

@@ -347,11 +347,14 @@ def test_auto_edge_partitions_sizing(spark, tmp_path):
     assert min(default, total // (16 << 20) + 1) == default
 
 
-def test_scc_deep_cycle_rounds_are_logarithmic(spark):
+def test_scc_deep_cycle_rounds_are_logarithmic(spark, driver_actions):
     """Both SCC propagation phases jump through their pointers after
     the one-hop prefix: a 64-cycle (one SCC, diameter 63) resolves to
     label 0 everywhere with color and backward each well under the
-    ~64 rounds a one-hop-per-round walk needs."""
+    ~64 rounds a one-hop-per-round walk needs. Outside those rounds a
+    pass counts the remaining set once (not again after a trim that
+    flagged nothing), seeds color without a cut and leaves the root
+    marks' cut to the next eager one: at most 37 driver actions."""
     from bfs_mapreduce_spark.operators.graph import strongly_connected_components
 
     n = 64
@@ -359,14 +362,13 @@ def test_scc_deep_cycle_rounds_are_logarithmic(spark):
         [(i, (i + 1) % n) for i in range(n)], "src bigint, dst bigint"
     )
     stats = {}
-    got = {
-        r.v: r.scc_id
-        for r in strongly_connected_components(cyc, stats=stats).collect()
-    }
+    res, actions = driver_actions(lambda: strongly_connected_components(cyc, stats=stats))
+    got = {r.v: r.scc_id for r in res.collect()}
     assert got == {v: 0 for v in range(n)}
     for phase in ("color", "backward"):
         used = sum(r for _p, ph, r, _s in stats["phases"] if ph == phase)
         assert used < n // 2, (phase, used)
+    assert actions <= 37, actions
 
 
 @pytest.fixture

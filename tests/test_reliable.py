@@ -67,7 +67,7 @@ def test_reliable_truncation_survives_block_loss(spark, tmp_path):
 def test_bfs_reliable_mode_survives_midloop_block_loss(
     spark, tmp_path, monkeypatch
 ):
-    """End-to-end: bfs(checkpoint_dir=...) completes with EXACT
+    """End-to-end: bfs under reliable_checkpoints completes with EXACT
     results while every round's truncation is followed by total block
     loss — the real loop, the real operator, the verdict's simulated
     executor-preemption scenario."""
@@ -80,12 +80,9 @@ def test_bfs_reliable_mode_survives_midloop_block_loss(
 
     monkeypatch.setattr(reliable, "truncate", chaos_truncate)
     edges_df = read_edge_list(spark, TINY)
-    got = {
-        r["id"]: (r["dist"], r["path"])
-        for r in bfs(
-            edges_df, checkpoint_dir=str(tmp_path / "bfs_ckpt")
-        ).collect()
-    }
+    with reliable.reliable_checkpoints(str(tmp_path / "bfs_ckpt")):
+        res = bfs(edges_df)
+    got = {r["id"]: (r["dist"], r["path"]) for r in res.collect()}
     assert got == bfs_oracle(load_edge_list(TINY))
     # the spill files actually landed in the caller's directory
     spills = list((tmp_path / "bfs_ckpt").iterdir())
@@ -230,3 +227,118 @@ def test_threaded_sweeps_conf_and_context(spark, tmp_path, sf_smoke_dir):
     finally:
         conf.set("spark.sql.adaptive.enabled", saved[0])
         conf.set("spark.sql.shuffle.partitions", saved[1])
+
+
+def test_every_lineage_cut_goes_through_reliable():
+    """No package module calls ``localCheckpoint`` itself: every cut
+    goes through ``plans/reliable.truncate`` (``ckpt``/``ckpt_lazy``),
+    so ``reliable_checkpoints(...)`` reaches all of them. Parsed, not
+    grepped, so comments and docstrings that name the call do not
+    count."""
+    import ast
+    import pathlib
+
+    import bfs_mapreduce_spark
+
+    root = pathlib.Path(bfs_mapreduce_spark.__file__).parent
+    raw = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "plans/reliable.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                raw.append(f"{rel}:{node.func.end_lineno}")
+    assert not raw, "raw localCheckpoint calls:\n" + "\n".join(raw)
+
+
+def _chaos_reliable(spark, monkeypatch, durable):
+    """Reliable mode under ``durable`` with every block lost after
+    every cut: ``reliable.truncate`` is wrapped to blow all blocks
+    once it returns."""
+    orig = reliable.truncate
+
+    def chaos_truncate(df, eager=True, name="state"):
+        out = orig(df, eager=eager, name=name)
+        blow_all_blocks(spark)
+        return out
+
+    monkeypatch.setattr(reliable, "truncate", chaos_truncate)
+    return reliable.reliable_checkpoints(str(durable))
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+# Catalog queries that reach a cut outside graph.py's loops;
+# q_stream_dedup_ingest also covers the incremental LSH store
+# (ingest_batch, compact_store) through its foreachBatch fold.
+BLOCK_LOSS_SWEEP = [
+    "q15_top_supplier",
+    "q_sketch_distinct_rollup",
+    "q_join_runtime_bloom",
+    "q_dedup_ngram_jaccard",
+    "q_dedup_minhash_lsh",
+    "q_dedup_containment",
+    "q_dedup_substring",
+    "q_dedup_substring_remove",
+    "q_stream_dedup_ingest",
+]
+
+
+@pytest.mark.parametrize("name", BLOCK_LOSS_SWEEP)
+def test_catalog_query_survives_block_loss(spark, sf_smoke_dir, tmp_path, monkeypatch, name):
+    """The query returns the default-mode rows under reliable mode
+    although every block is lost after every cut and once more between
+    build and collect, and its cuts land in the durable directory."""
+    from bfs_mapreduce_spark.registry import all_queries
+
+    build = all_queries()[name].build
+    want = _sorted_rows(build(spark, sf_smoke_dir))
+    durable = tmp_path / "spill"
+    with _chaos_reliable(spark, monkeypatch, durable):
+        df = build(spark, sf_smoke_dir)
+        blow_all_blocks(spark)
+        got = _sorted_rows(df)
+    assert got == want
+    assert list(durable.iterdir())
+
+
+def test_semantic_store_survives_block_loss(spark, tmp_path, monkeypatch):
+    """The semantic store's cuts (ingest_semantic_batch's batch rows
+    and pair set, compact_semantic_store's vector snapshot and keep
+    set) under reliable mode with block loss after every cut, on three
+    well-separated clusters whose answer is known: every in-cluster
+    pair with a new member is a near-dup, and each cluster keeps only
+    its smallest id."""
+    import math
+
+    from bfs_mapreduce_spark.operators.dedup_incremental import (
+        compact_semantic_store,
+        ingest_semantic_batch,
+        init_semantic_store,
+    )
+
+    def vec(i):  # cluster i % 3 at 120-degree spacing: cosine 0.99+ within, < 0 across
+        a = 2 * math.pi * (i % 3) / 3 + (i % 4) * 0.001
+        return [math.cos(a), math.sin(a), 0.5 + 0.1 * (i % 2)]
+
+    emb = spark.createDataFrame(
+        [(i, vec(i), i % 3) for i in range(24)],
+        "vec_id bigint, embedding array<float>, label int",
+    )
+    store, durable = str(tmp_path / "store"), tmp_path / "spill"
+    with _chaos_reliable(spark, monkeypatch, durable):
+        init_semantic_store(spark, emb.filter("vec_id < 12"), store)
+        pairs = ingest_semantic_batch(spark, emb.filter("vec_id >= 12"), store).collect()
+        keep = sorted(tuple(r) for r in compact_semantic_store(spark, store).collect())
+    assert sorted((r.vec_a, r.vec_b) for r in pairs) == sorted(
+        (a, b) for b in range(12, 24) for a in range(b) if a % 3 == b % 3
+    )
+    assert keep == [(i, i % 3, int(i < 3)) for i in range(24)]
+    assert list(durable.iterdir())

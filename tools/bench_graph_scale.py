@@ -139,10 +139,12 @@ def run_graph_scale(
     price of surviving executor loss mid-traversal at cluster scale.
     The emitted rows carry ``mode: "reliable"`` so BASELINE.md can
     table the overhead side by side with the default."""
+    import contextlib
     import shutil
     import tempfile
 
     from bfs_mapreduce_spark.operators.graph import bfs
+    from bfs_mapreduce_spark.plans.reliable import reliable_checkpoints
 
     os.makedirs(out_dir, exist_ok=True)
     # warm the BFS machinery so graph #1 doesn't pay codegen/JIT
@@ -155,14 +157,8 @@ def run_graph_scale(
         stats: dict = {}
         ckpt_dir = tempfile.mkdtemp(prefix="bfs_reliable_") if reliable else None
         t0 = time.perf_counter()
-        res = bfs(
-            edges,
-            source=0,
-            with_paths=False,
-            reached_only=True,
-            stats=stats,
-            checkpoint_dir=ckpt_dir,
-        )
+        with reliable_checkpoints(ckpt_dir) if reliable else contextlib.nullcontext():
+            res = bfs(edges, source=0, with_paths=False, reached_only=True, stats=stats)
         n_reached = res.count()
         total = round(time.perf_counter() - t0, 3)
         if ckpt_dir:
