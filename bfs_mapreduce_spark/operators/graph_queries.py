@@ -12,7 +12,11 @@ Two graphs are exercised:
 - the reference's own ``smallG`` dataset (250 vertices, ecc(0)=13),
   reproducing the reference's query end-to-end
   (``BFS_map_reduce.py:115-150`` semantics with W1-W5 fixed) against a
-  level-unrolled DuckDB BFS oracle over the same edge-list file.
+  level-unrolled DuckDB BFS oracle over the same edge-list file. The
+  file comes from ``sources.readers.reference_graph``: the reference's
+  own copy where present, else the committed stand-in of the same
+  documented shape (FIXTURES.md §1). Figures below marked "real
+  smallG" describe the reference's own file.
 """
 
 from __future__ import annotations
@@ -27,11 +31,15 @@ from bfs_mapreduce_spark.plans.reliable import (
 
 from bfs_mapreduce_spark.operators.graph import bfs
 from bfs_mapreduce_spark.registry import register
-from bfs_mapreduce_spark.sources.readers import load_table, read_edge_list
+from bfs_mapreduce_spark.sources.readers import (
+    load_table,
+    read_edge_list,
+    reference_graph,
+)
 
 _PART_OFFSET = 10_000_000  # lift partkeys into their own vertex-id space
 _MAX_DIST = 6
-_SMALLG = "/root/reference/datasets/smallG.txt"
+_SMALLG = reference_graph("smallG")
 
 
 def _order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,8 +123,9 @@ def q_graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SMALLG_ECC = 13  # ecc(0) on smallG — verified by executing the reference
 _SMALLG_DIAM = 14  # diameter of smallG: all-pairs queries must iterate to
-# THIS bound (ecc(0) only bounds BFS rooted at vertex 0 — 15 vertices have
-# dist-14 partners that an ecc-bounded all-pairs walk would drop).
+# THIS bound (ecc(0) only bounds BFS rooted at vertex 0 — on the real
+# smallG 15 vertices have dist-14 partners that an ecc-bounded all-pairs
+# walk would drop; the stand-in's diameter is at most ecc(0) + 1).
 
 
 def _smallg_oracle(max_dist: int = _SMALLG_ECC) -> str:
@@ -262,9 +271,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reference's smallG — the reference's own headline metric "
     "(ecc(0)=13, Presentazione slide 9) plus the classic second sweep "
     "from the farthest vertex (min-id tie-break), whose eccentricity "
-    "lower-bounds the diameter (14 here). The second sweep seeds "
-    "through bfs(source_df=...), so the argmax vertex never round-"
-    "trips through the driver; oracle = both sweeps as recursive CTEs "
+    "lower-bounds the diameter (14 on the real smallG). The second "
+    "sweep seeds through bfs(source_df=...), so the argmax vertex "
+    "never round-trips through the driver; oracle = both sweeps as recursive CTEs "
     "over the same edge-list file.",
 )
 def q_graph_ecc_smallg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,7 +433,7 @@ def q_graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strongly_connected_components(edges)
 
 
-_HB_ROUNDS = 15  # covers smallG's diameter (>= 14, see q_graph_ecc_smallg)
+_HB_ROUNDS = 15  # covers smallG's diameter (_SMALLG_DIAM, see q_graph_ecc_smallg)
 
 
 @register(
@@ -515,8 +524,9 @@ def q_graph_hyperball_smallg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KCORE_SMALLG_K = 8
-# Peeling depth for k=8 on smallG is 8 rounds (measured by a Python
-# Matula-Beck peel of the static file); unroll a couple extra — once
+# Peeling depth for k=8 on the real smallG is 8 rounds (measured by a
+# Python Matula-Beck peel of the static file; tests/test_reference_graphs.py
+# checks the resolved file against this bound); unroll a couple extra — once
 # the core is stable each further round is an exact no-op.
 _KCORE_SMALLG_ROUNDS = 10
 
@@ -558,9 +568,9 @@ def _kcore_smallg_oracle(
 @register(
     "q_graph_kcore_smallg",
     oracle=_kcore_smallg_oracle(),
-    doc="8-core of the reference's smallG graph (67 vertices survive "
-    "an 8-round peeling cascade), hash-checked against the peeling "
-    "loop unrolled in SQL — the static file makes the data-dependent "
+    doc="8-core of the reference's smallG graph (on the real smallG 67 "
+    "vertices survive an 8-round peeling cascade), hash-checked "
+    "against the peeling loop unrolled in SQL — the static file makes the data-dependent "
     "round count a constant, giving the iterative kcore operator an "
     "exact external oracle that the sf-scaled q_graph_kcore (rows-"
     "only) can't have.",
@@ -980,7 +990,8 @@ _HARMONIC_LCM = 360360  # lcm(1..13), and ALSO divisible by 14
     "path (q_graph_hyperball_smallg) or landmark sampling "
     "(q_graph_closeness_landmarks); this query is the family's exact "
     "ground truth. Iterates to _SMALLG_DIAM=14 (the graph diameter — "
-    "NOT ecc(0)=13, which would drop the 56 dist-14 pairs) with an "
+    "NOT ecc(0)=13, which on the real smallG would drop the 56 "
+    "dist-14 pairs) with an "
     "empty-frontier break. Numeric contract: 1/dist terms are scaled "
     "by 360360 = lcm(1..13), also divisible by 14, so BOTH engines sum "
     "exact integers and divide once — float summation order never "

@@ -27,7 +27,7 @@ from bfs_mapreduce_spark.plans.reliable import (
     ckpt_lazy as _ckpt_lazy,  # lineage truncation, deferred to the next action
 )
 from bfs_mapreduce_spark.registry import register
-from bfs_mapreduce_spark.sources.readers import load_table
+from bfs_mapreduce_spark.sources.readers import load_table, read_edge_list, reference_graph
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1528,7 +1528,7 @@ _SQL_RECURSIVE_WALKS_BODY = """
     FROM walk WHERE len > 0 GROUP BY id, len
     """
 
-_SMALLG_PATH = "/root/reference/datasets/smallG.txt"
+_SMALLG_PATH = reference_graph("smallG")
 
 
 @register(
@@ -1565,8 +1565,6 @@ def q_sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_relational.py.",
 )
 def q_sql_recursive_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bfs_mapreduce_spark.sources.readers import read_edge_list
-
     read_edge_list(spark, _SMALLG_PATH).createOrReplaceTempView(
         "smallg_edges"
     )

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.plans.reliable import ckpt as _ckpt
 from bfs_mapreduce_spark.registry import register
-from bfs_mapreduce_spark.sources.readers import load_table
+from bfs_mapreduce_spark.sources.readers import load_table, reference_graph
 from bfs_mapreduce_spark.tmputil import PROC as _PROC
 from bfs_mapreduce_spark.tmputil import proc_dir
 
@@ -707,7 +707,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SMALLG_PATH = "/root/reference/datasets/smallG.txt"
+_SMALLG_PATH = reference_graph("smallG")
 
 
 @register(

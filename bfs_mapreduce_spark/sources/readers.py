@@ -10,6 +10,9 @@ driver-side line loop.
 
 from __future__ import annotations
 
+import logging
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,6 +89,47 @@ def read_edge_list(spark: SparkSession, path: str) -> DataFrame:
             parts.getItem(1).cast("bigint").alias("dst"),
         )
     )
+
+
+REFERENCE_DIR_ENV = "SPARK_GRAFT_REFERENCE_DIR"
+# committed stand-ins, written by tools/make_reference_graphs.py
+STANDIN_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "reference_graphs"
+)
+_warned_missing: set[str] = set()
+
+
+def reference_dir() -> str:
+    """Directory holding the reference's own datasets:
+    ``$SPARK_GRAFT_REFERENCE_DIR``, else the reference checkout's
+    ``datasets`` directory."""
+    return os.environ.get(REFERENCE_DIR_ENV, "/root/reference/datasets")
+
+
+def reference_graph(name: str) -> str:
+    """Path of the reference's edge list ``name`` (``tinyG``/``smallG``).
+
+    ``<reference_dir()>/<name>.txt`` when that file exists, so a
+    machine with the real datasets checks the paper's own data;
+    otherwise the committed stand-in of the same documented shape
+    (FIXTURES.md §1), with one warning per process naming the missing
+    file.
+    """
+    real = os.path.join(reference_dir(), f"{name}.txt")
+    if os.path.exists(real):
+        return real
+    standin = os.path.join(STANDIN_DIR, f"{name}.txt")
+    if not os.path.exists(standin):
+        raise FileNotFoundError(
+            f"no reference graph {name!r}: neither {real} nor {standin}"
+        )
+    if real not in _warned_missing:
+        _warned_missing.add(real)
+        logging.getLogger(__name__).warning(
+            "%s not found (set %s); using the stand-in %s",
+            real, REFERENCE_DIR_ENV, standin,
+        )
+    return standin
 
 
 def write_csv_append(df: DataFrame, path: str, header: bool = True) -> None:

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from bfs_mapreduce_spark.plans.reliable import ckpt_lazy as _ckpt_lazy
-from bfs_mapreduce_spark.sources.readers import load_table
+from bfs_mapreduce_spark.sources.readers import load_table, reference_graph
 
 # Per-process staging root (tmputil): two concurrent sessions staging
 # the same sf_dir must not interleave writes behind each other's
@@ -535,7 +535,7 @@ def q_stream_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream(pii_mask_frame(s), output_mode="append")
 
 
-_SMALLG_FILE = "/root/reference/datasets/smallG.txt"
+_SMALLG_FILE = reference_graph("smallG")
 _EDGE_CHUNKS = 5
 
 

@@ -6,7 +6,6 @@ os.environ.setdefault("SPARK_GRAFT_UI", "false")
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
-REF_DATASETS = "/root/reference/datasets"
 
 
 @pytest.fixture(scope="session")

@@ -13,12 +13,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.operators.graph import adjacency, bfs, undirected_edges
-from bfs_mapreduce_spark.sources.readers import read_edge_list
+from bfs_mapreduce_spark.sources.readers import read_edge_list, reference_graph
 
 from tests.graph_oracle import bfs_oracle, load_edge_list
 
-TINY = "/root/reference/datasets/tinyG.txt"
-SMALL = "/root/reference/datasets/smallG.txt"
+TINY = reference_graph("tinyG")
+SMALL = reference_graph("smallG")
 
 DISCONNECTED = [(0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (6, 7), (8, 8)]
 MULTI_EDGE = [(0, 1), (0, 1), (1, 0), (1, 2), (2, 2), (0, 2), (2, 3), (3, 0), (4, 3)]
@@ -476,9 +476,10 @@ def test_bfs_deferred_repartition_swap(spark, with_paths):
     """Shuffle-join rounds: a frontier over broadcast_frontier_rows is
     not broadcast but shuffled onto the adjacency table's hash(src)
     partitioning (the table itself never moves). Force that path with a
-    tiny threshold on smallG (frontiers reach 30+) and on a synthetic
-    fixture covering the non-reached_only output path, and demand
-    results identical to the broadcast-only default."""
+    tiny threshold on smallG (its frontiers are larger than
+    broadcast_frontier_rows=2) and on a synthetic fixture covering the
+    non-reached_only output path, and demand results identical to the
+    broadcast-only default."""
     edges_df = read_edge_list(spark, SMALL)
     want = {r["id"]: (r["dist"], r["path"]) for r in bfs(edges_df).collect()}
     got = {

@@ -425,7 +425,7 @@ def test_recursive_walks_agree_with_driver_loop_bfs(spark, sf_oracle_dir):
     the one-plan recursion and the driver-loop engine certify each
     other on the reference's own graph (depth 4 horizon)."""
     from bfs_mapreduce_spark.operators.graph import bfs
-    from bfs_mapreduce_spark.sources.readers import read_edge_list
+    from bfs_mapreduce_spark.sources.readers import read_edge_list, reference_graph
 
     walks = CATALOG["q_sql_recursive_walks"].build(spark, sf_oracle_dir)
     min_len = {
@@ -434,7 +434,7 @@ def test_recursive_walks_agree_with_driver_loop_bfs(spark, sf_oracle_dir):
         # walks revisit the source (any even-length loop); BFS says 0
         if r["id"] != 0
     }
-    edges = read_edge_list(spark, "/root/reference/datasets/smallG.txt")
+    edges = read_edge_list(spark, reference_graph("smallG"))
     res = bfs(edges, source=0, with_paths=False, max_rounds=4,
               warn_on_truncation=False, reached_only=True)
     dist = {r["id"]: r["dist"] for r in res.collect() if r["dist"] > 0}

@@ -18,11 +18,11 @@ from pyspark.sql import functions as F
 
 from bfs_mapreduce_spark.operators.graph import bfs, kcore
 from bfs_mapreduce_spark.plans import reliable
-from bfs_mapreduce_spark.sources.readers import read_edge_list
+from bfs_mapreduce_spark.sources.readers import read_edge_list, reference_graph
 
 from tests.graph_oracle import bfs_oracle, load_edge_list
 
-TINY = "/root/reference/datasets/tinyG.txt"
+TINY = reference_graph("tinyG")
 
 
 def blow_all_blocks(spark):
