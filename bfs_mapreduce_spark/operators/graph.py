@@ -32,7 +32,7 @@ Scale posture (what changes at 100 TB / 1000 executors):
   every vertex every round, ``BFS_map_reduce.py:40-41``).
 - The graph is one adjacency table ``(src, nbrs ARRAY<BIGINT>)`` per
   call, built in one scan of the edges and one exchange
-  (``edge_partitions`` wide, hash-partitioned on ``src``) and persisted;
+  (sized from the input bytes, hash-partitioned on ``src``) and persisted;
   its ``src`` column is the whole vertex universe. Small frontiers are
   broadcast (the table never moves); a frontier over the broadcast
   threshold is shuffled onto the table's own partitioning, so a
@@ -199,8 +199,6 @@ def bfs(
     source_df: DataFrame | None = None,
     source_df_rows: int | None = None,
     stats: dict | None = None,
-    edge_partitions: int | None = None,
-    dedup_edges: bool = False,
 ) -> DataFrame:
     """Single-source shortest paths via level-synchronous BFS.
 
@@ -248,8 +246,8 @@ def bfs(
     Join-strategy note: every round joins the frontier with one
     persisted adjacency table ``(src, nbrs)``, built per call in one
     scan of ``edges`` and one exchange that hash-partitions it on
-    ``src`` into ``edge_partitions`` partitions (sized from the input
-    bytes when omitted), then explodes the matched neighbour lists. The
+    ``src`` (as many partitions as :func:`_auto_edge_partitions` sizes
+    from the input bytes), then explodes the matched neighbour lists. The
     frontier comes out of ``localCheckpoint`` as an RDD scan with NO
     stats, so the planner can't see it is tiny and would broadcast the
     (stats-bearing, persisted) table every round. The driver loop knows
@@ -261,12 +259,11 @@ def bfs(
     table's partitioning. A hub's whole neighbour list is one row of the
     table, so one task explodes it; an edge table partitioned on
     ``src`` would put all of a hub's edges in one partition as well.
-    ``dedup_edges=True`` collects each list as a set inside the same
-    aggregate, so dedup adds no exchange.
+    Duplicate edges stay in the lists: both expansions (distinct /
+    min-aggregate) absorb them.
     """
     spark = edges.sparkSession
-    if edge_partitions is None:
-        edge_partitions = _auto_edge_partitions(edges, directed)
+    edge_parts = _auto_edge_partitions(edges, directed)
     if source_df is not None:
         if sources is not None:
             raise ValueError("pass either source_df or sources, not both")
@@ -319,18 +316,15 @@ def bfs(
     if stats is not None:
         stats["rounds"] = []
     with _loop_conf(spark) as default_parts:
-        # persist() plans the table now, edge_partitions wide, with AQE
+        # persist() plans the table now, sized from the input, with AQE
         # off so the cached plan keeps its hash(src) partitioning and a
         # shuffle-join round exchanges only the frontier. (A concurrent
         # loop on this session can race the width, as it can every
         # per-round width; only speed depends on it.) Columnar persist:
         # rounds scan it on the vectorized cache path; round 1's job
-        # materializes it. Dedup is opt-in: duplicate edges are harmless
-        # to both expansions (distinct / min-aggregate), so the default
-        # collects lists; dedup_edges=True collects sets in the same
-        # aggregate, for genuinely multi-edge inputs.
-        conf.set("spark.sql.shuffle.partitions", str(edge_partitions))
-        adj = _adjacency_table(edges, directed, dedup_edges).persist(
+        # materializes it.
+        conf.set("spark.sql.shuffle.partitions", str(edge_parts))
+        adj = _adjacency_table(edges, directed, dedup=False).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         for round_no in range(1, max_rounds + 1):
@@ -447,155 +441,6 @@ def bfs(
     all_vertices = adj.select(F.col("src").alias("id")).transform(_ckpt)
     adj.unpersist()
     return all_vertices.join(visited, "id", "full").select(*out_cols)
-
-
-def connected_component_of(edges: DataFrame, source: int = 0) -> DataFrame:
-    """Vertices reachable from ``source`` (a BFS byproduct the
-    reference's termination scan implicitly computes)."""
-    res = bfs(edges, source=source, with_paths=False)
-    return res.filter(F.col("dist").isNotNull()).select("id", "dist")
-
-
-def bfs_rdd(
-    edges: DataFrame,
-    source: int = 0,
-    max_rounds: int = 10_000,
-    with_paths: bool = True,
-    directed: bool = False,
-    num_partitions: int | None = None,
-    reached_only: bool = False,
-    source_df: DataFrame | None = None,
-) -> DataFrame:
-    """The north-star RDD formulation of BFS: ``mapPartitions`` frontier
-    expansion + ``aggregateByKey`` min-state reduction (BASELINE.json
-    spark_approach), kept alongside the DataFrame ``bfs`` as the
-    per-partition-imperative variant. ``source_df`` (1-row, 1-column)
-    is the scalar-subquery seed form — see ``bfs``; the seed RDD is
-    persisted and first materialized inside round 1's count job.
-
-    Faithful mapping of the reference's round structure
-    (``BFS_map_reduce.py:115-150``), with each piece landing where
-    Spark wants it:
-
-    - ``apply_map`` local grouping (:8-23)  → aggregateByKey's map-side
-      combine (runs pre-shuffle automatically);
-    - driver-funnel shuffle (:122-136)      → executor-side shuffle of
-      ``aggregateByKey`` — the driver never touches vertex state;
-    - order-based ``partition_graph`` (:72-90) → HashPartitioner via
-      ``partitionBy(n)``, computed ONCE for the adjacency RDD; every
-      round's join is then narrow on the adjacency side (co-partitioned),
-      so only the frontier moves;
-    - ``reduce_task`` argmin (:44-60)       → min over (dist, path)
-      tuples — deterministic lexicographic tie-break (fixes wart W3).
-
-    Returns the same schema as ``bfs``: (id, dist, path?).
-    """
-    spark = edges.sparkSession
-    # Partition count follows the INPUT's split count, not default
-    # parallelism: a 250-vertex edge list in one split gets 1 partition
-    # (32 would mean ~1300 near-empty Python tasks over 14 rounds —
-    # measured 2x slower on smallG), while a 100 TB input arrives in
-    # thousands of splits and fans out accordingly. Callers with better
-    # knowledge pass num_partitions explicitly.
-    n = num_partitions or max(edges.rdd.getNumPartitions(), 1)
-
-    pairs = edges.select("src", "dst").rdd.map(lambda r: (int(r[0]), int(r[1])))
-    if not directed:
-        pairs = pairs.flatMap(lambda e: [e, (e[1], e[0])])
-    loops_dropped = pairs.filter(lambda e: e[0] != e[1])
-
-    # adjacency via aggregateByKey: set-union combine (the reference's
-    # membership-tested neighbour insert, Graph.py:9-16, but hash-set);
-    # partitioned once, persisted — the static side of every round's join
-    adj = (
-        loops_dropped.aggregateByKey(
-            set(), lambda s, v: (s.add(v) or s), lambda a, b: (a.update(b) or a),
-            numPartitions=n,
-        )
-        .mapValues(sorted)
-        .persist()
-    )
-
-    if source_df is not None:
-        # scalar-subquery seed: 1-row plan, persisted so round 2's
-        # `recent` union and the vertex-universe read hit the cache
-        seed_ids = source_df.rdd.map(lambda r: int(r[0])).persist()
-    else:
-        seed_ids = spark.sparkContext.parallelize([source])
-    all_vertices = pairs.flatMap(lambda e: e).union(seed_ids).distinct()
-
-    def init_state(s):
-        return (s, (0, (s,)) if with_paths else (0, None))
-
-    frontier = seed_ids.map(init_state).partitionBy(n)
-    visited = frontier
-
-    def expand(part):
-        """mapPartitions body: reference map_task (:25-42) minus the
-        pass-through branch — settled vertices never re-emit."""
-        for _v, (nbrs, (d, path)) in part:
-            nd = d + 1
-            for nbr in nbrs:
-                yield nbr, (nd, path + (nbr,) if path is not None else None)
-
-    def min_state(a, b):
-        if a[0] == float("inf"):
-            return b
-        if b[0] == float("inf"):
-            return a
-        return min(a, b)  # (dist, path) tuple order = deterministic argmin
-
-    zero = (float("inf"), None)
-    prev = None
-    for round_no in range(1, max_rounds + 1):
-        candidates = adj.join(frontier, numPartitions=n).mapPartitions(expand)
-        # Same frontier-locality pruning as the DataFrame bfs: on an
-        # undirected graph a candidate can only be already-visited if it
-        # sits in the last two frontiers, so the subtract side stays
-        # O(frontier) instead of O(V). Directed graphs keep the full
-        # visited subtract (a back edge may hit an arbitrarily old vertex).
-        recent = frontier if prev is None else frontier.union(prev)
-        new = (
-            candidates.aggregateByKey(zero, min_state, min_state, numPartitions=n)
-            .subtractByKey(recent if not directed else visited, numPartitions=n)
-        )
-        new = new.persist()
-        if new.count() == 0:
-            break
-        visited = visited.union(new)
-        if round_no % 3 == 0:
-            # NB: the RDD truncation marks in place and returns None
-            # (unlike the DataFrame form); reliable mode uses the real
-            # RDD.checkpoint against the ambient durable directory
-            _reliable.truncate_rdd(visited)
-        prev = frontier
-        frontier = new
-
-    schema = "id bigint, dist bigint" + (", path array<bigint>" if with_paths else "")
-    if reached_only:
-        # same contract as bfs(reached_only=True): skip the vertex
-        # universe and the left join for callers that drop NULLs anyway
-        reached = visited.map(
-            lambda kv: (kv[0], kv[1][0], list(kv[1][1]))
-            if with_paths
-            else (kv[0], kv[1][0])
-        )
-        out = spark.createDataFrame(reached, schema)
-        adj.unpersist()
-        return out
-
-    rows = all_vertices.map(lambda v: (v, 1)).leftOuterJoin(visited, numPartitions=n)
-
-    def to_row(kv):
-        v, (_one, state) = kv
-        if state is None:
-            return (v, None, None) if with_paths else (v, None)
-        d, path = state
-        return (v, d, list(path)) if with_paths else (v, d)
-
-    out = spark.createDataFrame(rows.map(to_row), schema)
-    adj.unpersist()
-    return out
 
 
 def sssp(
@@ -755,6 +600,20 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
             .transform(_ckpt)
         )
     return labels
+
+
+def hyperball_round(state: DataFrame, edges: DataFrame) -> DataFrame:
+    """One HyperBall round (Boldi & Vigna 2013): each vertex's HLL sketch
+    of its r-ball, ``(v, sk)``, becomes its (r+1)-ball by a union with
+    the sketches of its ``src -> dst`` neighbours; lineage cut."""
+    nb = edges.join(state.withColumnRenamed("v", "dst"), "dst")
+    return (
+        state.select("v", "sk")
+        .unionByName(nb.select(F.col("src").alias("v"), "sk"))
+        .groupBy("v")
+        .agg(F.hll_union_agg("sk").alias("sk"))
+        .transform(_ckpt)
+    )
 
 
 def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:

@@ -469,7 +469,7 @@ _HB_ROUNDS = 15  # covers smallG's diameter (_SMALLG_DIAM, see q_graph_ecc_small
     "rse-1.6% estimates concentrate well inside it).",
 )
 def q_graph_hyperball_smallg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bfs_mapreduce_spark.operators.graph import undirected_edges
+    from bfs_mapreduce_spark.operators.graph import hyperball_round, undirected_edges
 
     edges = undirected_edges(read_edge_list(spark, _SMALLG)).transform(_ckpt)
     verts = edges.select(F.col("src").alias("v")).distinct()
@@ -494,16 +494,7 @@ def q_graph_hyperball_smallg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .transform(_ckpt)
         )
-        nb = edges.join(state.withColumnRenamed("v", "dst"), "dst").select(
-            F.col("src").alias("v"), "sk"
-        )
-        state = (
-            state.select("v", "sk")
-            .unionByName(nb)
-            .groupBy("v")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .transform(_ckpt)
-        )
+        state = hyperball_round(state, edges)
         reach = grown
         exact = grown.agg(F.count(F.lit(1)).alias("n_pairs"))
         est = state.agg(F.sum(F.hll_sketch_estimate("sk")).alias("est"))
@@ -821,41 +812,6 @@ def q_graph_triangles_smallg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bfs_mapreduce_spark.operators.graph import triangle_counts
 
     return triangle_counts(read_edge_list(spark, _SMALLG))
-
-
-@register(
-    "q_graph_bfs_rdd_histogram",
-    oracle=f"""
-    WITH RECURSIVE e AS (
-      SELECT l_orderkey AS src, l_partkey + {_PART_OFFSET} AS dst FROM lineitem),
-    sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-    s0 AS (SELECT MIN(l_orderkey) AS s FROM lineitem),
-    walk(id, dist) AS (
-      SELECT s, 0 FROM s0
-      UNION
-      SELECT sym.dst, walk.dist + 1
-      FROM walk JOIN sym ON sym.src = walk.id
-      WHERE walk.dist < {_MAX_DIST})
-    SELECT CAST(dist AS BIGINT) AS dist, COUNT(*) AS n_vertices
-    FROM (SELECT id, MIN(dist) AS dist FROM walk GROUP BY id)
-    GROUP BY dist
-    """,
-    doc="Same histogram as q_graph_bfs_histogram but computed by the "
-    "north-star RDD engine (mapPartitions expansion + aggregateByKey "
-    "min-state, BASELINE.json spark_approach) — the shared SQL oracle "
-    "proves both implementations agree.",
-)
-def q_graph_bfs_rdd_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bfs_mapreduce_spark.operators.graph import bfs_rdd
-
-    edges = _order_part_edges(spark, sf_dir)
-    res = bfs_rdd(
-        edges, source_df=edges.agg(F.min("src")), max_rounds=_MAX_DIST,
-        with_paths=False, reached_only=True,
-    )
-    return res.groupBy(F.col("dist").cast("bigint").alias("dist")).agg(
-        F.count(F.lit(1)).alias("n_vertices")
-    )
 
 
 _SSSP_ORDERS = 2000  # subgraph window: bounded oracle recursion at any sf

@@ -1886,7 +1886,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "thresholds. The thresholds come from a one-row percentile "
     "aggregate broadcast back over the metric table — NO global "
     "ntile window, so nothing ever sorts the full customer set on "
-    "one partition (the q_window_distribution_scalable lesson, "
+    "one partition (the q_window_distribution lesson, "
     "applied). Thresholds rounded to 1e-6 in both engines so an "
     "interpolation ulp can't flip a boundary customer's score.",
 )
@@ -2083,12 +2083,15 @@ def q_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_RANK_BUCKETS = 32
+
+
 def _window_distribution_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The single-partition global window — NOT in the catalog. Kept
     only as the documented anti-pattern twin for tests/test_relational.py:
     a `Window.orderBy` with no partitionBy funnels the whole table
     through one task, which is a scale-killer on an unbounded input.
-    The catalog's q_window_distribution routes to the range-bucket
+    The catalog's q_window_distribution runs the range-bucket
     decomposition below instead."""
     o = _t(spark, sf_dir, "orders")
     w = Window.orderBy("o_totalprice", "o_orderkey")
@@ -2111,15 +2114,65 @@ def _window_distribution_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (ORDER BY o_totalprice, o_orderkey)
     """,
     doc="Distribution window family: ntile / percent_rank / cume_dist "
-    "over a global ordering. Routes to the scalable range-bucket "
-    "decomposition (q_window_distribution_scalable) so no catalog "
-    "entry plans a single-partition window over an unbounded input; "
-    "the naive global-window plan survives only as "
+    "over a global ordering, without a single-partition window over "
+    "the fact rows: global rank = range-repartition on the sort key + "
+    "per-bucket row_number + broadcast cumulative bucket offsets. "
+    "Every heavy step parallelizes (one range exchange, per-bucket "
+    "sorts); the only single-partition window runs over the 32-row "
+    "bucket-count table. ntile/percent_rank/cume_dist are then pure "
+    "expressions of (rank, n) — NTILE's big-buckets-first remainder "
+    "rule reproduced exactly, and the (o_totalprice, o_orderkey) key "
+    "is unique so cume has no tie plateaus. Oracle = the plain "
+    "global-window SQL: identical values prove the decomposition. The "
+    "naive global-window plan survives only as "
     "_window_distribution_naive, exercised in tests as the documented "
     "anti-pattern.",
 )
 def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return q_window_distribution_scalable(spark, sf_dir)
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    part = o.repartitionByRange(_RANK_BUCKETS, "o_totalprice", "o_orderkey")
+    # Cache point: loc and counts both consume the bucketed frame, and
+    # two separate evaluations of a repartitionByRange can draw
+    # DIFFERENT sampled boundaries (sampler seeded by the instantiated
+    # RDD id) — the local ranks and bucket offsets would then describe
+    # different bucketings. Latent here since round 8 (exchange reuse
+    # usually saves it); caught by the round-13 10x stress pass on the
+    # same pattern in q_text_pack_token_ids.
+    b = _cache_point(part.withColumn("_b", F.spark_partition_id()))
+    wloc = Window.partitionBy("_b").orderBy("o_totalprice", "o_orderkey")
+    loc = b.withColumn("_lr", F.row_number().over(wloc))
+    counts = b.groupBy("_b").agg(F.count(F.lit(1)).alias("_c"))
+    # single-partition window — over <= _RANK_BUCKETS rows, by design
+    wcum = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = counts.select(
+        "_b",
+        F.coalesce(F.sum("_c").over(wcum), F.lit(0)).alias("_off"),
+        F.sum("_c").over(
+            Window.orderBy(F.lit(1)).rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        ).alias("_n"),
+    )
+    r = loc.join(F.broadcast(offsets), "_b").select(
+        "o_orderkey",
+        (F.col("_off") + F.col("_lr")).alias("_rank"),
+        "_n",
+    )
+    rank, n = F.col("_rank"), F.col("_n")
+    k = F.lit(4)
+    # NTILE remainder rule: first (n % k) buckets hold ceil(n/k) rows
+    big = F.floor(n / k) + 1
+    small = F.floor(n / k)
+    n_big = n % k
+    quartile = F.when(
+        rank <= n_big * big, F.floor((rank - 1) / big) + 1
+    ).otherwise(n_big + F.floor((rank - 1 - n_big * big) / small) + 1)
+    return r.select(
+        "o_orderkey",
+        quartile.cast("int").alias("quartile"),
+        F.round((rank - 1) / (n - 1), 6).alias("pct_rank"),
+        F.round(rank / n, 6).alias("cume"),
+    )
 
 
 @register(
@@ -2311,78 +2364,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same order on both engines
     w2 = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
     return runs.withColumn("valid_to", F.lead("valid_from").over(w2)).drop("event_id")
-
-
-_RANK_BUCKETS = 32
-
-
-@register(
-    "q_window_distribution_scalable",
-    oracle="""
-    SELECT o_orderkey,
-           NTILE(4) OVER w AS quartile,
-           ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank,
-           ROUND(CUME_DIST() OVER w, 6) AS cume
-    FROM orders
-    WINDOW w AS (ORDER BY o_totalprice, o_orderkey)
-    """,
-    doc="The distributed answer to q_window_distribution's documented "
-    "single-partition anti-pattern: global rank = range-repartition on "
-    "the sort key + per-bucket row_number + broadcast cumulative "
-    "bucket offsets. Every heavy step parallelizes (one range "
-    "exchange, per-bucket sorts); the only single-partition window "
-    "runs over the 32-row bucket-count table. ntile/percent_rank/"
-    "cume_dist are then pure expressions of (rank, n) — NTILE's "
-    "big-buckets-first remainder rule reproduced exactly, and the "
-    "(o_totalprice, o_orderkey) key is unique so cume has no tie "
-    "plateaus. Oracle = the plain global-window SQL: identical values "
-    "prove the decomposition.",
-)
-def q_window_distribution_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    part = o.repartitionByRange(_RANK_BUCKETS, "o_totalprice", "o_orderkey")
-    # Cache point: loc and counts both consume the bucketed frame, and
-    # two separate evaluations of a repartitionByRange can draw
-    # DIFFERENT sampled boundaries (sampler seeded by the instantiated
-    # RDD id) — the local ranks and bucket offsets would then describe
-    # different bucketings. Latent here since round 8 (exchange reuse
-    # usually saves it); caught by the round-13 10x stress pass on the
-    # same pattern in q_text_pack_token_ids.
-    b = _cache_point(part.withColumn("_b", F.spark_partition_id()))
-    wloc = Window.partitionBy("_b").orderBy("o_totalprice", "o_orderkey")
-    loc = b.withColumn("_lr", F.row_number().over(wloc))
-    counts = b.groupBy("_b").agg(F.count(F.lit(1)).alias("_c"))
-    # single-partition window — over <= _RANK_BUCKETS rows, by design
-    wcum = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_b",
-        F.coalesce(F.sum("_c").over(wcum), F.lit(0)).alias("_off"),
-        F.sum("_c").over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("_n"),
-    )
-    r = loc.join(F.broadcast(offsets), "_b").select(
-        "o_orderkey",
-        (F.col("_off") + F.col("_lr")).alias("_rank"),
-        "_n",
-    )
-    rank, n = F.col("_rank"), F.col("_n")
-    k = F.lit(4)
-    # NTILE remainder rule: first (n % k) buckets hold ceil(n/k) rows
-    big = F.floor(n / k) + 1
-    small = F.floor(n / k)
-    n_big = n % k
-    quartile = F.when(
-        rank <= n_big * big, F.floor((rank - 1) / big) + 1
-    ).otherwise(n_big + F.floor((rank - 1 - n_big * big) / small) + 1)
-    return r.select(
-        "o_orderkey",
-        quartile.cast("int").alias("quartile"),
-        F.round((rank - 1) / (n - 1), 6).alias("pct_rank"),
-        F.round(rank / n, 6).alias("cume"),
-    )
 
 
 # ------------------------------------------------- TPC-H remaining shapes (r8)

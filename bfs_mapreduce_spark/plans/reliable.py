@@ -32,9 +32,12 @@ call sites stay signature-stable::
 Every lineage cut in the package goes through this module: through
 :func:`truncate` (directly or as ``df.transform(ckpt)`` /
 ``df.transform(ckpt_lazy)``), or through :func:`spill_truncate` and
-:func:`cache_point`, whose semantics differ. tests/test_reliable.py
-fails on any ``localCheckpoint`` call outside this module, and call
-sites look ``truncate`` up here at call time, so wrapping
+:func:`cache_point`, whose semantics differ. Every loop is a DataFrame
+loop, so the module has no RDD form of the cut (a reliable
+``RDD.checkpoint`` would also need the SparkContext's checkpoint
+directory, which is set once for the whole process).
+tests/test_reliable.py fails on any ``localCheckpoint`` call outside
+this module, and call sites look ``truncate`` up here at call time, so wrapping
 ``reliable.truncate`` wraps every cut. Spill files are left on disk, the
 same contract as Spark's reliable checkpoints (cleanup is a separate
 concern — the caller owns the directory lifetime and must keep it
@@ -139,24 +142,6 @@ def cache_point(df: DataFrame, name: str = "state") -> DataFrame:
     if d is None:
         return df.persist()
     return truncate(df, name=name)
-
-
-def truncate_rdd(rdd):
-    """RDD twin of :func:`truncate` for the RDD-based loops
-    (``bfs_rdd``): marks ``rdd`` for a RELIABLE checkpoint when the
-    context is active (requires ``sc.setCheckpointDir``, which this
-    sets from the ambient directory), else ``localCheckpoint``. Both
-    mark in place and return None, matching ``RDD.localCheckpoint``'s
-    contract. Callers should persist first — Spark's reliable RDD
-    checkpoint recomputes the RDD in its writing job otherwise."""
-    d = _ckpt_dir.get()
-    if d is None:
-        rdd.localCheckpoint()
-        return
-    sc = rdd.context
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(os.path.join(d, "_rdd"))
-    rdd.checkpoint()
 
 
 def spill_truncate(df: DataFrame, name: str = "state") -> DataFrame:

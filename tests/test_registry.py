@@ -124,3 +124,32 @@ def test_rotation_is_least_recently_green():
         if q.oracle is not None and name not in heads and name in last_hash
     ]
     assert rounds == sorted(rounds)
+
+
+# Oracle-paired entries that share one oracle on purpose: each pair
+# reads a different source or runs on a different engine (batch vs
+# streaming, one file format vs another), so both sides are checked.
+_SHARED_ORACLE_PAIRS = {
+    frozenset({"q_scan_edgelist_source", "q_stream_edgelist_degree"}),
+    frozenset({"q_scan_avro", "q_stream_avro_stats"}),
+    frozenset({"q_text_pii_mask", "q_stream_pii_mask"}),
+    frozenset({"q_scan_xml", "q_scan_orc"}),
+    frozenset({"q_events_tumbling", "q_stream_tumbling"}),
+}
+
+
+def test_no_silent_duplicate_catalog_entries():
+    """Two catalog names with one oracle (after whitespace
+    normalisation) run the same check twice, usually because one plan
+    is registered under two names. Every such group must be a pair on
+    the allow-list above."""
+    groups: dict[str, set[str]] = {}
+    for name, q in CATALOG.items():
+        if q.oracle is not None:
+            groups.setdefault(" ".join(q.oracle.split()), set()).add(name)
+    dups = [
+        sorted(names)
+        for names in groups.values()
+        if len(names) > 1 and frozenset(names) not in _SHARED_ORACLE_PAIRS
+    ]
+    assert dups == [], f"catalog entries sharing one oracle: {dups}"

@@ -132,8 +132,7 @@ def test_no_cartesian_products_anywhere(spark, sf_oracle_dir):
     # plans are join+agg, audited in their own tests) — this test is
     # about single-plan catalog queries
     driver_loop = {"q_graph_bfs_smallg", "q_graph_bfs_histogram",
-                   "q_graph_bfs_rdd_histogram", "q_graph_sssp_cost",
-                   "q_graph_pagerank2", "q_dedup_clusters",
+                   "q_graph_sssp_cost", "q_graph_pagerank2", "q_dedup_clusters",
                    "q_graph_kcore", "q_similarity_kmeans_assign"}
     for name, q in CATALOG.items():
         if name.startswith("q_stream_") or name in driver_loop:
@@ -199,7 +198,7 @@ def test_distribution_scalable_uses_range_partitioning(spark, sf_oracle_dir):
     fact rows (parallel bucket sorts), never move them through a
     single-partition global window; the only single-partition work is
     over the bucket-count table."""
-    plan = _plan(CATALOG["q_window_distribution_scalable"].build(spark, sf_oracle_dir))
+    plan = _plan(CATALOG["q_window_distribution"].build(spark, sf_oracle_dir))
     assert "rangepartitioning" in plan, plan
     # the fact-side window partitions by bucket id, so no
     # Exchange SinglePartition feeds a row_number over fact rows
@@ -208,7 +207,7 @@ def test_distribution_scalable_uses_range_partitioning(spark, sf_oracle_dir):
 
 def test_catalog_window_distribution_is_the_scalable_plan(spark, sf_oracle_dir):
     """No catalog entry may plan a single-partition window over an
-    unbounded input: q_window_distribution routes to the range-bucket
+    unbounded input: q_window_distribution holds the range-bucket
     decomposition, while the naive global-window plan survives only as
     the unregistered anti-pattern twin (whose plan this test documents)."""
     from bfs_mapreduce_spark.operators.relational import _window_distribution_naive

@@ -294,7 +294,9 @@ def run_directed_scale(
     depth, and no phase is super-linear in graph size."""
     from pyspark.sql import functions as F
 
+    from bfs_mapreduce_spark.operators.graph import hyperball_round
     from bfs_mapreduce_spark.operators.graph import strongly_connected_components
+    from bfs_mapreduce_spark.plans.reliable import ckpt
 
     os.makedirs(out_dir, exist_ok=True)
     toy = spark.createDataFrame([(0, 1), (1, 0), (1, 2)], "src bigint, dst bigint")
@@ -320,21 +322,12 @@ def run_directed_scale(
             .union(edges.select(F.col("dst").alias("v")))
             .distinct()
         )
-        state = verts.groupBy("v").agg(F.hll_sketch_agg("v").alias("sk")).localCheckpoint()
-        e = edges.select("src", "dst").localCheckpoint()
+        state = verts.groupBy("v").agg(F.hll_sketch_agg("v").alias("sk")).transform(ckpt)
+        e = edges.select("src", "dst").transform(ckpt)
         hb_round_secs = []
         for _ in range(hb_rounds):
             t1 = time.perf_counter()
-            nb = e.join(state.withColumnRenamed("v", "dst"), "dst").select(
-                F.col("src").alias("v"), "sk"
-            )
-            state = (
-                state.select("v", "sk")
-                .unionByName(nb)
-                .groupBy("v")
-                .agg(F.hll_union_agg("sk").alias("sk"))
-                .localCheckpoint()
-            )
+            state = hyperball_round(state, e)
             hb_round_secs.append(round(time.perf_counter() - t1, 3))
         est_pairs = int(
             state.agg(F.sum(F.hll_sketch_estimate("sk"))).first()[0]
