@@ -42,15 +42,8 @@ carries ``minhash_phases``: per-phase mins (shingle / signature_band /
 bucket_candidates / verify) for the suite's biggest line, so a moved
 number names its phase.
 
-Round-19 change (verdict ask #2, training honesty): the in-process
-quantizer/codebook memo (the training entries of
-similarity_queries._TRAIN_CACHE; its embedding-count entry stays) is
-cleared before EVERY timed rep — in the suite loop and in --ab — so min-of-N
-measures compute-from-source for the IVF-PQ queries instead of letting
-reps 2+ serve a trained quantizer from the memo (~35% of that query's
-true cost, the builder's own r18 cache A/B). Expect the ivfpq lines to
-read higher than r18 by about that much; the regression is an accepted
-measurement fix, not a perf change (the r18 verdict pre-approved it).
+IVF-PQ training keeps no memo between builds, so every timed rep of
+the IVF-PQ queries computes its quantizer and codebook from source.
 
 Round-13 changes (verdict asks #7/#8): q_similarity_ivfpq_spill joins
 the headline suite (the ANN tier gets canary-tracked), and the
@@ -129,8 +122,8 @@ def _bfs_phase_rep(spark, sf_dir: str) -> list[dict]:
 def _minhash_phase_rep(spark, sf_dir: str) -> list[dict]:
     """One phase-decomposed MinHash-LSH rep (diagnostic, NOT part of
     the metric): shingle → signature/band table → bucket candidates →
-    exact-Jaccard verify, each stage materialized behind a
-    localCheckpoint so the next stage's wall-clock is incremental.
+    exact-Jaccard verify, each stage materialized behind a lazy
+    lineage cut so the next stage's wall-clock is incremental.
     Mirrors q_dedup_minhash_lsh's defaults (64 hashes, r=2, 0.5
     threshold). Exists because BENCH_r09's driver artifact and the
     in-round best-ever for this query sat 40% apart — the per-phase
@@ -142,6 +135,7 @@ def _minhash_phase_rep(spark, sf_dir: str) -> list[dict]:
         minhash_band_table,
         shingle_arrays,
     )
+    from bfs_mapreduce_spark.plans.reliable import ckpt_lazy
     from bfs_mapreduce_spark.sources.readers import load_table
 
     out: list[dict] = []
@@ -155,13 +149,9 @@ def _minhash_phase_rep(spark, sf_dir: str) -> list[dict]:
         return df
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = timed(shingle_arrays(docs).localCheckpoint(eager=False), "shingle")
-    bt = timed(
-        minhash_band_table(sh).localCheckpoint(eager=False), "signature_band"
-    )
-    cand = timed(
-        lsh_candidates(bt).localCheckpoint(eager=False), "bucket_candidates"
-    )
+    sh = timed(ckpt_lazy(shingle_arrays(docs)), "shingle")
+    bt = timed(ckpt_lazy(minhash_band_table(sh)), "signature_band")
+    cand = timed(ckpt_lazy(lsh_candidates(bt)), "bucket_candidates")
     sa = sh.select(Fn.col("doc_id").alias("doc_a"), Fn.col("shingles").alias("sh_a"))
     sb = sh.select(Fn.col("doc_id").alias("doc_b"), Fn.col("shingles").alias("sh_b"))
     inter = Fn.size(Fn.array_intersect("sh_a", "sh_b"))
@@ -210,18 +200,6 @@ def _paired_summary(pairs: list[dict], old: str = "old", new: str = "new") -> di
     }
 
 
-def _clear_training_memo() -> None:
-    """Drop the IVF-PQ training entries (``spill_cent``/``pq_book``)
-    of similarity_queries._TRAIN_CACHE so a timed rep pays full
-    training. The ``("n", ...)`` embedding-count memo is not training
-    and stays: clearing it would add a count job to other queries."""
-    from bfs_mapreduce_spark.operators import similarity_queries as _simq
-
-    cache = _simq._TRAIN_CACHE
-    for key in [k for k in cache if k[0] in ("spill_cent", "pq_book")]:
-        del cache[key]
-
-
 def ab_main(old_name: str, new_name: str) -> None:
     """Interleaved in-process A/B (round 14, verdict ask #4 — the
     standard instrument for perf claims under the ~16% canary error
@@ -249,9 +227,6 @@ def ab_main(old_name: str, new_name: str) -> None:
         raise SystemExit(f"unknown quer{'y' if len(missing)==1 else 'ies'}: {missing}")
 
     def run(name: str) -> float:
-        # same training-honesty rule as the suite loop: every timed
-        # sample computes from source (see run_once in main)
-        _clear_training_memo()
         t0 = time.perf_counter()
         catalog[name].build(spark, sf_dir).count()
         return round(time.perf_counter() - t0, 4)
@@ -322,6 +297,7 @@ def main() -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as Fn
 
+    from bfs_mapreduce_spark.plans.reliable import ckpt
     from bfs_mapreduce_spark.sources.readers import TABLES, load_table
 
     for t in TABLES:
@@ -333,7 +309,7 @@ def main() -> None:
         .over(Window.partitionBy("l_orderkey").orderBy("l_linenumber"))
         .alias("rn")
     ).filter("rn < 0").count()
-    spark.range(10).localCheckpoint().count()
+    ckpt(spark.range(10)).count()
     # warm the iterative machinery (broadcast join / anti-join /
     # checkpoint codegen) on a toy graph
     from bfs_mapreduce_spark.operators.graph import bfs
@@ -371,14 +347,7 @@ def main() -> None:
         q = catalog.get(name)
         if q is None:
             return None
-        # Training-honesty (round 19, verdict ask #2): the in-process
-        # quantizer/codebook memo is a real pipeline feature, but under
-        # the min-of-3 protocol reps 2-3 of the IVF-PQ queries would
-        # serve the trained quantizer from the memo and the reported
-        # min would exclude ~35% of the query's true compute-from-
-        # source cost. Clear it before EVERY timed rep so each sample
-        # pays full training; the cache stays on for real pipeline use.
-        _clear_training_memo()
+        # IVF-PQ training has no memo: every rep computes from source
         t0 = time.perf_counter()
         try:
             n = q.build(spark, sf_dir).count()

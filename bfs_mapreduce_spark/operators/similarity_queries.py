@@ -21,7 +21,7 @@ Scale posture (the 100 TB story):
 
 from __future__ import annotations
 
-import os
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 import pandas as pd
@@ -96,6 +96,44 @@ def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
 
 def _norm(v: str | F.Column) -> F.Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x))
+
+
+def _snap6(x: np.ndarray) -> np.ndarray:
+    """Snap to the 1e-6 grid HALF_UP, like Spark's ``F.round(x, 6)``
+    (np.round is half-to-even — an exact .5e-6 tie would silently flip
+    a tie-break vs the certified Catalyst fold). Caveat: F.round
+    converts the double via its shortest decimal repr before rounding;
+    a value within 1 ulp of an exact tie can still differ — no such tie
+    exists in any certified corpus (0/80k pairs)."""
+    return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5), x) / 1e6
+
+
+# HALF_UP at a precision exact for any double's decimal string
+_DEC = Context(prec=400, rounding=ROUND_HALF_UP)
+_E9 = Decimal("1e-9")
+
+
+def _snap9(X: np.ndarray) -> np.ndarray:
+    """Snap a 2-D matrix to the 1e-9 grid exactly as ``F.round(x, 9)``
+    does: HALF_UP on the double's decimal string, which is what Spark's
+    BigDecimal rounds. Elementwise in Python — only centroid and
+    codebook matrices (at most cells x dims) pass through here.
+    ``+ 0.0`` turns a rounded ``-0E-9`` into 0.0, as Spark does."""
+    return np.array(
+        [
+            [float(_DEC.quantize(Decimal(repr(v)), _E9)) + 0.0 for v in row]
+            for row in X.tolist()
+        ],
+        dtype=np.float64,
+    )
+
+
+def _sub_d2(X: np.ndarray, Bs: np.ndarray) -> np.ndarray:
+    """1e-6-snapped squared L2 from each row of ``X`` to each codeword
+    row of ``Bs`` — in the JVM fold's form, (x - c)^2 elementwise then
+    summed over the subspace, with no ||a||^2 - 2ab + ||b||^2
+    rearrangement (different rounding)."""
+    return _snap6(((X[:, None, :] - Bs[None, :, :]) ** 2).sum(axis=2))
 
 
 @register(
@@ -188,8 +226,7 @@ def _exact_topk_gemm(raw: DataFrame, q: DataFrame, k: int) -> DataFrame:
                     "(the SQL twin raises DIVIDE_BY_ZERO under ANSI)"
                 )
             dots = M @ QT / (mn[:, None] * qn[None, :])
-            # HALF_UP like F.round — see _cell_scores_np's caveat note
-            cc = np.copysign(np.floor(np.abs(dots) * 1e6 + 0.5), dots) / 1e6
+            cc = _snap6(dots)
             cc[vid[:, None] == qids[None, :]] = -np.inf  # self-pairs out
             kth = min(k, cc.shape[0]) - 1
             thr = -np.partition(-cc, kth, axis=0)[kth, :]
@@ -370,21 +407,11 @@ def _cent_matrix(cent: DataFrame):
     """Collect a (small) centroid frame to driver-side numpy, sorted
     by cell ascending — the argmax-first-occurrence tie-break then
     equals ``max_by(cosine desc, cell asc)``. Returns
-    ``(cells int64[], C float64[k,d], cn float64[], cell_type_str)``.
-
-    Accepts a :class:`_CentRows` holder (the trained-quantizer cache,
-    round 18) and builds the matrices with ZERO Spark jobs — the
-    rows are exactly what this function would have collected."""
-    import numpy as np
-
-    if isinstance(cent, _CentRows):
-        rows = sorted(cent.rows)
-        return (
-            np.array([r[0] for r in rows], dtype=np.int64),
-            np.array([r[1] for r in rows], dtype=np.float64),
-            np.array([r[2] for r in rows], dtype=np.float64),
-            "bigint",
-        )
+    ``(cells int64[], C float64[k,d], cn float64[], cell_type_str)``;
+    a tuple already in that form (the driver-trained quantizer of
+    :func:`_train_quantizer`) passes through with zero Spark jobs."""
+    if isinstance(cent, tuple):
+        return cent
     rows = cent.select("cell", "cv", "cn").limit(_MAX_DRIVER_CODEBOOK + 1).collect()
     if len(rows) > _MAX_DRIVER_CODEBOOK:
         raise ValueError(
@@ -460,14 +487,7 @@ def _cell_scores_np(
                     "zero-norm vector: cosine scoring is undefined for "
                     "it (the SQL twin raises DIVIDE_BY_ZERO under ANSI)"
                 )
-            # HALF_UP like Spark's F.round (np.round is half-to-even —
-            # an exact .5e-6 tie would silently flip the tie-break vs
-            # the certified Catalyst fold). Caveat: F.round converts
-            # the double via its shortest decimal repr before rounding;
-            # a value within 1 ulp of an exact tie can still differ —
-            # no such tie exists in any certified corpus (0/80k pairs).
-            raw = V @ CT / (vn * cn[None, :])
-            cc = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
+            cc = _snap6(V @ CT / (vn * cn[None, :]))
             if argmax:
                 # first max along ascending-cell columns == max cosine,
                 # min cell — _nearest_cell's exact tie-break
@@ -604,8 +624,7 @@ def _cell_pairs_np(
         block = max(1, min(2048, _TILE_DOUBLES // m))
         for s in range(0, m, block):
             e = min(s + block, m)
-            raw = (V[s:e] @ V.T) / (n[s:e, None] * n[None, :])
-            cc = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
+            cc = _snap6((V[s:e] @ V.T) / (n[s:e, None] * n[None, :]))
             for bi in range(e - s):
                 i = s + bi
                 row = cc[bi, i + 1 :]
@@ -643,8 +662,7 @@ def _cell_pairs_np(
         block = max(1, min(2048, _TILE_DOUBLES // max(len(ids_r), 1)))
         for s in range(0, len(ids_l), block):
             e = min(s + block, len(ids_l))
-            raw = (VL[s:e] @ VR.T) / (nl[s:e, None] * nr[None, :])
-            cc = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
+            cc = _snap6((VL[s:e] @ VR.T) / (nl[s:e, None] * nr[None, :]))
             ia = np.repeat(ids_l[s:e], len(ids_r))
             ib = np.tile(ids_r, e - s)
             got = _emit(ia, ib, cc.ravel())
@@ -1093,7 +1111,7 @@ _PQ_SHORTLIST = 200        # ADC shortlist size fed to the exact rerank
 #   partial top-S, never a full sort); in SQL a ROW_NUMBER + LIMIT.
 #   No RNG: both engines derive the identical sample, so the learned
 #   quantizer itself stays inside the oracle's value hash.
-# - coarse seeds = the first _IVF_K sample rows (a uniform random
+# - coarse seeds = the first k sample rows (a uniform random
 #   draw under the permutation — the deterministic counterpart of
 #   random init; k-means++-style spread is available via
 #   q_similarity_kcenter_seed's farthest-point machinery when a
@@ -1108,7 +1126,6 @@ _PQ_SHORTLIST = 200        # ADC shortlist size fed to the exact rerank
 _Q_SAMPLE = 1024           # bounded training sample floor (rows)
 _Q_PERM_A = 2654435761     # Knuth multiplicative hash constant
 _Q_PERM_MOD = 4294967296   # 2^32
-_IVF_K = 40                # learned coarse cells — explicit config
 _PQ_K = 40                 # PQ codewords per subspace — explicit config
 
 # Derived cell count for the spill query (round 17, second iteration —
@@ -1161,9 +1178,9 @@ _SQL_DERIVED_K = (
 
 # Shared sample CTEs (round 17): the deterministic Knuth-permutation
 # training sample, its exploded components, and the fixed-size PQ
-# codebook — the SQL unroll of _perm_ranked_sample /
-# sampled_pq_codebook, so the corpus-decoupled quantizer training
-# itself sits inside the oracle's value hash.
+# codebook — the SQL unroll of _perm_sample / _pq_book, so the
+# corpus-decoupled quantizer training itself sits inside the oracle's
+# value hash.
 _SQL_SAMPLE_CTES = f"""
     perm AS (
       SELECT vec_id, embedding,
@@ -1225,119 +1242,6 @@ def _sql_samp_recentroid(assign_cte: str, out: str) -> str:
       GROUP BY cell)"""
 
 
-# Trained-quantizer cache (round 18, verdict ask #6): the sample
-# permutation + Lloyd rounds + PQ-codebook aggregation are Spark job
-# chains that reran on EVERY execute of the IVF-PQ queries even
-# though they are pure functions of (corpus bytes, config). Keyed by
-# the corpus's parquet (path, size, mtime_ns) stat fingerprint + every
-# training config, the cache stores the COLLECTED rows (bounded by
-# the same driver cap as the downstream collect) wrapped as
-# driver-resident row holders that _cent_matrix/_book_matrices
-# consume DIRECTLY — no createDataFrame, no re-collect: a first
-# implementation rebuilt a createDataFrame per execute and each
-# downstream collect paid a ~0.36 s 32-task parallelize job, 4x per
-# execute — measurably SLOWER than retraining at bench scale. Values
-# are identical by construction (the cached rows ARE what the first
-# execute collected), so certified hashes cannot move. In-process
-# only: a new session retrains; a rewritten corpus changes the stat
-# fingerprint and misses.
-_TRAIN_CACHE: dict[tuple, object] = {}
-
-
-class _CentRows:
-    """Driver-resident trained-centroid rows ``[(cell, cv, cn)]`` —
-    a stand-in for the centroid DataFrame accepted by
-    :func:`_cent_matrix` (its only consumer in the cached queries)."""
-
-    def __init__(self, rows: list):
-        self.rows = rows
-
-
-class _BookRows:
-    """Driver-resident PQ-codebook rows ``[(s, j, cv)]`` — a stand-in
-    for the codebook DataFrame accepted by :func:`_book_matrices`."""
-
-    def __init__(self, rows: list):
-        self.rows = rows
-
-
-def _emb_fingerprint(sf_dir: str) -> tuple:
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    paths = [path]
-    if os.path.isdir(path):  # multi-file parquet tables
-        paths = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith(("_", "."))
-        )
-    return tuple(
-        (p, st.st_size, st.st_mtime_ns)
-        for p in paths
-        for st in [os.stat(p)]
-    )
-
-
-def _cached_emb_count(emb: DataFrame, sf_dir: str) -> int:
-    key = ("n", _emb_fingerprint(sf_dir))
-    if key not in _TRAIN_CACHE:
-        _TRAIN_CACHE[key] = emb.count()
-    return _TRAIN_CACHE[key]
-
-
-def _cached_spill_quantizer(
-    spark: SparkSession, sf_dir: str, base: DataFrame, k: int
-) -> "_CentRows":
-    """The spill query's trained coarse quantizer, served from the
-    cache when this corpus+config was already trained this session —
-    as driver-resident rows consumed by :func:`_cent_matrix` with
-    zero Spark jobs."""
-    key = (
-        "spill_cent",
-        _emb_fingerprint(sf_dir),
-        k,
-        _Q_SAMPLE_PER_K,
-        _Q_SAMPLE,
-        _SPILL_ITERS,
-    )
-    if key not in _TRAIN_CACHE:
-        cent = sampled_quantizer(
-            base, k=k, sample=_q_sample_for(k), iters=_SPILL_ITERS
-        )
-        rows = cent.select("cell", "cv", "cn").limit(_MAX_DRIVER_CODEBOOK + 1).collect()
-        if len(rows) > _MAX_DRIVER_CODEBOOK:
-            raise ValueError(
-                f"centroid frame exceeds {_MAX_DRIVER_CODEBOOK} rows — "
-                "refusing to cache it (same bound as _cent_matrix)"
-            )
-        _TRAIN_CACHE[key] = _CentRows(
-            [(r["cell"], list(r["cv"]), r["cn"]) for r in rows]
-        )
-    return _TRAIN_CACHE[key]
-
-
-def _cached_pq_book(
-    spark: SparkSession, sf_dir: str, base: DataFrame
-) -> "_BookRows":
-    key = ("pq_book", _emb_fingerprint(sf_dir), _PQ_K, _Q_SAMPLE)
-    if key not in _TRAIN_CACHE:
-        rows = (
-            sampled_pq_codebook(base)
-            .limit(_MAX_DRIVER_CODEBOOK + 1)
-            .collect()
-        )
-        if len(rows) > _MAX_DRIVER_CODEBOOK:
-            raise ValueError(
-                f"PQ codebook exceeds {_MAX_DRIVER_CODEBOOK} rows — "
-                "refusing to cache it (same bound as _book_matrices)"
-            )
-        _TRAIN_CACHE[key] = _BookRows(
-            [(r["s"], r["j"], list(r["cv"])) for r in rows]
-        )
-    return _TRAIN_CACHE[key]
-
-
 def _l2sq(a: str | F.Column, b: str | F.Column) -> F.Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
@@ -1346,129 +1250,74 @@ def _l2sq(a: str | F.Column, b: str | F.Column) -> F.Column:
     )
 
 
-def _perm_ranked_sample(base: DataFrame, n: int = _Q_SAMPLE) -> DataFrame:
-    """Bounded deterministic training sample: ``(vec_id, v, n, rnk)``
-    for the first ``n`` rows of the Knuth-hash permutation of
-    ``base`` (which must carry vec_id, v, n). The orderBy+limit is a
-    TakeOrderedAndProject — each task keeps its local top-``n`` by
-    (hash, vec_id) and only those reach the driver-side merge, so the
-    sample costs one corpus scan at ANY corpus size. The ranking
-    window after the limit runs over ``n`` rows in one task (bounded
-    by config, not by the corpus). ``rnk`` is 1-based like SQL's
-    ROW_NUMBER, bigint to match the oracle's."""
+def _perm_sample(base: DataFrame, n: int) -> list:
+    """Bounded deterministic training sample: the first ``n`` rows
+    ``(vec_id, v, n)`` of the Knuth-hash permutation of ``base``, in
+    rank order (row ``i`` is SQL's ``rnk = i + 1``). The orderBy+limit
+    is a TakeOrderedAndProject — each task keeps its local top-``n``
+    by (hash, vec_id) and only those reach the driver — so the sample
+    costs one corpus scan and one collect at ANY corpus size."""
     h = (F.col("vec_id") * F.lit(_Q_PERM_A)) % F.lit(_Q_PERM_MOD)
-    w = Window.orderBy("h", "vec_id")
-    return (
-        base.select("vec_id", "v", "n")
-        .withColumn("h", h)
-        .orderBy("h", "vec_id")
-        .limit(n)
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .drop("h")
-    )
+    return base.orderBy(h, "vec_id").limit(n).select("vec_id", "v", "n").collect()
 
 
-def sampled_quantizer(
-    base: DataFrame,
-    k: int | None = _IVF_K,
-    sample: int = _Q_SAMPLE,
-    iters: int = 2,
-) -> DataFrame:
-    """Corpus-decoupled coarse quantizer (round 17, verdict ask #1):
-    ``k`` seed centroids = the first ``k`` rows of the deterministic
-    sample permutation, refined by ``iters`` Lloyd rounds over the
-    SAMPLE only — so training cost is O(sample · k · iters) and the
-    served centroid frame has at most ``k`` rows regardless of corpus
-    size (cells can die during Lloyd, never appear). ``k=None``
-    derives min(256, ceil(sqrt(corpus))) — the FAISS rule of thumb —
-    at the cost of one count() job (registered queries pin a literal
-    ``k`` so their SQL oracles can unroll the identical training).
-    Returns the usual ``(cell, cv, cn)`` centroid frame; everything
-    downstream (GEMM assignment/topn, ADC) is unchanged."""
-    if k is None:
-        import math
-
-        k = min(256, math.isqrt(max(base.count(), 1) - 1) + 1)
-    s = _perm_ranked_sample(base, sample).transform(_cache_point)
-    cent = (
-        s.filter(F.col("rnk") <= k)
-        .select(
-            (F.col("rnk") - 1).alias("cell"),
-            F.col("v").alias("cv"),
-            F.col("n").alias("cn"),
+def _train_quantizer(sample: list, k: int):
+    """Corpus-decoupled coarse quantizer, trained in numpy on the
+    driver: ``k`` seed centroids = the first ``k`` sample rows (cell =
+    rank - 1, the collected norm as ``cn``), refined by
+    ``_SPILL_ITERS`` Lloyd rounds over the sample only — training cost
+    is O(sample · k) and at most ``k`` cells are served (cells
+    die during Lloyd, never appear). Every step mirrors the oracle's
+    unrolled SQL: assignment is the 1e-6-snapped cosine with the
+    first-argmax (lowest cell) tie-break of :func:`_cell_scores_np`;
+    a centroid is the per-(cell, pos) member mean snapped like
+    ``F.round(avg, 9)``; ``cn`` is the left fold of squares that
+    :func:`_norm` computes; a cell that loses every member drops out.
+    Returns :func:`_cent_matrix`'s tuple."""
+    V = np.array([r["v"] for r in sample], dtype=np.float64)
+    vn = np.array([r["n"] for r in sample], dtype=np.float64)
+    if np.any(vn == 0):
+        raise ValueError(
+            "zero-norm vector: cosine scoring is undefined for it "
+            "(the SQL twin raises DIVIDE_BY_ZERO under ANSI mode)"
         )
-        .transform(_cache_point)
-    )
-    sb = s.select("vec_id", "v", "n")
-    for _ in range(iters):
-        assign = _cell_scores_np(sb, cent, argmax=True).select("vec_id", "cell")
-        pairs = sb.join(assign, "vec_id").select(
-            "cell", F.posexplode("v").alias("pos", "x")
-        )
-        cent = _centroid_frame(pairs).transform(_cache_point)
-    return cent
-
-
-def sampled_pq_codebook(
-    base: DataFrame, kpq: int = _PQ_K, sample: int = _Q_SAMPLE
-) -> DataFrame:
-    """Corpus-decoupled PQ codebook (round 17, verdict ask #1):
-    exactly ``_PQ_M x kpq`` codewords — per-(subspace, rank mod kpq)
-    component means over the deterministic sample, 1e-9-snapped like
-    every centroid in this module. Replaces the label x (vec_id %
-    _PQ_KG) seeding whose codeword count grew with the corpus's label
-    cardinality."""
-    s = _perm_ranked_sample(base, sample)
-    subs = s.select(
-        ((F.col("rnk") - 1) % kpq).alias("j"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(sp).alias("s"),
-                        F.slice("v", sp * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for sp in range(_PQ_M)
-                ]
+    cells = np.arange(min(k, len(sample)), dtype=np.int64)
+    C, cn = V[: len(cells)], vn[: len(cells)]
+    for _ in range(_SPILL_ITERS):
+        if np.any(cn == 0):
+            raise ValueError(
+                "zero-norm centroid: cosine scoring is undefined for it "
+                "(the SQL twin raises DIVIDE_BY_ZERO under ANSI mode)"
             )
-        ).alias("x"),
-    ).select("j", F.col("x.s").alias("s"), F.col("x.sv").alias("sv"))
-    return (
-        subs.select("s", "j", F.posexplode("sv").alias("pos", "x"))
-        .groupBy("s", "j", "pos")
-        .agg(F.round(F.avg("x"), 9).alias("avg"))
-        .groupBy("s", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "avg"))).alias("pa"))
-        .select("s", "j", F.transform("pa", lambda t: t["avg"]).alias("cv"))
-        .transform(_cache_point)  # m*k rows; shared by encode AND the LUT
-    )
+        j = _snap6(V @ C.T / (vn[:, None] * cn[None, :])).argmax(axis=1)
+        live = np.unique(j)  # ascending, so cells stay sorted
+        C = _snap9(np.stack([V[j == c].mean(axis=0) for c in live]))
+        cells = cells[live]
+        cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
+    return cells, C, cn, "bigint"
+
+
+def _pq_book(sample: list):
+    """Corpus-decoupled PQ codebook, built in numpy on the driver:
+    exactly ``_PQ_M x _PQ_K`` codewords — per-(subspace, (rank - 1) mod
+    _PQ_K) component means over the sample, snapped like
+    ``F.round(avg, 9)``. Returns :func:`_book_matrices`' tuple."""
+    V = np.array([r["v"] for r in sample], dtype=np.float64)
+    J = np.arange(min(_PQ_K, len(V)), dtype=np.int64)
+    M = _snap9(np.stack([V[j::_PQ_K].mean(axis=0) for j in J]))
+    S = list(range(_PQ_M))
+    return S, {s: J for s in S}, {s: M[:, s * _PQ_SUB : (s + 1) * _PQ_SUB] for s in S}
 
 
 def _book_matrices(book: DataFrame):
     """Collect a (bounded) PQ codebook to driver numpy: sorted subspace
     ids ``S``, per-subspace codeword ids ``J[s]`` (ascending — argmin
     first-occurrence over them IS min(d2, j)), and codeword matrices
-    ``B[s]`` in the same order.
-
-    Accepts a :class:`_BookRows` holder (the trained-quantizer cache,
-    round 18): the matrices build with ZERO Spark jobs from exactly
-    the rows this function would have collected."""
-    import numpy as np
-
-    if isinstance(book, _BookRows):
-        by_s: dict[int, list] = {}
-        for s, j, cv in book.rows:
-            by_s.setdefault(s, []).append((j, cv))
-        S = sorted(by_s)
-        J = {
-            s: np.array([j for j, _ in sorted(by_s[s])], dtype=np.int64)
-            for s in S
-        }
-        B = {
-            s: np.array([cv for _, cv in sorted(by_s[s])], dtype=np.float64)
-            for s in S
-        }
-        return S, J, B
+    ``B[s]`` in the same order. A tuple already in that form (the
+    driver-trained codebook of :func:`_pq_book`) passes through with
+    zero Spark jobs."""
+    if isinstance(book, tuple):
+        return book
     rows = book.limit(_MAX_DRIVER_CODEBOOK + 1).collect()
     if len(rows) > _MAX_DRIVER_CODEBOOK:
         raise ValueError(
@@ -1523,19 +1372,7 @@ def _pq_scores_np(base: DataFrame, book: DataFrame, argmin: bool) -> DataFrame:
             out_frames = []
             for s in S:
                 Vs = V[:, s * _PQ_SUB : (s + 1) * _PQ_SUB]
-                # same form as the JVM fold: (x - c)^2 elementwise,
-                # summed over the subspace — no ||a||^2 - 2ab + ||b||^2
-                # rearrangement (different rounding), then the 1e-6 snap
-                # as HALF_UP like F.round (d2 >= 0, so floor(+0.5) is
-                # exact; np.round's half-to-even could flip a .5e-6 tie)
-                d2 = (
-                    np.floor(
-                        ((Vs[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                        * 1e6
-                        + 0.5
-                    )
-                    / 1e6
-                )
+                d2 = _sub_d2(Vs, B[s])
                 if argmin:
                     k = d2.argmin(axis=1)  # first min = min(d2, j asc)
                     out_frames.append(
@@ -1565,7 +1402,7 @@ def _pq_encode(
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization build shared by the IVF-PQ queries:
     fixed-size per-subspace codebooks (``_PQ_M x _PQ_K`` sample-rank
-    means — :func:`sampled_pq_codebook`, round 17), and the corpus
+    means — :func:`_pq_book`, round 17), and the corpus
     codes PACKED one row per vector (``(vec_id, codes array)`` —
     nearest codeword per subspace in subspace order, emitted straight
     from the encode GEMM so no pivot aggregation or per-(vector,
@@ -1579,7 +1416,7 @@ def _pq_encode(
     import pandas as pd
 
     if book is None:
-        book = sampled_pq_codebook(base)
+        book = _pq_book(_perm_sample(base, _Q_SAMPLE))
     bcb = base.sparkSession.sparkContext.broadcast(_book_matrices(book))
 
     def encode(batches):
@@ -1591,16 +1428,8 @@ def _pq_encode(
             cols = []
             for s in S:
                 Vs = V[:, s * _PQ_SUB : (s + 1) * _PQ_SUB]
-                # identical arithmetic + snap to _pq_scores_np: first
-                # argmin over ascending-j columns == min(d2, j)
-                d2 = (
-                    np.floor(
-                        ((Vs[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                        * 1e6
-                        + 0.5
-                    )
-                    / 1e6
-                )
+                # first argmin over ascending-j columns == min(d2, j)
+                d2 = _sub_d2(Vs, B[s])
                 cols.append(J[s][d2.argmin(axis=1)])
             M = np.stack(cols, axis=1)
             yield pd.DataFrame(
@@ -1660,21 +1489,13 @@ def _encode_assign_np(
                     "it (the SQL twin raises DIVIDE_BY_ZERO under ANSI)"
                 )
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            raw = V @ CT / (vn * cn[None, :])
-            cc = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
+            cc = _snap6(V @ CT / (vn * cn[None, :]))
             k_eff = min(topn, cc.shape[1])
             idx = np.argsort(-cc, axis=1, kind="stable")[:, :k_eff]
             cols = []
             for s in S:
                 Vs = V[:, s * _PQ_SUB : (s + 1) * _PQ_SUB]
-                d2 = (
-                    np.floor(
-                        ((Vs[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                        * 1e6
-                        + 0.5
-                    )
-                    / 1e6
-                )
+                d2 = _sub_d2(Vs, B[s])
                 cols.append(J[s][d2.argmin(axis=1)])
             M = np.stack(cols, axis=1)
             rep = np.repeat(np.arange(len(ids)), k_eff)
@@ -1795,17 +1616,17 @@ def _encode_assign_np(
     "shortlist size, not the rerank. Shipped config k=40 / nprobe 8 "
     "/ shortlist 200 -> recall 0.82 (the cheapest swept config "
     ">= 0.8), asserted by the recall twin in "
-    "tests/test_similarity.py. Scale: codebook build is two tiny "
-    "shuffles; encoding is one broadcast-join pass; per-query cost "
+    "tests/test_similarity.py. Scale: codebook build is one "
+    "bounded sample collect and a driver-side mean; encoding is one "
+    "broadcast-join pass; per-query cost "
     "is probed-cell candidates x 8 LUT lookups + 200 exact "
     "distances.",
 )
 def q_similarity_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", _vecd().alias("v")).withColumn("n", _norm("v"))
-    # codebook served from the per-corpus training cache (round 18,
-    # verdict ask #6): identical rows, zero retraining jobs on hit
-    book = _cached_pq_book(spark, sf_dir, base)
+    # codebook trained on the driver from one sample collect
+    book = _pq_book(_perm_sample(base, _Q_SAMPLE))
     # IVF probes bound the candidate set (q_similarity_ivf_search's
     # construction, verbatim)
     cent = _label_centroids(emb).transform(_ckpt)
@@ -1930,21 +1751,12 @@ def _adc_rerank(
         for qs in range(0, nq, qstep):
             qe = min(qs + qstep, nq)
             qn = qe - qs
-            # this block's query LUTs, recomputed exactly as
-            # _pq_scores_np does (same algebraic form, HALF-UP snap —
-            # d2 >= 0); (qn x k) per subspace, reused across member
-            # blocks
+            # this block's query LUTs (qn x k per subspace), reused
+            # across member blocks
             luts = []
             for si, s in enumerate(S):
                 Qs = QV[qs:qe, s * _PQ_SUB : (s + 1) * _PQ_SUB]
-                luts.append(
-                    np.floor(
-                        ((Qs[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                        * 1e6
-                        + 0.5
-                    )
-                    / 1e6
-                )
+                luts.append(_sub_d2(Qs, B[s]))
             run_d = np.full((qn, take), np.inf)
             run_v = np.full((qn, take), sent, dtype=np.int64)
             for ms in range(0, nm, mstep):
@@ -1952,7 +1764,7 @@ def _adc_rerank(
                 tile = np.zeros((qn, me - ms), dtype=np.float64)
                 for si in range(len(S)):
                     tile += luts[si][:, col[si][ms:me]]
-                tile = np.floor(tile * 1e6 + 0.5) / 1e6  # ROUND(SUM(ld), 6)
+                tile = _snap6(tile)  # ROUND(SUM(ld), 6)
                 t = min(take, me - ms)
                 o = np.argsort(tile, axis=1, kind="stable")[:, :t]
                 bd = np.take_along_axis(tile, o, axis=1)
@@ -2039,7 +1851,7 @@ def _adc_rerank(
 # recall as the shipped label-cell config at HALF the touched fraction
 # (80% -> 39%), which removes the "nprobe touches 80%" caveat.
 # Round 17 replaced the (label x vec_id%4) seeding with the fixed-k
-# sample permutation (_IVF_K seeds, Lloyd over the bounded sample) —
+# sample permutation (k seeds, Lloyd over the bounded sample) —
 # same k=40 cell budget, corpus-decoupled training; recall re-measured
 # in BASELINE.md's round-17 table.
 _SPILL_ITERS = 2       # Lloyd refinement rounds on the seeded cells
@@ -2132,8 +1944,10 @@ _SPILL_SHORTLIST = 300  # ADC shortlist fed to the exact rerank
     "quantizer — the r16 weak): k = min(65536, max(40, ceil(sqrt(N)))) "
     "coarse cells seeded from the first k rows of a deterministic "
     "Knuth-hash permutation and refined by 2 spherical-Lloyd rounds "
-    "OVER THE BOUNDED SAMPLE (1,024 rows — a TakeOrdered, never a "
-    "full sort), so training cost and codebook size are bounded "
+    "OVER THE BOUNDED SAMPLE (max(1,024, 32·k) rows — one "
+    "TakeOrdered collect, never a full sort; Lloyd and the PQ "
+    "codebook then run in numpy on the driver), so training cost and "
+    "codebook size are bounded "
     "configs, not corpus properties; each corpus vector indexed under "
     "its top-3 cells (multi-assignment — the standard cure for "
     "cell-boundary recall loss), queries probe their top-6 cells; PQ "
@@ -2160,12 +1974,6 @@ _SPILL_SHORTLIST = 300  # ADC shortlist fed to the exact rerank
 def q_similarity_ivfpq_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", _vecd().alias("v")).withColumn("n", _norm("v"))
-    # codebook + quantizer served from the per-corpus training cache
-    # (round 18, verdict ask #6): the sample permutation, Lloyd
-    # rounds, and codebook aggregation are pure functions of (corpus
-    # bytes, config) — retraining them on every execute was ~0.3 s of
-    # the residual ivfpq constant the round-17 A/B measured
-    book = _cached_pq_book(spark, sf_dir, base)
     # Round 17 (verdict ask #1, two iterations): the coarse quantizer
     # is sample-trained with k = min(65536, max(40, ceil(sqrt(N)))) —
     # replacing kmeans_centroids' (label x group)-seeded cells whose
@@ -2177,11 +1985,15 @@ def q_similarity_ivfpq_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the standard IVF frontier — cell size and per-query work both
     # ∝ √N, codebook bounded by the cap. One count() job derives it;
     # the oracle derives the identical k via a scalar subquery.
-    k = _derived_k(_cached_emb_count(emb, sf_dir))
-    # sample scales with k (round 18, ADVICE): at fixed 1,024 rows any
-    # k > 1,024 silently capped at the sample and Lloyd degenerated
-    # toward one sample point per cell
-    cent = _cached_spill_quantizer(spark, sf_dir, base, k)
+    k = _derived_k(emb.count())
+    # One sample collect trains both halves on the driver, in numpy.
+    # The sample scales with k (round 18, ADVICE): at fixed 1,024 rows
+    # any k > 1,024 silently capped at the sample and Lloyd degenerated
+    # toward one sample point per cell. The PQ codebook takes the first
+    # _Q_SAMPLE rows — the two SQL samples share one order.
+    sample = _perm_sample(base, _q_sample_for(k))
+    book = _pq_book(sample[:_Q_SAMPLE])
+    cent = _train_quantizer(sample, k)
     # Top-n cell selection INSIDE the Arrow GEMM (round 16, x100
     # stress): the previous shape emitted all N x CELLS scored rows
     # into a collect_list+sort+slice aggregate — at x100 that is 800M

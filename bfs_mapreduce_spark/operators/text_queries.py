@@ -2055,30 +2055,31 @@ _QT_LR = 4.0
 _QT_KEEP = 0.7
 
 
-def _qt_oracle() -> str:
-    """Unrolled SQL for the logistic-regression quality trainer: one
-    gradient CTE + one weight CTE per step, each step's weights read
-    as scalar subqueries from the previous step's CTE — the same
-    chained-CTE unroll pattern as the BPE oracles. Two load-bearing
-    choices: weights are snapped to the 1e-6 grid per step IN BOTH
-    DIALECTS (so last-ulp sum-order drift dies at each iteration
-    boundary instead of compounding — what makes an 8-deep iterative
-    float computation strict-hash certifiable), and every CTE is
-    MATERIALIZED — each step references its predecessor eight times
-    (four weight scalars in the sigmoid, four in the update), and
-    inlining makes the expansion EXPONENTIAL: without the hint the
-    8-step oracle planned ~4^8 scans of documents and died on file
-    handles."""
+def _qt_ctes(keep: str) -> str:
+    """Unrolled SQL for the logistic-regression quality trainer, as a
+    ``WITH`` chain ending at ``s{_QT_STEPS}``: one gradient CTE + one
+    weight CTE per step, each step's weights read as scalar subqueries
+    from the previous step's CTE — the same chained-CTE unroll pattern
+    as the BPE oracles. ``keep`` prefixes extra feature-table columns
+    (``"doc_id, "`` for the scoring query). Two load-bearing choices:
+    weights are snapped to the 1e-6 grid per step IN BOTH DIALECTS (so
+    last-ulp sum-order drift dies at each iteration boundary instead of
+    compounding — what makes an 8-deep iterative float computation
+    strict-hash certifiable), and every CTE is MATERIALIZED — each step
+    references its predecessor eight times (four weight scalars in the
+    sigmoid, four in the update), and inlining makes the expansion
+    EXPONENTIAL: without the hint the 8-step oracle planned ~4^8 scans
+    of documents and died on file handles."""
     feats = f"""
     f AS MATERIALIZED (
-      SELECT len({_SQL_WORDS}) AS nw,
+      SELECT {keep}len({_SQL_WORDS}) AS nw,
              (length(text) - len({_SQL_WORDS}) + 1) * 0.1
                / len({_SQL_WORDS}) AS x2,
              len(list_filter({_SQL_WORDS},
                  w -> w IN ('the', 'a', 'and', 'of', 'to'))) AS ns
       FROM documents WHERE length(text) > 0),
     x AS MATERIALIZED (
-      SELECT nw / 100.0 AS x1, x2, ns * 1.0 / nw AS x3,
+      SELECT {keep}nw / 100.0 AS x1, x2, ns * 1.0 / nw AS x3,
              CASE WHEN ns * 1.0 / nw >= 0.04 AND nw >= 20
                   THEN 1.0 ELSE 0.0 END AS y
       FROM f)"""
@@ -2101,11 +2102,76 @@ def _qt_oracle() -> str:
              ROUND(loss, 6) AS loss
       FROM g{k})""")
         w = [f"(SELECT w{j} FROM s{k})" for j in range(4)]
+    return "WITH" + ",".join(parts)
+
+
+def _qt_oracle() -> str:
+    """The trainer's CTE chain, one ``(step, weights, loss)`` row per
+    step."""
     selects = [
         f"SELECT {k} AS step, w0, w1, w2, w3, loss FROM s{k}"
         for k in range(1, _QT_STEPS + 1)
     ]
-    return "WITH" + ",".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
+    return _qt_ctes("") + "\n" + "\nUNION ALL\n".join(selects)
+
+
+def _qt_features(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """The trainer's per-document features ``(*keep, x1, x2, x3, y)``
+    over non-empty documents, materialized once for the GD steps."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
+    w_arr = _words()
+    nw = F.size(w_arr)
+    ns = F.size(F.filter(w_arr, lambda x: x.isin("the", "a", "and", "of", "to")))
+    return docs.select(
+        *keep,
+        (nw / 100.0).alias("x1"),
+        # the 0.1 factor scales mean word length (~4-5) to the same
+        # O(1) range as the other features — unscaled it made lr=0.5
+        # oscillate with growing amplitude (measured, BASELINE r10)
+        ((F.length("text") - nw + 1) * 0.1 / nw).alias("x2"),
+        (ns / nw).alias("x3"),
+        # monotone label (stopword-rate AND length floor): a linear
+        # model can actually fit it, unlike a band rule on n_words
+        F.when(((ns / nw) >= 0.04) & (nw >= 20), 1.0).otherwise(0.0).alias("y"),
+    ).transform(_ckpt_lazy)
+
+
+def _qt_logit(w: list[float]) -> F.Column:
+    return F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2") \
+        + F.lit(w[3]) * F.col("x3")
+
+
+def _qt_fit(x: DataFrame) -> tuple[list[float], list[tuple]]:
+    """``_QT_STEPS`` full-batch GD steps over the feature frame ``x``:
+    each step is ONE map-side-combined aggregate of 6 doubles whose
+    update is snapped to the 1e-6 grid. Returns the final weights and
+    one ``(step, w0, w1, w2, w3, loss)`` row per step."""
+    import math
+
+    w = [0.0, 0.0, 0.0, 0.0]
+    rows = []
+    for step in range(1, _QT_STEPS + 1):
+        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_qt_logit(w)))
+        d = p - F.col("y")
+        g = x.select(
+            F.sum(d).alias("g0"),
+            F.sum(d * F.col("x1")).alias("g1"),
+            F.sum(d * F.col("x2")).alias("g2"),
+            F.sum(d * F.col("x3")).alias("g3"),
+            F.avg(
+                -(F.col("y") * F.log(p) + (F.lit(1.0) - F.col("y")) * F.log(1 - p))
+            ).alias("loss"),
+            F.count(F.lit(1)).alias("n"),
+        ).first()
+        w = [
+            round(w[j] - _QT_LR * g[f"g{j}"] / g["n"], 6)
+            for j in range(4)
+        ]
+        rows.append((step, w[0], w[1], w[2], w[3], round(g["loss"], 6)))
+        # guard: a NaN/inf weight would silently poison later steps
+        if not all(math.isfinite(v) for v in w):
+            raise ValueError(f"diverged at step {step}: {w}")
+    return w, rows
 
 
 @register(
@@ -2132,49 +2198,7 @@ def _qt_oracle() -> str:
     "convergence evidence (tests assert it).",
 )
 def q_text_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    w_arr = _words()
-    nw = F.size(w_arr)
-    ns = F.size(F.filter(w_arr, lambda x: x.isin("the", "a", "and", "of", "to")))
-    x = docs.select(
-        (nw / 100.0).alias("x1"),
-        # the 0.1 factor scales mean word length (~4-5) to the same
-        # O(1) range as the other features — unscaled it made lr=0.5
-        # oscillate with growing amplitude (measured, BASELINE r10)
-        ((F.length("text") - nw + 1) * 0.1 / nw).alias("x2"),
-        (ns / nw).alias("x3"),
-        # monotone label (stopword-rate AND length floor): a linear
-        # model can actually fit it, unlike a band rule on n_words
-        F.when(((ns / nw) >= 0.04) & (nw >= 20), 1.0).otherwise(0.0).alias("y"),
-    ).transform(_ckpt_lazy)
-
-    w = [0.0, 0.0, 0.0, 0.0]
-    rows = []
-    for step in range(1, _QT_STEPS + 1):
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2") \
-            + F.lit(w[3]) * F.col("x3")
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        d = p - F.col("y")
-        g = x.select(
-            F.sum(d).alias("g0"),
-            F.sum(d * F.col("x1")).alias("g1"),
-            F.sum(d * F.col("x2")).alias("g2"),
-            F.sum(d * F.col("x3")).alias("g3"),
-            F.avg(
-                -(F.col("y") * F.log(p) + (F.lit(1.0) - F.col("y")) * F.log(1 - p))
-            ).alias("loss"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        w = [
-            round(w[j] - _QT_LR * g[f"g{j}"] / g["n"], 6)
-            for j in range(4)
-        ]
-        rows.append((step, w[0], w[1], w[2], w[3], round(g["loss"], 6)))
-        # guard: a NaN/inf weight would silently poison later steps
-        if not all(math.isfinite(v) for v in w):
-            raise ValueError(f"diverged at step {step}: {w}")
+    _w, rows = _qt_fit(_qt_features(spark, sf_dir))
     return spark.createDataFrame(
         rows, "step int, w0 double, w1 double, w2 double, w3 double, loss double"
     )
@@ -2182,43 +2206,14 @@ def q_text_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _qt_filter_oracle() -> str:
     """Training CTE chain + a scoring tail: every doc gets the final
-    weights' sigmoid and a keep decision at 0.5."""
-    feats = f"""
-    f AS MATERIALIZED (
-      SELECT doc_id, len({_SQL_WORDS}) AS nw,
-             (length(text) - len({_SQL_WORDS}) + 1) * 0.1
-               / len({_SQL_WORDS}) AS x2,
-             len(list_filter({_SQL_WORDS},
-                 w -> w IN ('the', 'a', 'and', 'of', 'to'))) AS ns
-      FROM documents WHERE length(text) > 0),
-    x AS MATERIALIZED (
-      SELECT doc_id, nw / 100.0 AS x1, x2, ns * 1.0 / nw AS x3,
-             CASE WHEN ns * 1.0 / nw >= 0.04 AND nw >= 20
-                  THEN 1.0 ELSE 0.0 END AS y
-      FROM f)"""
-    parts = [feats]
-    w = ["0.0"] * 4
-    for k in range(1, _QT_STEPS + 1):
-        z = f"({w[0]} + {w[1]} * x1 + {w[2]} * x2 + {w[3]} * x3)"
-        parts.append(f"""
-    g{k} AS MATERIALIZED (
-      SELECT SUM(p - y) AS g0, SUM((p - y) * x1) AS g1,
-             SUM((p - y) * x2) AS g2, SUM((p - y) * x3) AS g3,
-             COUNT(*) AS n
-      FROM (SELECT x1, x2, x3, y, 1 / (1 + exp(-{z})) AS p FROM x)),
-    s{k} AS MATERIALIZED (
-      SELECT ROUND({w[0]} - {_QT_LR} * g0 / n, 6) AS w0,
-             ROUND({w[1]} - {_QT_LR} * g1 / n, 6) AS w1,
-             ROUND({w[2]} - {_QT_LR} * g2 / n, 6) AS w2,
-             ROUND({w[3]} - {_QT_LR} * g3 / n, 6) AS w3
-      FROM g{k})""")
-        w = [f"(SELECT w{j} FROM s{_QT_STEPS if k == _QT_STEPS else k})" for j in range(4)]
+    weights' sigmoid and a keep decision at ``_QT_KEEP``."""
+    w = [f"(SELECT w{j} FROM s{_QT_STEPS})" for j in range(4)]
     zf = f"({w[0]} + {w[1]} * x1 + {w[2]} * x2 + {w[3]} * x3)"
-    return ("WITH" + ",".join(parts) + f"""
+    return _qt_ctes("doc_id, ") + f"""
     SELECT doc_id,
            ROUND(1 / (1 + exp(-{zf})), 6) AS quality,
            CAST(1 / (1 + exp(-{zf})) >= {_QT_KEEP} AS BOOLEAN) AS kept
-    FROM x""")
+    FROM x"""
 
 
 @register(
@@ -2239,35 +2234,9 @@ def _qt_filter_oracle() -> str:
     "is inside the value hash.",
 )
 def q_text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    w_arr = _words()
-    nw = F.size(w_arr)
-    ns = F.size(F.filter(w_arr, lambda x: x.isin("the", "a", "and", "of", "to")))
-    x = docs.select(
-        "doc_id",
-        (nw / 100.0).alias("x1"),
-        ((F.length("text") - nw + 1) * 0.1 / nw).alias("x2"),
-        (ns / nw).alias("x3"),
-        F.when(((ns / nw) >= 0.04) & (nw >= 20), 1.0).otherwise(0.0).alias("y"),
-    ).transform(_ckpt_lazy)
-
-    w = [0.0, 0.0, 0.0, 0.0]
-    for _step in range(_QT_STEPS):
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2") \
-            + F.lit(w[3]) * F.col("x3")
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        d = p - F.col("y")
-        g = x.select(
-            F.sum(d).alias("g0"),
-            F.sum(d * F.col("x1")).alias("g1"),
-            F.sum(d * F.col("x2")).alias("g2"),
-            F.sum(d * F.col("x3")).alias("g3"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        w = [round(w[j] - _QT_LR * g[f"g{j}"] / g["n"], 6) for j in range(4)]
-    zf = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2") \
-        + F.lit(w[3]) * F.col("x3")
-    pf = F.lit(1.0) / (F.lit(1.0) + F.exp(-zf))
+    x = _qt_features(spark, sf_dir, "doc_id")
+    w, _rows = _qt_fit(x)
+    pf = F.lit(1.0) / (F.lit(1.0) + F.exp(-_qt_logit(w)))
     return x.select(
         "doc_id", F.round(pf, 6).alias("quality"), (pf >= _QT_KEEP).alias("kept")
     )

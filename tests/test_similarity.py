@@ -245,6 +245,92 @@ def test_ivfpq_spill_recall_and_shape(spark, sf_oracle_dir):
     assert by_q and all(len(v) == 5 for v in by_q.values())
 
 
+def test_ivfpq_spill_build_trains_in_one_collect(
+    spark, sf_oracle_dir, tmp_path, monkeypatch
+):
+    """The spill query trains its quantizer and PQ codebook on the
+    driver: a cold build() runs the embedding count and ONE sample
+    collect — at most 3 jobs in its job group (the count is two jobs
+    under AQE) — where Spark-side Lloyd and codebook training ran a
+    dozen. The table is a fresh copy of the oracle SF's, read before
+    the group opens, so neither its parquet schema job nor any state
+    keyed by its path is in the count."""
+    import shutil
+
+    from bfs_mapreduce_spark.operators import similarity_queries as sq
+
+    shutil.copy(f"{sf_oracle_dir}/embeddings.parquet", tmp_path)
+    emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    monkeypatch.setattr(sq, "load_table", lambda *_: emb)
+    sc = spark.sparkContext
+    group = "test-ivfpq-spill-build"
+    sc.setJobGroup(group, group)
+    try:
+        sq.q_similarity_ivfpq_spill(spark, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, f"cold build ran {len(jobs)} jobs"
+
+
+def test_trained_quantizer_matches_python_lloyd(spark):
+    """The driver-side trainer on a tiny base whose first two seeds are
+    the same vector: every tie goes to the lower cell, so the
+    higher-id duplicate's cell loses all members and dies, and the
+    trained cells equal a plain-Python Lloyd's — seeds = the first k
+    rows of the Knuth-hash order, HALF_UP 1e-6 cosines with the
+    lowest-cell tie-break, HALF_UP 1e-9 member means, left-fold
+    norms."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from bfs_mapreduce_spark.operators import similarity_queries as sq
+
+    # Knuth-hash rank order of ids 0..11: 0, 5, 10, 2, 7, 4, 9, 1, ...
+    vecs = {
+        0: [1.0, 0.0, 0.0], 5: [1.0, 0.0, 0.0],  # duplicate seeds
+        10: [0.0, 1.0, 0.0], 2: [0.0, 0.0, 1.0],
+        7: [0.9, 0.1, 0.0], 4: [0.1, 0.8, 0.1], 9: [0.0, 0.2, 0.9],
+        1: [0.8, 0.3, 0.1], 6: [0.2, 0.9, 0.0], 11: [0.1, 0.1, 0.7],
+        3: [0.7, 0.0, 0.3], 8: [0.3, 0.6, 0.2],
+    }
+    k = 4
+    base = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id bigint, v array<double>"
+    ).withColumn("n", sq._norm("v"))
+    cells, C, cn, cell_t = sq._train_quantizer(sq._perm_sample(base, 100), k)
+
+    def snap(x, q):
+        return float(Decimal(repr(x)).quantize(Decimal(q), ROUND_HALF_UP)) + 0.0
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        return math.sqrt(acc)
+
+    order = sorted(vecs, key=lambda i: ((i * sq._Q_PERM_A) % sq._Q_PERM_MOD, i))
+    assert order[:4] == [0, 5, 10, 2]
+    want = {c: (vecs[i], norm(vecs[i])) for c, i in enumerate(order[:k])}
+    for _ in range(sq._SPILL_ITERS):
+        members = {}
+        for i in order:
+            v, vn = vecs[i], norm(vecs[i])
+            scores = [
+                (snap(sum(a * b for a, b in zip(v, cv)) / (vn * cvn), "1e-6"), -c)
+                for c, (cv, cvn) in want.items()
+            ]
+            members.setdefault(-max(scores)[1], []).append(v)
+        want = {}
+        for c in sorted(members):
+            cv = [snap(sum(col) / len(col), "1e-9") for col in zip(*members[c])]
+            want[c] = (cv, norm(cv))
+    assert 1 not in want  # the higher-id duplicate (id 5) seeded cell 1
+    assert cell_t == "bigint"
+    assert cells.tolist() == sorted(want)
+    assert C.tolist() == [want[c][0] for c in sorted(want)]
+    assert cn.tolist() == [want[c][1] for c in sorted(want)]
+
 def test_driver_codebook_cap_refuses(spark):
     """Round-14 verdict ask #8 (cap raised round 18 with the broadcast
     move): the centroid/codebook driver collects are capped — an

@@ -4,9 +4,10 @@ Proves the derived-k quantizer executes PAST the old 4,096-cell
 architecture ceiling: synthesizes N = 17M deterministic 64-dim vectors
 (so k = ceil(sqrt(N)) = 4,124 > 4,096 — unreachable before the
 centroid/codebook matrices moved off the per-task UDF closure into a
-broadcast variable), trains the sample-bounded quantizer at that k,
-and runs the full IVF-PQ spill pipeline (encode, spill assignment,
-probes, fused tiled ADC scan, exact rerank) end to end.
+broadcast variable), trains the sample-bounded quantizer at that k
+(one sample collect, then Lloyd in numpy on the driver), and runs the
+full IVF-PQ spill pipeline (encode, spill assignment, probes, fused
+tiled ADC scan, exact rerank) end to end.
 
 The corpus is synthesized in-plan (no staging parquet): vector
 components are a per-(id, dim) integer hash scaled to (0, 1], giving
@@ -32,18 +33,20 @@ sys.path.insert(0, ".")
 
 from bfs_mapreduce_spark import get_session  # noqa: E402
 from bfs_mapreduce_spark.operators.similarity_queries import (  # noqa: E402
+    _Q_SAMPLE,
     _QUERY_MOD,
     _SPILL_ASSIGN,
-    _SPILL_ITERS,
     _SPILL_NPROBE,
     _SPILL_SHORTLIST,
     _adc_rerank,
     _cell_scores_np,
     _derived_k,
     _norm,
+    _perm_sample,
+    _pq_book,
     _pq_encode,
     _q_sample_for,
-    sampled_quantizer,
+    _train_quantizer,
 )
 
 QMOD = 20_000  # multiple of _QUERY_MOD; 17M / 20k = 850 queries
@@ -69,12 +72,13 @@ def main(n: int) -> None:
     )
 
     t0 = time.time()
-    cent = sampled_quantizer(base, k=k, sample=sample, iters=_SPILL_ITERS)
-    cells_alive = cent.count()
+    rows = _perm_sample(base, sample)
+    cent = _train_quantizer(rows, k)
+    cells_alive = len(cent[0])
     t_train = time.time() - t0
 
     t0 = time.time()
-    codes, book = _pq_encode(base)
+    codes, book = _pq_encode(base, _pq_book(rows[:_Q_SAMPLE]))
     bsel = base.select("vec_id", "v", "n")
     member = _cell_scores_np(
         bsel, cent, argmax=False, topn=_SPILL_ASSIGN
