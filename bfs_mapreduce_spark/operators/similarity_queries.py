@@ -1250,38 +1250,48 @@ def _l2sq(a: str | F.Column, b: str | F.Column) -> F.Column:
     )
 
 
-def _perm_sample(base: DataFrame, n: int) -> list:
-    """Bounded deterministic training sample: the first ``n`` rows
-    ``(vec_id, v, n)`` of the Knuth-hash permutation of ``base``, in
-    rank order (row ``i`` is SQL's ``rnk = i + 1``). The orderBy+limit
-    is a TakeOrderedAndProject — each task keeps its local top-``n``
-    by (hash, vec_id) and only those reach the driver — so the sample
-    costs one corpus scan and one collect at ANY corpus size."""
+def _perm_sample(base: DataFrame, n: int):
+    """Bounded deterministic training sample: the first ``n`` rows of
+    the Knuth-hash permutation of ``base``, as ``(V float64[n, d], vn
+    float64[n])`` in rank order (row ``i`` is SQL's ``rnk = i + 1``).
+    Each task keeps its local top-``n`` by (hash, vec_id) and one
+    in-job exchange merges them into a single partition, which is
+    streamed to the driver straight into numpy — so one corpus scan,
+    one job, and at most ``n`` rows on the driver at any corpus size
+    (``collect()`` would instead ship every task's top-``n``: P·n rows
+    for P input partitions). The sample is 32 rows per cell, so near
+    the ``_IVF_K_CAP`` its ~1.1 GB passes Spark's default 1g
+    ``spark.driver.maxResultSize``."""
     h = (F.col("vec_id") * F.lit(_Q_PERM_A)) % F.lit(_Q_PERM_MOD)
-    return base.orderBy(h, "vec_id").limit(n).select("vec_id", "v", "n").collect()
+    top = base.orderBy(h, "vec_id").limit(n).select("v", "n")
+    V, vn = [], []
+    for r in top.toLocalIterator():
+        V.append(np.asarray(r["v"], dtype=np.float64))
+        vn.append(r["n"])
+    return np.array(V, dtype=np.float64), np.array(vn, dtype=np.float64)
 
 
-def _train_quantizer(sample: list, k: int):
+def _train_quantizer(V: np.ndarray, vn: np.ndarray, k: int):
     """Corpus-decoupled coarse quantizer, trained in numpy on the
-    driver: ``k`` seed centroids = the first ``k`` sample rows (cell =
-    rank - 1, the collected norm as ``cn``), refined by
-    ``_SPILL_ITERS`` Lloyd rounds over the sample only — training cost
-    is O(sample · k) and at most ``k`` cells are served (cells
-    die during Lloyd, never appear). Every step mirrors the oracle's
-    unrolled SQL: assignment is the 1e-6-snapped cosine with the
-    first-argmax (lowest cell) tie-break of :func:`_cell_scores_np`;
-    a centroid is the per-(cell, pos) member mean snapped like
-    ``F.round(avg, 9)``; ``cn`` is the left fold of squares that
-    :func:`_norm` computes; a cell that loses every member drops out.
-    Returns :func:`_cent_matrix`'s tuple."""
-    V = np.array([r["v"] for r in sample], dtype=np.float64)
-    vn = np.array([r["n"] for r in sample], dtype=np.float64)
+    driver from :func:`_perm_sample`'s arrays: ``k`` seed centroids =
+    the first ``k`` sample rows (cell = rank - 1, the collected norm as
+    ``cn``), refined by ``_SPILL_ITERS`` Lloyd rounds over the sample
+    only — training cost is O(sample · k) and at most ``k`` cells are
+    served (cells die during Lloyd, never appear). Every step mirrors
+    the oracle's unrolled SQL: assignment is the 1e-6-snapped cosine
+    with the first-argmax (lowest cell) tie-break of
+    :func:`_cell_scores_np`, scored in row blocks under the
+    ``_TILE_DOUBLES`` budget ``_triangle`` uses; a centroid is the
+    per-(cell, pos) member mean snapped like ``F.round(avg, 9)``;
+    ``cn`` is the left fold of squares that :func:`_norm` computes; a
+    cell that loses every member drops out. Returns
+    :func:`_cent_matrix`'s tuple."""
     if np.any(vn == 0):
         raise ValueError(
             "zero-norm vector: cosine scoring is undefined for it "
             "(the SQL twin raises DIVIDE_BY_ZERO under ANSI mode)"
         )
-    cells = np.arange(min(k, len(sample)), dtype=np.int64)
+    cells = np.arange(min(k, len(V)), dtype=np.int64)
     C, cn = V[: len(cells)], vn[: len(cells)]
     for _ in range(_SPILL_ITERS):
         if np.any(cn == 0):
@@ -1289,135 +1299,53 @@ def _train_quantizer(sample: list, k: int):
                 "zero-norm centroid: cosine scoring is undefined for it "
                 "(the SQL twin raises DIVIDE_BY_ZERO under ANSI mode)"
             )
-        j = _snap6(V @ C.T / (vn[:, None] * cn[None, :])).argmax(axis=1)
-        live = np.unique(j)  # ascending, so cells stay sorted
-        C = _snap9(np.stack([V[j == c].mean(axis=0) for c in live]))
+        block = max(1, min(2048, _TILE_DOUBLES // len(cells)))
+        j = np.empty(len(V), dtype=np.int64)
+        for s in range(0, len(V), block):
+            rows = slice(s, s + block)
+            j[rows] = _snap6(V[rows] @ C.T / (vn[rows, None] * cn)).argmax(axis=1)
+        # members grouped by one stable sort: each group keeps sample
+        # order, as V[j == c] would, at O(sample log sample) not O(sample · k)
+        order = np.argsort(j, kind="stable")
+        live, starts = np.unique(j[order], return_index=True)  # ascending
+        groups = np.split(V[order], starts[1:])
+        C = _snap9(np.stack([g.mean(axis=0) for g in groups]))
         cells = cells[live]
         cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
     return cells, C, cn, "bigint"
 
 
-def _pq_book(sample: list):
-    """Corpus-decoupled PQ codebook, built in numpy on the driver:
-    exactly ``_PQ_M x _PQ_K`` codewords — per-(subspace, (rank - 1) mod
-    _PQ_K) component means over the sample, snapped like
-    ``F.round(avg, 9)``. Returns :func:`_book_matrices`' tuple."""
-    V = np.array([r["v"] for r in sample], dtype=np.float64)
+def _pq_book(V: np.ndarray):
+    """Corpus-decoupled PQ codebook, built in numpy on the driver from
+    the sample matrix: exactly ``_PQ_M x _PQ_K`` codewords —
+    per-(subspace, (rank - 1) mod _PQ_K) component means, snapped like
+    ``F.round(avg, 9)``. Returns ``(S, J, B)``: sorted subspace ids,
+    per-subspace codeword ids ``J[s]`` (ascending — argmin
+    first-occurrence over them IS min(d2, j)) and codeword matrices
+    ``B[s]`` in the same order; the PQ consumers broadcast it as is."""
     J = np.arange(min(_PQ_K, len(V)), dtype=np.int64)
     M = _snap9(np.stack([V[j::_PQ_K].mean(axis=0) for j in J]))
     S = list(range(_PQ_M))
     return S, {s: J for s in S}, {s: M[:, s * _PQ_SUB : (s + 1) * _PQ_SUB] for s in S}
 
 
-def _book_matrices(book: DataFrame):
-    """Collect a (bounded) PQ codebook to driver numpy: sorted subspace
-    ids ``S``, per-subspace codeword ids ``J[s]`` (ascending — argmin
-    first-occurrence over them IS min(d2, j)), and codeword matrices
-    ``B[s]`` in the same order. A tuple already in that form (the
-    driver-trained codebook of :func:`_pq_book`) passes through with
-    zero Spark jobs."""
-    if isinstance(book, tuple):
-        return book
-    rows = book.limit(_MAX_DRIVER_CODEBOOK + 1).collect()
-    if len(rows) > _MAX_DRIVER_CODEBOOK:
-        raise ValueError(
-            f"PQ codebook exceeds {_MAX_DRIVER_CODEBOOK} (s, j) rows — "
-            "the driver collect + UDF closure would grow with it. "
-            "Reduce the configured codebook size (_PQ_K) or move the "
-            "codebook to a broadcast variable before raising this cap."
-        )
-    by_s: dict[int, list] = {}
-    for r in rows:
-        by_s.setdefault(r["s"], []).append((r["j"], r["cv"]))
-    S = sorted(by_s)
-    J = {s: np.array([j for j, _ in sorted(by_s[s])], dtype=np.int64) for s in S}
-    B = {
-        s: np.array([cv for _, cv in sorted(by_s[s])], dtype=np.float64)
-        for s in S
-    }
-    return S, J, B
-
-
-def _pq_scores_np(base: DataFrame, book: DataFrame, argmin: bool) -> DataFrame:
-    """Arrow-batched subspace-distance scoring for the PQ build (round
-    13 — the _cell_scores_np treatment applied to _pq_encode's other
-    super-linear shape: codebook size grows with the corpus's label
-    count, and the (vector-subspace) x codewords join evaluated the
-    8-dim L2 fold per pair as interpreted expressions). ``argmin=True``
-    yields the corpus CODES ``(vec_id, s, code)`` — tie-break
-    min(d2, j), reproduced by argmin-first-occurrence over
-    ascending-j columns; ``argmin=False`` yields every ``(vec_id, s,
-    j, d2)`` (the ADC LUT, callers pre-filter to query vectors).
-    Distances are computed in the SAME algebraic form as the JVM fold
-    — elementwise (x-c)^2 then an 8-element sum — so the 1e-6 round
-    agrees (strict-sweep verified); the codebook (m x k x sub doubles)
-    collects to the driver once and ships per executor as a broadcast
-    variable (round 18)."""
-    import numpy as np
-    import pandas as pd
-
-    bcb = base.sparkSession.sparkContext.broadcast(_book_matrices(book))
-    if argmin:
-        schema = "vec_id bigint, s int, code bigint"
-    else:
-        schema = "vec_id bigint, s int, j bigint, d2 double"
-
-    def score(batches):
-        S, J, B = bcb.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["v"].map(np.asarray).values).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_frames = []
-            for s in S:
-                Vs = V[:, s * _PQ_SUB : (s + 1) * _PQ_SUB]
-                d2 = _sub_d2(Vs, B[s])
-                if argmin:
-                    k = d2.argmin(axis=1)  # first min = min(d2, j asc)
-                    out_frames.append(
-                        pd.DataFrame(
-                            {"vec_id": ids, "s": s, "code": J[s][k]}
-                        )
-                    )
-                else:
-                    n, kk = d2.shape
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "vec_id": np.repeat(ids, kk),
-                                "s": s,
-                                "j": np.tile(J[s], n),
-                                "d2": d2.ravel(),
-                            }
-                        )
-                    )
-            yield pd.concat(out_frames, ignore_index=True)
-
-    return _scan_coalesce(base.select("vec_id", "v")).mapInPandas(score, schema)
-
-
-def _pq_encode(
-    base: DataFrame, book: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
+def _pq_encode(base: DataFrame, book: tuple | None = None) -> tuple[DataFrame, tuple]:
     """Product-quantization build shared by the IVF-PQ queries:
     fixed-size per-subspace codebooks (``_PQ_M x _PQ_K`` sample-rank
     means — :func:`_pq_book`, round 17), and the corpus
     codes PACKED one row per vector (``(vec_id, codes array)`` —
     nearest codeword per subspace in subspace order, emitted straight
     from the encode GEMM so no pivot aggregation or per-(vector,
-    subspace) rows ever exist; the row-form
-    ``_pq_scores_np(argmin=True)`` remains as the reference twin).
-    Returns ``(codes, book)``; ``base`` must carry (vec_id, v). The
-    query-side ADC LUT is not a frame at all — the fused scan
-    (:func:`_adc_rerank`) recomputes it in-UDF from the driver
-    codebook (round 17, second x100 iteration)."""
+    subspace) rows ever exist). Returns ``(codes, book)``; ``base``
+    must carry (vec_id, v). The query-side ADC LUT is not a frame at
+    all — the fused scan (:func:`_adc_rerank`) recomputes it in-UDF
+    from the driver codebook (round 17, second x100 iteration)."""
     import numpy as np
     import pandas as pd
 
     if book is None:
-        book = _pq_book(_perm_sample(base, _Q_SAMPLE))
-    bcb = base.sparkSession.sparkContext.broadcast(_book_matrices(book))
+        book = _pq_book(_perm_sample(base, _Q_SAMPLE)[0])
+    bcb = base.sparkSession.sparkContext.broadcast(book)
 
     def encode(batches):
         S, J, B = bcb.value
@@ -1446,7 +1374,7 @@ def _pq_encode(
 
 
 def _encode_assign_np(
-    base: DataFrame, book: DataFrame, cent, topn: int
+    base: DataFrame, book: tuple, cent, topn: int
 ) -> DataFrame:
     """FUSED corpus pass (round 18): PQ codes + top-``topn`` coarse-cell
     assignment from ONE Arrow scan, emitting ``(vec_id, cell, codes)``
@@ -1472,7 +1400,7 @@ def _encode_assign_np(
         )
     sc = base.sparkSession.sparkContext
     bcc = sc.broadcast((cells, C.T, cn))
-    bcb = sc.broadcast(_book_matrices(book))
+    bcb = sc.broadcast(book)
     schema = f"vec_id bigint, cell {cell_t}, codes array<bigint>"
 
     def scan(batches):
@@ -1626,7 +1554,7 @@ def q_similarity_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", _vecd().alias("v")).withColumn("n", _norm("v"))
     # codebook trained on the driver from one sample collect
-    book = _pq_book(_perm_sample(base, _Q_SAMPLE))
+    book = _pq_book(_perm_sample(base, _Q_SAMPLE)[0])
     # IVF probes bound the candidate set (q_similarity_ivf_search's
     # construction, verbatim)
     cent = _label_centroids(emb).transform(_ckpt)
@@ -1654,7 +1582,7 @@ def _adc_rerank(
     probes: DataFrame,
     member: DataFrame | None,
     codes: DataFrame | None,
-    book: DataFrame,
+    book: tuple,
     shortlist: int,
     tile_doubles: int = _TILE_DOUBLES,
     member_codes: DataFrame | None = None,
@@ -1667,7 +1595,7 @@ def _adc_rerank(
     IVF-ADC structure instead: cogroup the probing queries (with
     their raw vectors) and the member codes BY CELL, compute each
     query's 8 x k LUT in-UDF from the driver-resident codebook (the
-    exact `_pq_scores_np` arithmetic — elementwise (x-c)^2 sum,
+    exact :func:`_pq_encode` arithmetic — elementwise (x-c)^2 sum,
     HALF-UP 1e-6 snap), gather member distances as numpy integer
     lookups, and emit only each (query, cell)'s ADC-top-``shortlist``
     rows. The global top-``shortlist`` is EXACTLY preserved: any pair
@@ -1699,14 +1627,15 @@ def _adc_rerank(
 
     ``probes`` = (query_id, cell); ``member`` = (vec_id, cell);
     ``codes`` = (vec_id, codes array — subspace order, packed by
-    :func:`_pq_encode`); ``book`` = (s, j, cv). ``member_codes``
-    (round 18) supplies the joined ``(vec_id, cell, codes)`` frame
-    directly — :func:`_encode_assign_np` emits it from one fused
-    corpus pass, skipping the member ⋈ codes equi-join here."""
+    :func:`_pq_encode`); ``book`` = :func:`_pq_book`'s ``(S, J, B)``.
+    ``member_codes`` (round 18) supplies the joined ``(vec_id, cell,
+    codes)`` frame directly — :func:`_encode_assign_np` emits it from
+    one fused corpus pass, skipping the member ⋈ codes equi-join
+    here."""
     import numpy as np
     import pandas as pd
 
-    bcb = base.sparkSession.sparkContext.broadcast(_book_matrices(book))
+    bcb = base.sparkSession.sparkContext.broadcast(book)
     sl = int(shortlist)
     budget = max(int(tile_doubles), 1)
 
@@ -1991,9 +1920,9 @@ def q_similarity_ivfpq_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any k > 1,024 silently capped at the sample and Lloyd degenerated
     # toward one sample point per cell. The PQ codebook takes the first
     # _Q_SAMPLE rows — the two SQL samples share one order.
-    sample = _perm_sample(base, _q_sample_for(k))
-    book = _pq_book(sample[:_Q_SAMPLE])
-    cent = _train_quantizer(sample, k)
+    V, vn = _perm_sample(base, _q_sample_for(k))
+    book = _pq_book(V[:_Q_SAMPLE])
+    cent = _train_quantizer(V, vn, k)
     # Top-n cell selection INSIDE the Arrow GEMM (round 16, x100
     # stress): the previous shape emitted all N x CELLS scored rows
     # into a collect_list+sort+slice aggregate — at x100 that is 800M

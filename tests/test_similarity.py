@@ -273,16 +273,19 @@ def test_ivfpq_spill_build_trains_in_one_collect(
     assert 1 <= len(jobs) <= 3, f"cold build ran {len(jobs)} jobs"
 
 
-def test_trained_quantizer_matches_python_lloyd(spark):
+def test_trained_quantizer_matches_python_lloyd(spark, monkeypatch):
     """The driver-side trainer on a tiny base whose first two seeds are
     the same vector: every tie goes to the lower cell, so the
     higher-id duplicate's cell loses all members and dies, and the
     trained cells equal a plain-Python Lloyd's — seeds = the first k
     rows of the Knuth-hash order, HALF_UP 1e-6 cosines with the
     lowest-cell tie-break, HALF_UP 1e-9 member means, left-fold
-    norms."""
+    norms. The trainer scores the sample in row blocks; a tile budget
+    of one row per block must train the same cells."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
 
     from bfs_mapreduce_spark.operators import similarity_queries as sq
 
@@ -298,7 +301,10 @@ def test_trained_quantizer_matches_python_lloyd(spark):
     base = spark.createDataFrame(
         sorted(vecs.items()), "vec_id bigint, v array<double>"
     ).withColumn("n", sq._norm("v"))
-    cells, C, cn, cell_t = sq._train_quantizer(sq._perm_sample(base, 100), k)
+    V, vn = sq._perm_sample(base, 100)
+    cells, C, cn, cell_t = sq._train_quantizer(V, vn, k)
+    monkeypatch.setattr(sq, "_TILE_DOUBLES", 1)
+    tiled = sq._train_quantizer(V, vn, k)
 
     def snap(x, q):
         return float(Decimal(repr(x)).quantize(Decimal(q), ROUND_HALF_UP)) + 0.0
@@ -330,14 +336,17 @@ def test_trained_quantizer_matches_python_lloyd(spark):
     assert cells.tolist() == sorted(want)
     assert C.tolist() == [want[c][0] for c in sorted(want)]
     assert cn.tolist() == [want[c][1] for c in sorted(want)]
+    assert all(np.array_equal(a, b) for a, b in zip(tiled[:3], (cells, C, cn)))
 
 def test_driver_codebook_cap_refuses(spark):
     """Round-14 verdict ask #8 (cap raised round 18 with the broadcast
-    move): the centroid/codebook driver collects are capped — an
-    oversized user-supplied centroid frame fails loudly with guidance
-    instead of growing the driver copy + broadcast without bound. The
-    derived-k ceiling (_IVF_K_CAP) must stay under the collect cap so
-    every built-in query is refusal-free by construction."""
+    move): the centroid driver collect is capped — an oversized
+    user-supplied centroid frame fails loudly with guidance instead of
+    growing the driver copy + broadcast without bound. The derived-k
+    ceiling (_IVF_K_CAP) must stay under the collect cap so every
+    built-in query is refusal-free by construction. (The PQ codebook
+    is always :func:`_pq_book`'s fixed _PQ_M x _PQ_K tuple, so it has
+    no collect to cap.)"""
     import pytest
     from pyspark.sql import functions as F
 
@@ -352,13 +361,6 @@ def test_driver_codebook_cap_refuses(spark):
     )
     with pytest.raises(ValueError, match="centroid frame exceeds"):
         sq._cent_matrix(big)
-    book = spark.range(n).select(
-        (F.col("id") % 8).cast("int").alias("s"),
-        F.col("id").alias("j"),
-        F.array(*[F.lit(1.0)] * 8).alias("cv"),
-    )
-    with pytest.raises(ValueError, match="PQ codebook exceeds"):
-        sq._pq_scores_np(big.limit(1), book, argmin=True)
 
 
 def test_adc_scan_hot_cell_tiles_identically(spark, sf_oracle_dir):

@@ -1,13 +1,15 @@
 """Synthetic big-k IVF-PQ stress (round 18, verdict ask #2).
 
-Proves the derived-k quantizer executes PAST the old 4,096-cell
-architecture ceiling: synthesizes N = 17M deterministic 64-dim vectors
-(so k = ceil(sqrt(N)) = 4,124 > 4,096 — unreachable before the
-centroid/codebook matrices moved off the per-task UDF closure into a
-broadcast variable), trains the sample-bounded quantizer at that k
-(one sample collect, then Lloyd in numpy on the driver), and runs the
-full IVF-PQ spill pipeline (encode, spill assignment, probes, fused
-tiled ADC scan, exact rerank) end to end.
+Runs the derived-k quantizer at a synthetic N of 64-dim vectors — the
+default N = 17M gives k = ceil(sqrt(N)) = 4,124, past the old 4,096-cell
+ceiling — by training the sample-bounded quantizer at that k (one
+sample collect, then Lloyd in numpy on the driver) and running the full
+IVF-PQ spill pipeline (encode, spill assignment, probes, fused tiled
+ADC scan, exact rerank) end to end. SCALE_bigk_r18.json is a 17M run of
+the round-18 code, whose Spark-side trainer has since been replaced;
+the driver-side trainer has been run with this tool only at N = 20,000
+and N = 1,000,000 (see CHANGES.md), so the 17M default is not verified
+for it.
 
 The corpus is synthesized in-plan (no staging parquet): vector
 components are a per-(id, dim) integer hash scaled to (0, 1], giving
@@ -72,13 +74,13 @@ def main(n: int) -> None:
     )
 
     t0 = time.time()
-    rows = _perm_sample(base, sample)
-    cent = _train_quantizer(rows, k)
+    V, vn = _perm_sample(base, sample)
+    cent = _train_quantizer(V, vn, k)
     cells_alive = len(cent[0])
     t_train = time.time() - t0
 
     t0 = time.time()
-    codes, book = _pq_encode(base, _pq_book(rows[:_Q_SAMPLE]))
+    codes, book = _pq_encode(base, _pq_book(V[:_Q_SAMPLE]))
     bsel = base.select("vec_id", "v", "n")
     member = _cell_scores_np(
         bsel, cent, argmax=False, topn=_SPILL_ASSIGN
