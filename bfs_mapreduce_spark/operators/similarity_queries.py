@@ -378,26 +378,11 @@ def _centroid_frame(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _group_centroids(emb: DataFrame, groups: int = 1) -> DataFrame:
-    """Initial coarse centroids: per-(label × vec_id%groups) group
-    means — deterministic seeding (no random init), so both engines
-    derive the identical starting point. ``groups=1`` is the classic
-    per-label seeding; larger ``groups`` seeds ``10*groups`` cells for
-    finer learned quantizers (the Lloyd rounds then move them off the
-    arbitrary seed partition onto the data's actual modes)."""
-    cell = (
-        F.col("label").cast("bigint") * groups + F.col("vec_id") % groups
-    ).alias("cell")
-    return _centroid_frame(
-        emb.select(cell, F.posexplode(_vecd()).alias("pos", "x"))
-    )
-
-
 def _label_centroids(emb: DataFrame) -> DataFrame:
-    """Per-label mean centroids — ``_group_centroids``' groups=1 case,
-    kept as its own projection so ``cell`` stays the label's own int32
-    type (the group arithmetic would widen it to bigint and shift the
-    certified schemas of every label-cell query)."""
+    """Per-label mean centroids: deterministic seeding (no random
+    init), so both engines derive the identical starting point;
+    ``cell`` keeps the label's own int32 type, which the certified
+    schemas of every label-cell query pin."""
     return _centroid_frame(
         emb.select(F.col("label").alias("cell"), F.posexplode(_vecd()).alias("pos", "x"))
     )
@@ -748,20 +733,17 @@ def _nearest_cell(base: DataFrame, cent: DataFrame) -> DataFrame:
 _KMEANS_ITERS = 2
 
 
-def kmeans_centroids(
-    emb: DataFrame, iters: int = _KMEANS_ITERS, groups: int = 1
-) -> DataFrame:
-    """Spherical k-means (Lloyd's algorithm), group-mean seeded
-    (``groups=1`` = label-mean): alternate nearest-centroid assignment
+def kmeans_centroids(emb: DataFrame) -> DataFrame:
+    """Spherical k-means (Lloyd's algorithm, ``_KMEANS_ITERS``
+    rounds), label-mean seeded: alternate nearest-centroid assignment
     with per-cell re-averaging.
     Each iteration is one broadcast crossJoin + two small shuffles;
     ``localCheckpoint`` truncates the growing lineage exactly like the
     BFS driver loop. Cells that lose every vector simply drop out
     (standard Lloyd's behavior; cells can die, never appear)."""
     base = emb.select("vec_id", _vecd().alias("v")).withColumn("n", _norm("v"))
-    seed = _label_centroids(emb) if groups == 1 else _group_centroids(emb, groups)
-    cent = seed.transform(_cache_point)
-    for _ in range(iters):
+    cent = _label_centroids(emb).transform(_cache_point)
+    for _ in range(_KMEANS_ITERS):
         # Arrow GEMM assignment (round 13): identical values/tie-break
         # to _nearest_cell, but the N x CELLS scoring runs as one
         # float64 matmul per batch — the learned quantizer's cell
@@ -826,7 +808,7 @@ def _sql_recentroid(assign_cte: str, out: str) -> str:
 def q_similarity_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", _vecd().alias("v")).withColumn("n", _norm("v"))
-    cent = kmeans_centroids(emb, iters=_KMEANS_ITERS)
+    cent = kmeans_centroids(emb)
     # GEMM assignment (round 16: the x100 stress found the final
     # assign still on the interpreted crossJoin twin — label-cell
     # count grows with the corpus, so N x CELLS expression eval is

@@ -1658,11 +1658,11 @@ def q_sink_snapshot_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the TOP quartile only (price + 1000 where key%10=0) and inserts "
     "brand-new keys beyond the current max. merge_into narrows the "
     "rewrite in three stages — manifest key-range stats shortlist the "
-    "top-quartile file without opening any other, an input_file_name "
-    "semi-join confirms the exact touch set, and only that ONE file "
-    "is rewritten (survivors anti-join + source union); the other 3 "
-    "are carried by reference into the REPLACE manifest, zero bytes "
-    "rewritten. The rewritten/untouched counts sit in the oracle "
+    "top-quartile file without opening any other, a join of that "
+    "file with the source confirms the exact touch set, and only that "
+    "ONE file is rewritten (matched rows updated, new keys inserted); "
+    "the other 3 are carried by reference into the 'merge' manifest, "
+    "zero bytes rewritten. The rewritten/untouched counts sit in the oracle "
     "hash, so a merge that rewrites too much (or misses a matched "
     "file) fails even if row values happen to survive; the oracle "
     "recomputes the post-merge table from the raw source with plain "

@@ -1646,7 +1646,7 @@ def _bpe_pack_oracle() -> str:
     "— the actual LLM-pipeline output: packed context windows of REAL "
     "token ids, where q_text_pack_sequences packed whitespace word "
     "counts): the BPE merge table is re-derived in-plan (the shared "
-    "_bpe_merge_rounds machinery, identical to q_text_bpe_encode), "
+    "_bpe_merge_arrays machinery, identical to q_text_bpe_encode), "
     "the encoded token stream maps to dense integer ids via a "
     "deterministic vocabulary (distinct final tokens ranked "
     "lexicographically — the tiny global window is vocabulary-sized, "
@@ -1821,7 +1821,7 @@ def _bpe_word_oracle() -> str:
     "sequence plus an end-of-word marker '</w>', and every training "
     "round runs over UNIQUE WORDS ONLY with pair counts weighted by "
     "word frequency — sum(wc) instead of count(*), via the same "
-    "shared round machinery (_bpe_merge_rounds) as the exact-stream "
+    "shared round machinery (_bpe_merge_arrays) as the exact-stream "
     "q_text_bpe_train. At 100 TB this is the scale path: round cost "
     "is bounded by |vocabulary| (millions), not corpus tokens "
     "(trillions), an orders-of-magnitude cut the stream form cannot "
@@ -2012,35 +2012,6 @@ def _bpe_merge_arrays(
             *others, _bpe_apply_merge(F.col("a"), left, right).alias("a")
         ).transform(_cache_point)
     return rules, arrs
-
-
-def _bpe_merge_rounds(
-    rows: DataFrame,
-    part: str,
-    n_rounds: int,
-    weight: str | None = None,
-    return_rows: bool = False,
-):
-    """Rows-interface wrapper over :func:`_bpe_merge_arrays` (kept for
-    callers/tests that hold the token stream as ``(part, pos, tok[,
-    weight])`` rows): one entry groupBy assembles per-sequence arrays
-    in pos order, the rounds run array-form, and ``return_rows=True``
-    re-explodes the final arrays with contiguous 1-based positions —
-    byte-identical to the pre-round-14 window form's output."""
-    keep = [part] + ([weight] if weight else [])
-    arrs = rows.groupBy(*keep).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-            lambda s: s["tok"],
-        ).alias("a")
-    )
-    rules, arrs = _bpe_merge_arrays(arrs, n_rounds, weight=weight)
-    if not return_rows:
-        return rules
-    out = arrs.select(
-        *keep, F.posexplode("a").alias("p0", "tok")
-    ).select(*keep, (F.col("p0") + 1).alias("pos"), "tok")
-    return rules, out
 
 
 # ------------------------------------------- quality-classifier training

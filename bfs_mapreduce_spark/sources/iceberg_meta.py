@@ -269,6 +269,22 @@ def _file_rows(path: str, manifest_stats: dict) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+# Snapshot-format commit kind -> Iceberg snapshot summary operation.
+# Rewrites, merges and upserts remove or mask data and are
+# "overwrite"; a merge-on-read delete is "delete"; everything else
+# (appends and metadata-only commits) is "append", so an incremental
+# append reader never takes rewritten or deleted rows for new ones.
+_ICEBERG_OPS = {
+    "replace": "overwrite",
+    "compact": "overwrite",
+    "optimize": "overwrite",
+    "repartition": "overwrite",
+    "merge": "overwrite",
+    "upsert": "overwrite",
+    "delete": "delete",
+}
+
+
 def export_iceberg_metadata(
     root: str, out_dir: str, *, format_version: int = 2
 ) -> dict:
@@ -861,13 +877,7 @@ def export_iceberg_metadata(
                 "snapshot-id": snap_id,
                 "sequence-number": v,
                 "timestamp-ms": ts_ms,
-                "summary": {
-                    "operation": (
-                        "overwrite"
-                        if op in ("replace", "compact", "optimize", "repartition")
-                        else "append"
-                    )
-                },
+                "summary": {"operation": _ICEBERG_OPS.get(op, "append")},
                 "manifest-list": list_path,
                 "schema-id": era_sid,
             }

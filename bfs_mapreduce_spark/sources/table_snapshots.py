@@ -42,13 +42,13 @@ Round-10 extensions (same session, building the full lakehouse core):
   100 TB the driver skips them before listing, a strictly earlier
   prune than parquet row-group stats (which require opening every
   footer on every query instead of once at commit time).
-- **Copy-on-write MERGE** (``merge_into``): Delta's upsert mechanic —
-  stats-shortlist candidate files by key range, find the exactly
-  touched files via an ``input_file_name`` semi-join, rewrite ONLY
-  those (matched rows replaced, unmatched source rows inserted), and
-  commit untouched + rewritten + inserted as a REPLACE manifest under
-  the same compare-and-swap. Untouched files are carried by
-  reference — zero bytes rewritten for them.
+- **Copy-on-write MERGE** (``merge_into``): Delta's MERGE mechanic —
+  stats-shortlist candidate files by key range, find the files where
+  some clause fires (by default: matched rows replaced, unmatched
+  source rows inserted), rewrite ONLY those, and commit untouched +
+  rewritten + inserted as a 'merge' manifest under the same
+  compare-and-swap. Untouched files are carried by reference — zero
+  bytes rewritten for them.
 - **Incremental / CDC reads** (``read_changes``): across APPEND-only
   version ranges the file-set difference IS the change set, so a
   downstream consumer reads exactly the new files of v(a..b] —
@@ -1844,35 +1844,6 @@ def _carry_appended(root: str, base_files: set[str], staged: list[str]):
     return rebase
 
 
-def _commit_merge(
-    root: str,
-    base: int,
-    max_retries: int,
-    touched: set[str],
-    untouched: list[str],
-    staged: list[str],
-    read_set: set[str],
-    **commit_kw,
-) -> tuple[int, list[str], list[str]]:
-    """Commit either :func:`merge_into` path: ``untouched`` carried by
-    reference next to the ``staged`` rewrite as a REPLACE. A rebase
-    recomputes ``untouched`` from the moved manifest, so concurrently
-    appended (or disjointly rewritten) files ride along. Returns
-    ``(version, staged, untouched)``."""
-
-    def rebase(_b: int, latest: int) -> dict:
-        nonlocal untouched
-        m2 = read_manifest(root, latest)
-        untouched = [f for f in m2["files"] if f not in touched]
-        return {"files": untouched + staged}
-
-    v = _commit_with_rebase(
-        root, base, max_retries, verb="merge_into", read_set=read_set,
-        rebase=rebase, files=untouched + staged, replace=True, **commit_kw,
-    )
-    return v, staged, untouched
-
-
 # input_file_name() URI -> the manifest's plain local path, as a
 # column expression ('file:///root/x' and 'file:/root/x' -> '/root/x')
 def _norm_file_col(col: F.Column) -> F.Column:
@@ -2320,8 +2291,8 @@ def compact(
 
     # operation 'compact' (round 14): row-PRESERVING rewrites carry
     # their own name so read_row_changes can prove they contribute no
-    # row changes (a bare 'replace' — merge — is indistinguishable
-    # from a rewrite and must refuse)
+    # row changes (a 'merge' or 'replace' without change files rewrites
+    # rows and must refuse)
     return _commit_with_rebase(
         root, base, max_retries, verb="compact", read_set=sel_set,
         rebase=rebase, files=carried + staged, replace=True,
@@ -3490,33 +3461,13 @@ def merge_into(
     change_feed: bool | None = None,
     evolve_schema: bool = False,
 ) -> tuple[int, list[str], list[str]]:
-    """Copy-on-write MERGE (Delta's upsert mechanic): rows of the
-    current snapshot whose key matches ``source`` are REPLACED by the
-    source row, unmatched source rows are INSERTED, and only the data
-    files that actually contain a matched key are rewritten.
+    """Copy-on-write MERGE with Delta's clause grammar: ``source`` rows
+    join the current snapshot on ``key_cols``, the first clause whose
+    condition holds decides each row's fate (first-match-wins per
+    clause list), and only the data files where some clause actually
+    FIRES are rewritten.
 
-    Three-stage file narrowing, each strictly cheaper than the last
-    would be alone at 100 TB:
-
-    1. **Stats shortlist** — manifest min/max on the first key column
-       vs the source's key bounds (one tiny agg) drops files that
-       cannot contain any matched key without opening them.
-    2. **Exact touch set** — an ``input_file_name`` semi-join over the
-       shortlist finds files that really hold a matched key (executor
-       side, one pass, broadcast source keys).
-    3. **Rewrite** — touched-file rows anti-joined against the source
-       keys (survivors) unioned with the whole source, staged as new
-       files; untouched files are carried BY REFERENCE into a REPLACE
-       manifest — zero bytes rewritten for them.
-
-    Commit runs under the same compare-and-swap as every other writer.
-    Returns ``(new_version, rewritten_files, untouched_files)``.
-    With no clause arguments, ``source`` must have the target's schema
-    (whole-row upsert — the default is WHEN MATCHED THEN UPDATE SET *
-    / WHEN NOT MATCHED THEN INSERT *).
-
-    FULL CLAUSE SURFACE (round 16, verdict ask #1 — Delta's complete
-    MERGE grammar, first-match-wins per clause list):
+    Clause lists:
 
     - ``when_matched``: ``[{"action": "update"|"delete", "condition":
       <SQL over t.*/s.*> | None, "set": {col: <SQL expr>} | None}]``
@@ -3532,16 +3483,35 @@ def merge_into(
 
     Conditions and assignment expressions are ANSI SQL strings where
     ``t.<col>`` is the target row and ``s.<col>`` the source row.
+    With no clause arguments the clause lists default to WHEN MATCHED
+    THEN UPDATE SET * / WHEN NOT MATCHED THEN INSERT * — the
+    whole-row upsert, so ``source`` must carry every table column.
 
-    File narrowing carries over to clause mode: without
-    NOT-MATCHED-BY-SOURCE clauses, candidate files are stats-pruned
-    by source key range exactly as the upsert path; WITH them, every
-    file is a candidate (any file may hold unmatched rows) but only
-    files where some clause actually FIRES are rewritten — a
-    conditional NMBS delete that hits 1% of files rewrites 1%.
+    Three-stage file narrowing, each strictly cheaper than the last
+    would be alone at 100 TB:
 
-    Duplicate source keys raise (Delta's cardinality check): one
-    target row matching two source rows has no deterministic result.
+    1. **Stats shortlist** — manifest min/max on the first key column
+       vs the source's key bounds drops files that cannot contain any
+       matched key without opening them. The bounds come from the
+       same one aggregate that runs Delta's cardinality check:
+       duplicate source keys raise, since one target row matching two
+       source rows has no deterministic result. With
+       NOT-MATCHED-BY-SOURCE clauses every file is a candidate (any
+       file may hold unmatched rows) and the aggregate serves only
+       the check.
+    2. **Exact touch set** — the candidates joined to the broadcast
+       source, keeping the files where some clause fires: a
+       conditional NMBS delete that hits 1% of files rewrites 1%.
+    3. **Rewrite** — touched-file rows with the clause actions applied,
+       plus the inserted source rows, staged as new files (CHECK
+       constraints are validated on the staged files; a violation
+       removes them and raises); untouched files are carried BY
+       REFERENCE — zero bytes rewritten for them.
+
+    The commit is an ``operation='merge'`` manifest under the same
+    compare-and-swap as every other writer; its read set is the
+    candidates. Returns ``(new_version, rewritten_files,
+    untouched_files)``.
 
     CHANGE FEED: with ``change_feed=True`` (or the table property
     ``changeFeed``), the merge writes row-level change files
@@ -3568,128 +3538,39 @@ def merge_into(
         if change_feed is not None
         else bool((m.get("properties") or {}).get("changeFeed"))
     )
-    if (
-        when_matched is not None
-        or when_not_matched is not None
-        or when_not_matched_by_source is not None
-        or feed_on
-        or evolve_schema
-    ):
-        return _merge_with_clauses(
-            spark,
-            root,
-            source,
-            key_cols,
-            base,
-            m,
-            when_matched=when_matched,
-            when_not_matched=when_not_matched,
-            when_not_matched_by_source=when_not_matched_by_source,
-            feed_on=feed_on,
-            stats_cols=stats_cols,
-            target_files=target_files,
-            max_retries=max_retries,
-            evolve_schema=evolve_schema,
-        )
-    # CHECK constraints guard every row the merge ADDS (existing rows
-    # were validated when they were written; the rewrite only removes)
-    _validate_checks(source, m.get("checks", {}))
-    deletes = m.get("deletes") or {}
-    key = key_cols[0]
-    k_lo, k_hi = source.agg(F.min(key), F.max(key)).first()
-    candidates, _out_of_range = prune_files(m, key, k_lo, k_hi)
-    keys_df = source.select(*key_cols).distinct()
-    touched = set()
-    if candidates:
-        # scan THROUGH any deletes (both kinds): a row already deleted
-        # must neither mark its file as touched nor survive a rewrite
-        tgt = _scan_for_delete(
-            spark,
-            candidates,
-            deletes,
-            m.get("schema"),
-            m.get("eq_deletes"),
-            m.get("_added_era"),
-            m.get("schema_log"),
-        )
-        touched = {
-            r[0]
-            for r in tgt.join(F.broadcast(keys_df), key_cols, "left_semi")
-            .select(_FP)
-            .distinct()
-            .collect()
-        }
-    untouched = [f for f in m["files"] if f not in touched]
-    if touched:
-        survivors = _scan(
-            spark,
-            sorted(touched),
-            deletes,
-            m.get("schema"),
-            m.get("eq_deletes"),
-            m.get("_added_era"),
-            m.get("schema_log"),
-        ).join(F.broadcast(keys_df), key_cols, "left_anti")
-        rewritten = survivors.unionByName(source)
-    else:
-        rewritten = source
-    if target_files is not None:
-        # Rewrite-file sizing: without this the join's shuffle
-        # partitioning leaks into the layout (32 tiny files for one
-        # touched file's worth of rows). Real deployments size this to
-        # ~touched-file count; AQE coalescing handles it on a cluster.
-        rewritten = rewritten.repartition(target_files)
-    staged = stage_files(rewritten, root)
-    stats = collect_stats(staged, stats_cols) if stats_cols else None
-    # CAS rebase: the read set is the candidates scanned for touches
-    # and survivors. A concurrent append, or a delete/replace confined
-    # to OTHER files, commutes (serialized merge-first: appended rows
-    # with matching keys survive); one that touched a candidate made
-    # the staged rewrite stale — refuse.
-    return _commit_merge(
-        root, base, max_retries, touched, untouched, staged,
-        set(candidates), stats=stats,
-    )
-
-
-def _merge_with_clauses(
-    spark: SparkSession,
-    root: str,
-    source: DataFrame,
-    key_cols: list[str],
-    base: int,
-    m: dict,
-    *,
-    when_matched: list[dict] | None,
-    when_not_matched: list[dict] | None,
-    when_not_matched_by_source: list[dict] | None,
-    feed_on: bool,
-    stats_cols: list[str] | None,
-    target_files: int | None,
-    max_retries: int,
-    evolve_schema: bool = False,
-) -> tuple[int, list[str], list[str]]:
-    """Clause-surface MERGE body (see :func:`merge_into`). Commits a
-    REPLACE manifest labeled ``operation='merge'`` carrying optional
-    row-level change files for the CDC feed."""
     deletes = m.get("deletes") or {}
     sch, log, era = m.get("schema"), m.get("schema_log"), m.get("_added_era")
     nmbs = when_not_matched_by_source or []
-    # default = whole-row upsert when only the change feed asked for
-    # clause mode
     if when_matched is None and when_not_matched is None and not nmbs:
         when_matched = [{"action": "update"}]
         when_not_matched = [{"action": "insert"}]
     wm = when_matched or []
     wnm = when_not_matched or []
 
-    # ---- candidate files ------------------------------------------
+    # ---- key bounds + cardinality check (one action), candidates ---
     key = key_cols[0]
+    k_lo, k_hi, n_max, dup_key = (
+        source.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(
+            F.min(key),
+            F.max(key),
+            F.max("__n"),
+            F.max_by(F.struct(*key_cols), "__n"),
+        )
+        .first()
+    )
+    if n_max is not None and n_max > 1:
+        raise ValueError(
+            "merge source has duplicate key rows (e.g. "
+            f"{tuple(dup_key[k] for k in key_cols)!r}) — a MERGE with "
+            "clause actions requires distinct source keys (Delta's "
+            "multiple-source-rows-matched error)"
+        )
     if nmbs:
         # any file may hold target rows unmatched by the source
         candidates = list(m["files"])
     else:
-        k_lo, k_hi = source.agg(F.min(key), F.max(key)).first()
         candidates, _ = prune_files(m, key, k_lo, k_hi)
 
     # ---- target/source frames and clause validation ---------------
@@ -3759,23 +3640,8 @@ def _merge_with_clauses(
                 f"carry every table column; missing {missing}"
             )
 
-    # Delta's cardinality check: two source rows matching ONE target
-    # row has no deterministic result — refuse before any work
-    dup = (
-        source.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            "merge source has duplicate key rows (e.g. "
-            f"{tuple(dup[0][k] for k in key_cols)!r}) — a MERGE with "
-            "clause actions requires distinct source keys (Delta's "
-            "multiple-source-rows-matched error)"
-        )
-
+    # the source (the change batch) is broadcast into both target-side
+    # joins below, so neither shuffles the target files
     srcm = source.withColumn("__s_hit", F.lit(True)).alias("s")
     join_cond = None
     for k in key_cols:
@@ -3812,11 +3678,10 @@ def _merge_with_clauses(
 
     # ---- exact touch set: files where some clause actually FIRES --
     touched: set[str] = set()
-    jt = None
     if tgt_all is not None:
         jt = (
             tgt_all.alias("t")
-            .join(srcm, join_cond, "left")
+            .join(F.broadcast(srcm), join_cond, "left")
             .withColumn("__act", act)
         )
         touched = {
@@ -3854,7 +3719,9 @@ def _merge_with_clauses(
             )
         )
         jtt = (
-            tt.alias("t").join(srcm, join_cond, "left").withColumn("__act", act)
+            tt.alias("t")
+            .join(F.broadcast(srcm), join_cond, "left")
+            .withColumn("__act", act)
         )
         out_exprs = []
         for c in cols:
@@ -3966,14 +3833,26 @@ def _merge_with_clauses(
             if f.endswith(".parquet")
         )
     stats = collect_stats(staged, stats_cols) if stats_cols else None
-    return _commit_merge(
-        root, base, max_retries, touched, untouched, staged,
-        set(candidates),
-        stats=stats,
-        schema=evo_schema,
-        operation="merge",
+    # CAS rebase: the read set is the candidates scanned for touches
+    # and survivors. A concurrent append, or a commit confined to
+    # OTHER files, commutes — the rebase recomputes ``untouched`` from
+    # the moved manifest, so its files ride along; one that touched a
+    # candidate made the staged rewrite stale — refuse.
+
+    def rebase(_b: int, latest: int) -> dict:
+        nonlocal untouched
+        m2 = read_manifest(root, latest)
+        untouched = [f for f in m2["files"] if f not in touched]
+        return {"files": untouched + staged}
+
+    v = _commit_with_rebase(
+        root, base, max_retries, verb="merge_into",
+        read_set=set(candidates), rebase=rebase,
+        files=untouched + staged, replace=True, stats=stats,
+        schema=evo_schema, operation="merge",
         change_files=change_files or None,
     )
+    return v, staged, untouched
 
 
 def read_changes(
@@ -4032,9 +3911,9 @@ def read_changes(
 
 
 # Commit operations that provably change NO rows: safe to skip in a
-# row-level change scan. A bare 'replace' (merge_into) is NOT here —
-# it rewrites rows and is indistinguishable from its effect set
-# without change files, so it refuses.
+# row-level change scan. 'merge' and 'replace' are NOT here — they
+# rewrite rows, and without change files their effect set is not
+# recoverable, so the scan refuses them.
 _ROW_PRESERVING_OPS = (
     "set_check",
     "set_property",
@@ -4085,9 +3964,9 @@ def read_row_changes(
     keys matched (preimage), the new rows for matched keys
     (postimage), and the rest as inserts. Row-preserving rewrites
     (compaction / OPTIMIZE / metadata-only commits) contribute
-    nothing by proof; a bare REPLACE (merge) or RESTORE refuses —
-    reconstructing their effect sets needs change files this format
-    does not keep.
+    nothing by proof; a MERGE without change files, a bare REPLACE
+    or a RESTORE refuses — reconstructing their effect sets needs
+    change files this format does not keep.
 
     All rows project onto ``to_version``'s schema through the era
     machinery (a range crossing a RENAME emits one column set).

@@ -7,7 +7,6 @@ batch-parity contracts.
 from bfs_mapreduce_spark.streaming.windows import (
     events_stream,
     run_stream,
-    run_to_memory,
     session_counts,
     tumbling_counts,
 )
@@ -15,7 +14,6 @@ from bfs_mapreduce_spark.streaming.windows import (
 __all__ = [
     "events_stream",
     "run_stream",
-    "run_to_memory",
     "session_counts",
     "tumbling_counts",
 ]

@@ -198,11 +198,6 @@ def run_stream(df: DataFrame, output_mode: str = "complete") -> DataFrame:
     return spark.read.parquet(out)
 
 
-# Back-compat alias for existing callers/tests (the memory sink is gone;
-# the name survives so external code keeps working).
-run_to_memory = run_stream
-
-
 # ---------------------------------------------------------------- catalog entries
 
 from bfs_mapreduce_spark.registry import register  # noqa: E402

@@ -183,18 +183,60 @@ def test_merge_change_feed_table_property(spark, tmp_path):
     ]
 
 
-def test_merge_duplicate_source_keys_refuse(spark, tmp_path):
+@pytest.mark.parametrize(
+    "clauses",
+    [{"when_matched": [{"action": "update"}]}, {}],
+    ids=["clauses", "default"],
+)
+def test_merge_duplicate_source_keys_refuse(spark, tmp_path, clauses):
+    """Delta's cardinality check holds for every merge, the default
+    upsert included, and a refused merge commits nothing."""
     from bfs_mapreduce_spark.sources import table_snapshots as ts
 
     root = _mk(tmp_path, "dups")
-    _table(spark, root, [(1, 10.0, "a")])
+    v0 = _table(spark, root, [(1, 10.0, "a")])
     src = spark.createDataFrame(
         [(1, 1.0, "x"), (1, 2.0, "y")], "k int, v double, flag string"
     )
     with pytest.raises(ValueError, match="duplicate key"):
-        ts.merge_into(
-            spark, root, src, ["k"], when_matched=[{"action": "update"}]
+        ts.merge_into(spark, root, src, ["k"], **clauses)
+    assert ts.current_version(root) == v0
+
+
+def test_merge_default_upsert_job_budget(spark, tmp_path):
+    """A merge with no clause arguments is the clause engine on WHEN
+    MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *, committed as
+    'merge'. Its job floor, counted by job group: one aggregate for the
+    key bounds and the cardinality check (3 jobs), the touch-set
+    collect (3) and the write (4, the source broadcast into the
+    rewrite join). A separate duplicate-check action, or a shuffled
+    rewrite join, goes over the bound."""
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    root = _mk(tmp_path, "budget")
+    _table(spark, root, [(i, float(i), "a") for i in range(2000)])
+    src = spark.createDataFrame(
+        [(i * 50, -1.0 * i, "u") for i in range(40)]
+        + [(5000 + i, 1.0 * i, "n") for i in range(20)],
+        "k int, v double, flag string",
+    )
+    sc = spark.sparkContext
+    group = "test-merge-default-upsert"
+    sc.setJobGroup(group, group)
+    try:
+        v, staged, untouched = ts.merge_into(
+            spark, root, src, ["k"], target_files=1
         )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 10, f"default upsert ran {len(jobs)} jobs"
+    assert ts._op_of(root, v) == "merge"
+    assert (len(staged), len(untouched)) == (1, 0)
+    got = {r["k"]: (r["v"], r["flag"]) for r in ts.read(spark, root).collect()}
+    assert len(got) == 2020
+    assert got[50] == (-1.0, "u") and got[51] == (51.0, "a")
+    assert got[5019] == (19.0, "n")
 
 
 def test_merge_clause_narrowing_rewrites_only_firing_files(spark, tmp_path):

@@ -3923,7 +3923,7 @@ def test_read_row_changes_lifecycle(spark, tmp_path):
     ts.merge_into(
         spark, root, spark.createDataFrame([(9, 1)], "k bigint, val bigint"), ["k"]
     )
-    with pytest.raises(ValueError, match="replace commit"):
+    with pytest.raises(ValueError, match="merge commit"):
         ts.read_row_changes(spark, root, v7, ts.current_version(root))
 
 
@@ -3974,7 +3974,7 @@ def test_conflict_file_granular_disjoint_commutes(spark, tmp_path, monkeypatch):
     got = {r["k"]: r["val"] for r in ts.read(spark, root).collect()}
     assert got[3] == 99 and 101 not in got and len(got) == 9
     assert ts._op_of(root, v_merge - 1) == "delete"
-    assert ts._op_of(root, v_merge) == "replace"
+    assert ts._op_of(root, v_merge) == "merge"
     assert set(f_hi) <= set(untouched)  # masked file carried by ref
 
     # 2) delete ∥ merge on DISJOINT files: the delete's affected file
@@ -3995,7 +3995,7 @@ def test_conflict_file_granular_disjoint_commutes(spark, tmp_path, monkeypatch):
     assert n_deleted == 1
     got = {r["k"]: r["val"] for r in ts.read(spark, root).collect()}
     assert 2 not in got and got[102] == 77 and len(got) == 8
-    assert ts._op_of(root, v_del - 1) == "replace"
+    assert ts._op_of(root, v_del - 1) == "merge"
     assert ts._op_of(root, v_del) == "delete"
 
     # 3) merge ∥ delete on the SAME file: overlap -> refuse
@@ -5526,3 +5526,39 @@ def test_append_commit_json_reads_stay_o_new_files(tmp_path, monkeypatch):
     assert len(ts.read_manifest(root)["files"]) == 120
     assert len(deleted) >= 120
 
+
+def test_iceberg_export_operation_per_commit_kind(spark, tmp_path):
+    """Each exported snapshot's summary operation follows the Iceberg
+    spec: commits that remove or mask data rows are 'overwrite' (merge,
+    upsert, compaction) or 'delete' (a merge-on-read delete); only a
+    plain append exports as 'append', so an incremental append reader
+    never takes rewritten or deleted rows for new ones."""
+    import os
+
+    from bfs_mapreduce_spark.sources import iceberg_meta as im
+    from bfs_mapreduce_spark.sources import table_snapshots as ts
+
+    root = str(tmp_path / "tbl")
+    out = str(tmp_path / "ice")
+    os.makedirs(root)
+    schema = "k bigint, val bigint"
+    d = spark.createDataFrame([(k, k * 10) for k in range(6)], schema)
+    ts.commit(
+        root, ts.stage_files(d.coalesce(1), root),
+        base_version=0, schema=d.schema.json(),
+    )
+    ts.delete_where(spark, root, "k = 1")
+    ts.upsert_eq(spark, root, spark.createDataFrame([(2, 222)], schema), ["k"])
+    ts.merge_into(
+        spark, root, spark.createDataFrame([(3, 333), (9, 90)], schema), ["k"]
+    )
+    ts.compact(spark, root)
+    summary = im.export_iceberg_metadata(root, out)
+    assert sorted(summary["exported"]) == [1, 2, 3, 4, 5]
+    got = {h["sequence_number"]: h["operation"] for h in im.iceberg_history(out)}
+    assert got == {
+        1: "append", 2: "delete", 3: "overwrite", 4: "overwrite", 5: "overwrite",
+    }
+    assert [ts._op_of(root, v) for v in range(1, 6)] == [
+        "append", "delete", "upsert", "merge", "compact",
+    ]

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from bfs_mapreduce_spark.sources.readers import load_table
 from bfs_mapreduce_spark.streaming.windows import (
     events_stream,
-    run_to_memory,
+    run_stream,
     running_user_counts,
     session_counts,
     tumbling_counts,
@@ -21,7 +21,7 @@ def _rows(df, cols):
 
 
 def test_tumbling_batch_parity(spark, sf_smoke_dir):
-    streamed = run_to_memory(tumbling_counts(events_stream(spark, sf_smoke_dir)))
+    streamed = run_stream(tumbling_counts(events_stream(spark, sf_smoke_dir)))
     batch = (
         load_table(spark, sf_smoke_dir, "events")
         .groupBy(
@@ -40,7 +40,7 @@ def test_tumbling_batch_parity(spark, sf_smoke_dir):
 def test_session_batch_parity(spark, sf_smoke_dir):
     from pyspark.sql import Window
 
-    streamed = run_to_memory(session_counts(events_stream(spark, sf_smoke_dir)))
+    streamed = run_stream(session_counts(events_stream(spark, sf_smoke_dir)))
     ev = load_table(spark, sf_smoke_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -59,7 +59,7 @@ def test_session_batch_parity(spark, sf_smoke_dir):
 
 
 def test_stateful_running_counts(spark, sf_smoke_dir):
-    streamed = run_to_memory(
+    streamed = run_stream(
         running_user_counts(events_stream(spark, sf_smoke_dir)), output_mode="update"
     )
     # update mode: the LAST row per user carries the final running count
@@ -821,7 +821,7 @@ def test_snapshot_row_changes_stream(spark, tmp_path):
     ts.merge_into(
         spark, root, spark.createDataFrame([(9, 1)], "k bigint, v bigint"), ["k"]
     )
-    with pytest.raises(Exception, match="replace commit"):
+    with pytest.raises(Exception, match="merge commit"):
         run()
 
 

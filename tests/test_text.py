@@ -103,24 +103,20 @@ def test_bpe_word_table_equals_stream_on_word_bounded_input(spark):
     duplicates, including argmax tie-breaks and overlap semantics."""
     from pyspark.sql import functions as F
 
-    from bfs_mapreduce_spark.operators.text_queries import _bpe_merge_rounds
+    from bfs_mapreduce_spark.operators.text_queries import _bpe_merge_arrays
 
     corpus = ["aab"] * 3 + ["abab"] * 2 + ["bb"] + ["aaaa"] * 2
     docs = spark.createDataFrame(
         [(i, w) for i, w in enumerate(corpus)], "doc bigint, text string"
     )
-    stream_rows = docs.select(
-        "doc", F.posexplode(F.split("text", "")).alias("p0", "tok")
-    ).select("doc", (F.col("p0") + 1).alias("pos"), "tok")
-    stream_rules = _bpe_merge_rounds(stream_rows, "doc", 3)
+    stream_arrs = docs.select("doc", F.split("text", "").alias("a"))
+    stream_rules, _ = _bpe_merge_arrays(stream_arrs, 3)
 
     words = docs.groupBy(F.col("text").alias("word")).agg(
         F.count(F.lit(1)).cast("bigint").alias("wc")
     )
-    word_rows = words.select(
-        "word", "wc", F.posexplode(F.split("word", "")).alias("p0", "tok")
-    ).select("word", "wc", (F.col("p0") + 1).alias("pos"), "tok")
-    word_rules = _bpe_merge_rounds(word_rows, "word", 3, weight="wc")
+    word_arrs = words.select("word", "wc", F.split("word", "").alias("a"))
+    word_rules, _ = _bpe_merge_arrays(word_arrs, 3, weight="wc")
 
     assert stream_rules == word_rules
     # and the rules are the hand-derivable ones: round 1 merges (a,a)
