@@ -269,20 +269,22 @@ def _file_rows(path: str, manifest_stats: dict) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-# Snapshot-format commit kind -> Iceberg snapshot summary operation.
-# Rewrites, merges and upserts remove or mask data and are
-# "overwrite"; a merge-on-read delete is "delete"; everything else
-# (appends and metadata-only commits) is "append", so an incremental
-# append reader never takes rewritten or deleted rows for new ones.
-_ICEBERG_OPS = {
-    "replace": "overwrite",
-    "compact": "overwrite",
-    "optimize": "overwrite",
-    "repartition": "overwrite",
-    "merge": "overwrite",
-    "upsert": "overwrite",
-    "delete": "delete",
-}
+def _iceberg_operation(
+    files: list[str], parent_files: set[str], del_entries: list[dict]
+) -> str:
+    """The Iceberg snapshot summary operation, read off what the
+    commit did to the file set rather than off its commit kind: data
+    files removed, or delete files added next to new data, are a
+    logical "overwrite"; delete files or file removals alone are a
+    "delete"; only added data files are an "append". So an
+    incremental append reader never takes rewritten or deleted rows
+    for new ones, whatever writer made the commit."""
+    added = any(f not in parent_files for f in files)
+    removed = bool(parent_files - set(files))
+    deleted = any(e["status"] == 1 for e in del_entries)
+    if not (removed or deleted):
+        return "append"
+    return "overwrite" if added else "delete"
 
 
 def export_iceberg_metadata(
@@ -871,13 +873,16 @@ def export_iceberg_metadata(
         list_path = os.path.join(meta_dir, f"snap-{snap_id}.avro")
         write_avro(list_path, _MANIFEST_LIST_SCHEMA, list_rows)
         ts_ms = int(ts.commit_timestamp(root, v) * 1000)
-        op = m.get("operation") or "append"
         snapshots.append(
             {
                 "snapshot-id": snap_id,
                 "sequence-number": v,
                 "timestamp-ms": ts_ms,
-                "summary": {"operation": _ICEBERG_OPS.get(op, "append")},
+                "summary": {
+                    "operation": _iceberg_operation(
+                        m["files"], parent_files, del_entries
+                    )
+                },
                 "manifest-list": list_path,
                 "schema-id": era_sid,
             }

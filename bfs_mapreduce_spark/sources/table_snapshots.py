@@ -3499,8 +3499,8 @@ def merge_into(
        NOT-MATCHED-BY-SOURCE clauses every file is a candidate (any
        file may hold unmatched rows) and the aggregate serves only
        the check.
-    2. **Exact touch set** — the candidates joined to the broadcast
-       source, keeping the files where some clause fires: a
+    2. **Exact touch set** — the candidates joined to the source,
+       keeping the files where some clause fires: a
        conditional NMBS delete that hits 1% of files rewrites 1%.
     3. **Rewrite** — touched-file rows with the clause actions applied,
        plus the inserted source rows, staged as new files (CHECK
@@ -3640,8 +3640,6 @@ def merge_into(
                 f"carry every table column; missing {missing}"
             )
 
-    # the source (the change batch) is broadcast into both target-side
-    # joins below, so neither shuffles the target files
     srcm = source.withColumn("__s_hit", F.lit(True)).alias("s")
     join_cond = None
     for k in key_cols:
@@ -3681,7 +3679,7 @@ def merge_into(
     if tgt_all is not None:
         jt = (
             tgt_all.alias("t")
-            .join(F.broadcast(srcm), join_cond, "left")
+            .join(srcm, join_cond, "left")
             .withColumn("__act", act)
         )
         touched = {
@@ -3719,9 +3717,7 @@ def merge_into(
             )
         )
         jtt = (
-            tt.alias("t")
-            .join(F.broadcast(srcm), join_cond, "left")
-            .withColumn("__act", act)
+            tt.alias("t").join(srcm, join_cond, "left").withColumn("__act", act)
         )
         out_exprs = []
         for c in cols:

@@ -5530,13 +5530,15 @@ def test_append_commit_json_reads_stay_o_new_files(tmp_path, monkeypatch):
 def test_iceberg_export_operation_per_commit_kind(spark, tmp_path):
     """Each exported snapshot's summary operation follows the Iceberg
     spec: commits that remove or mask data rows are 'overwrite' (merge,
-    upsert, compaction) or 'delete' (a merge-on-read delete); only a
-    plain append exports as 'append', so an incremental append reader
-    never takes rewritten or deleted rows for new ones."""
+    upsert, compaction, INSERT OVERWRITE, restore) or 'delete' (a
+    merge-on-read delete); only a plain append exports as 'append', so
+    an incremental append reader never takes rewritten or deleted rows
+    for new ones."""
     import os
 
     from bfs_mapreduce_spark.sources import iceberg_meta as im
     from bfs_mapreduce_spark.sources import table_snapshots as ts
+    from bfs_mapreduce_spark.sources.snapshot_sql import sql_dml
 
     root = str(tmp_path / "tbl")
     out = str(tmp_path / "ice")
@@ -5553,12 +5555,20 @@ def test_iceberg_export_operation_per_commit_kind(spark, tmp_path):
         spark, root, spark.createDataFrame([(3, 333), (9, 90)], schema), ["k"]
     )
     ts.compact(spark, root)
+    sql_dml(
+        spark,
+        "INSERT OVERWRITE t (k, val) SELECT id + 100, id FROM range(2)",
+        {"t": root},
+    )
+    ts.restore(root, 5)
     summary = im.export_iceberg_metadata(root, out)
-    assert sorted(summary["exported"]) == [1, 2, 3, 4, 5]
+    assert sorted(summary["exported"]) == [1, 2, 3, 4, 5, 6, 7]
     got = {h["sequence_number"]: h["operation"] for h in im.iceberg_history(out)}
     assert got == {
-        1: "append", 2: "delete", 3: "overwrite", 4: "overwrite", 5: "overwrite",
+        1: "append", 2: "delete", 3: "overwrite", 4: "overwrite",
+        5: "overwrite", 6: "overwrite", 7: "overwrite",
     }
-    assert [ts._op_of(root, v) for v in range(1, 6)] == [
-        "append", "delete", "upsert", "merge", "compact",
+    assert [ts._op_of(root, v) for v in range(1, 8)] == [
+        "append", "delete", "upsert", "merge", "compact", "overwrite",
+        "restore",
     ]
